@@ -476,31 +476,29 @@ object Relational {
    *   1. range-partition on the key (`repartitionByRange`): each partition owns
    *      a contiguous key range, and partition INDEX increases with the range —
    *      the one big-data move;
-   *   2. sort within partitions, then `monotonically_increasing_id()`, whose
-   *      documented layout is `partitionId << 33 | localRowIndex` — the local
-   *      index therefore follows key order with NO second shuffle;
-   *   3. per-partition row counts (a numPartitions-row aggregate — metadata
-   *      scale) prefix-summed into offsets and broadcast back.
+   *   2. sort within partitions;
+   *   3. number the rows in partition order ([[graft.plans.GlobalRowNumber]]):
+   *      one job counts each partition, and the same partitions are then
+   *      numbered from their prefix-summed offsets — both from ONE evaluation
+   *      of the range shuffle, so the answer holds under AQE.
    *
-   * `sk` = offset(partition) + localIndex + 1 == the global rank. Equal keys
+   * `out` = offset(partition) + local index + 1 == the global rank. Equal keys
    * land in one partition (range partitioning), so the result is total and
-   * deterministic when `key` is unique. The offset prefix-sum runs a global
-   * window over numPartitions rows — the acceptable driver-scale sort.
+   * deterministic when `key` is unique. An existing column named `out` is
+   * replaced. Registers the planner strategy on the session idempotently.
    */
   def globalRowNumber(df: DataFrame, key: Column, parts: Int,
                       out: String = "sk"): DataFrame = {
-    val ranged = df.repartitionByRange(parts, key).sortWithinPartitions(key)
-      .withColumn("__mid", monotonically_increasing_id())
-      .withColumn("__pid", shiftright(col("__mid"), 33))
-      .withColumn("__loc", col("__mid").bitwiseAND(lit((1L << 33) - 1)))
-    val offsets = ranged.groupBy(col("__pid")).agg(count(lit(1)).as("__cnt"))
-      .withColumn("__off", coalesce(
-        sum(col("__cnt")).over(
-          Window.orderBy(col("__pid")).rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)))
-      .select(col("__pid"), col("__off"))
-    ranged.join(broadcast(offsets), "__pid")
-      .withColumn(out, col("__off") + col("__loc") + lit(1L))
-      .drop("__mid", "__pid", "__loc", "__off")
+    import org.apache.spark.sql.GraftBridge
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.logical.Sort
+    GraftBridge.addStrategy(df.sparkSession, graft.plans.GlobalRowNumberStrategy)
+    val sorted = GraftBridge.analyzed(
+      df.drop(out).repartitionByRange(parts, key).sortWithinPartitions(key)) match {
+      case s: Sort => s
+      case other => throw new IllegalStateException(s"expected Sort, got: $other")
+    }
+    GraftBridge.ofRows(df.sparkSession, graft.plans.GlobalRowNumber(sorted.order,
+      AttributeReference(out, org.apache.spark.sql.types.LongType, nullable = false)(), sorted))
   }
 }

@@ -42,6 +42,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // graft.primaryKey / graft.foreignKey.* RELY properties (see
     // RelyJoinEliminationRule; dormant when no table declares constraints).
     e.injectOptimizerRule(session => RelyJoinEliminationRule(session))
+    // Optimizer rule: row_number() over a declared unique key is 1 — the
+    // keyed store's reads declare their manifest key (see
+    // UniqueKeyRowNumberRule; dormant when no relation declares one).
+    e.injectOptimizerRule(session => UniqueKeyRowNumberRule(session))
     // Optimizer rule: automatic materialized-view query rewrite — a natural
     // GROUP BY over a graft table answers from a provably-fresh incremental
     // mview (see MviewRewriteRule; dormant when no view matches).

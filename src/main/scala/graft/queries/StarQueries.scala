@@ -1993,8 +1993,8 @@ object StarQueries {
     // B138: scalable surrogate keys — global dense row numbers WITHOUT the
     // single-partition sort that `row_number() OVER (ORDER BY …)` would plan
     // (the classic 100 TB faceplant: every row through one task). See
-    // Relational.globalRowNumber: one range shuffle + local sort + a
-    // numPartitions-row offset table broadcast back.
+    // Relational.globalRowNumber: one range shuffle + local sort, then each
+    // sorted partition numbered from its prefix-summed offset.
     "q_surrogate_keys" -> { (s, d) =>
       graft.operators.Relational
         .globalRowNumber(Tables.orders(s, d).select(col("o_orderkey")),

@@ -1,10 +1,12 @@
 package graft.streaming
 
 import graft.operators.Relational
+import graft.plans.UniqueKeyRowNumberRule
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 import org.apache.spark.sql.Row
 
 /**
@@ -69,13 +71,20 @@ object StreamingPipeline {
    * bucket dirs — rejected instead); `files` lists, per bucket, the EXACT data files
    * that make up this generation. Readers resolve the store through the latest
    * manifest only, so the store flips old -> new atomically at the manifest rename.
+   * `keys` and `schema` (the store's key columns and its Spark schema without the
+   * bucket column) are empty/None for a manifest written before they were recorded.
    */
   private[streaming] case class StoreManifest(generation: Long, numBuckets: Int,
-                                              files: Map[Int, Seq[String]])
+                                              files: Map[Int, Seq[String]],
+                                              keys: Seq[String] = Nil,
+                                              schema: Option[StructType] = None)
+
+  private val BucketCol = "__bucket"
 
   private def bucketOf(p: Path): Option[Int] = {
     val n = p.getName
-    if (n.startsWith("__bucket=")) scala.util.Try(n.substring(9).toInt).toOption else None
+    if (n.startsWith(s"$BucketCol=")) scala.util.Try(n.substring(BucketCol.length + 1).toInt).toOption
+    else None
   }
 
   /** Latest committed manifest, or None for an empty / legacy pre-manifest store.
@@ -102,11 +111,15 @@ object StreamingPipeline {
       fs.open(new Path(new Path(root, ManifestDirName), name)), "UTF-8"))
     try {
       var numBuckets = -1; var generation = -1L
+      var keys = Seq.empty[String]; var schema = Option.empty[StructType]
       val files = scala.collection.mutable.Map.empty[Int, List[String]]
       var line = in.readLine()
       while (line != null) {
         if (line.startsWith("numBuckets=")) numBuckets = line.substring(11).toInt
         else if (line.startsWith("generation=")) generation = line.substring(11).toLong
+        else if (line.startsWith("keys=")) keys = UniqueKeyRowNumberRule.decodeKey(line.substring(5))
+        else if (line.startsWith("schema=")) schema = Some(DataType.fromJson(line.substring(7))
+          .asInstanceOf[StructType])
         else if (line.startsWith("f\t")) {
           val parts = line.split("\t", 3)
           val b = parts(1).toInt
@@ -115,7 +128,7 @@ object StreamingPipeline {
         line = in.readLine()
       }
       StoreManifest(generation, numBuckets,
-        files.view.mapValues(_.reverse.toSeq).toMap)
+        files.view.mapValues(_.reverse.toSeq).toMap, keys, schema)
     } finally in.close()
   }
 
@@ -129,6 +142,8 @@ object StreamingPipeline {
     try {
       out.println(s"numBuckets=${m.numBuckets}")
       out.println(s"generation=${m.generation}")
+      if (m.keys.nonEmpty) out.println(s"keys=${UniqueKeyRowNumberRule.encodeKey(m.keys)}")
+      m.schema.foreach(st => out.println(s"schema=${st.json}"))
       m.files.toSeq.sortBy(_._1).foreach { case (b, fl) =>
         fl.foreach(rel => out.println(s"f\t$b\t$rel"))
       }
@@ -160,10 +175,20 @@ object StreamingPipeline {
    *
    * `numBuckets` is pinned by the store's manifest: a merge against an existing
    * store with a different count is rejected (it would split keys across bucket
-   * dirs and break last-write-wins).
+   * dirs and break last-write-wins). A batch with its own `__bucket` column is
+   * rejected before anything is staged: that name is the store's bucket column.
+   *
+   * Each manifest also records the store's `keys=` (the key columns) and
+   * `schema=` (its Spark schema as JSON, bucket column excluded). Reads of
+   * committed files — this merge's, [[readStore]]'s and [[readStoreAsOf]]'s —
+   * take the schema from there instead of running parquet schema inference;
+   * older manifests without these lines read as before.
    */
   def upsertBatch(batch: DataFrame, path: String, keys: Seq[String],
                   ordering: Seq[Column], numBuckets: Int = DefaultStoreBuckets): Unit = {
+    require(!batch.columns.exists(_.equalsIgnoreCase(BucketCol)),
+      s"upsert batch has a column named $BucketCol, which the store reserves for " +
+        "its bucket directories; rename it before upserting")
     val spark = batch.sparkSession
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -173,19 +198,19 @@ object StreamingPipeline {
         s"store at $path is pinned to numBuckets=${m.numBuckets}; merging with " +
           s"numBuckets=$numBuckets would strand keys across buckets")
     }
-    val bucketed = batch.withColumn("__bucket",
+    val bucketed = batch.withColumn(BucketCol,
       pmod(hash(keys.map(col): _*), lit(numBuckets)))
     // Partition pruning metadata, not data: at most `numBuckets` small integers.
-    val touched = bucketed.select("__bucket").distinct()
+    val touched = bucketed.select(BucketCol).distinct()
       .collect().map(_.getInt(0)).sorted
     if (touched.isEmpty) return
     // A legacy pre-manifest store falls back to directory listing once and becomes
     // manifest-committed from this generation on.
     def legacyList(b: Int): Seq[String] = {
-      val d = new Path(root, s"__bucket=$b")
+      val d = new Path(root, s"$BucketCol=$b")
       if (!fs.exists(d)) Nil
       else fs.listStatus(d).filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
-        .map(s => s"__bucket=$b/${s.getPath.getName}").toSeq
+        .map(s => s"$BucketCol=$b/${s.getPath.getName}").toSeq
     }
     val prevFiles: Int => Seq[String] =
       b => prev.map(_.files.getOrElse(b, Seq.empty)).getOrElse(legacyList(b))
@@ -193,9 +218,9 @@ object StreamingPipeline {
     val merged =
       if (oldPaths.isEmpty) Relational.latestPerKey(bucketed, keys, ordering)
       else {
-        // basePath keeps the __bucket partition column; inputs are the touched
-        // buckets' committed files only.
-        val old = spark.read.option("basePath", path).parquet(oldPaths.toSeq: _*)
+        // Inputs are the touched buckets' committed files only. No key
+        // declaration: the union below repeats keys.
+        val old = readFiles(spark, path, oldPaths.toSeq, prev.flatMap(_.schema), Nil)
         Relational.latestPerKey(old.unionByName(bucketed), keys, ordering)
       }
     // Stage replacement content as new files, then move into the bucket dirs
@@ -204,18 +229,18 @@ object StreamingPipeline {
     val staging = new Path(root, s"_staging-${java.util.UUID.randomUUID}")
     val newFiles = scala.collection.mutable.Map.empty[Int, Seq[String]]
     try {
-      merged.repartition(col("__bucket"))
-        .write.partitionBy("__bucket").parquet(staging.toString)
+      merged.repartition(col(BucketCol))
+        .write.partitionBy(BucketCol).parquet(staging.toString)
       fs.listStatus(staging).filter(_.isDirectory).foreach { d =>
         bucketOf(d.getPath).foreach { b =>
-          val dest = new Path(root, s"__bucket=$b")
+          val dest = new Path(root, s"$BucketCol=$b")
           fs.mkdirs(dest)
           newFiles(b) = fs.listStatus(d.getPath)
             .filter(s => s.isFile && !s.getPath.getName.startsWith("_"))
             .map { s =>
               val to = new Path(dest, s.getPath.getName)
               require(fs.rename(s.getPath, to), s"staging move failed: $to")
-              s"__bucket=$b/${s.getPath.getName}"
+              s"$BucketCol=$b/${s.getPath.getName}"
             }.toSeq
         }
       }
@@ -228,7 +253,8 @@ object StreamingPipeline {
       .map(b => b -> prevFiles(b)).filter(_._2.nonEmpty).toMap
     writeManifest(fs, root, StoreManifest(
       prev.map(_.generation + 1).getOrElse(1L), numBuckets,
-      carried ++ touched.map(b => b -> newFiles.getOrElse(b, Seq.empty)).toMap))
+      carried ++ touched.map(b => b -> newFiles.getOrElse(b, Seq.empty)).toMap,
+      keys, Some(StructType(merged.schema.filterNot(_.name == BucketCol)))))
   }
 
   /**
@@ -236,13 +262,21 @@ object StreamingPipeline {
    * current generation through the latest committed manifest — stale files from a
    * crashed writer are never visible. A store without manifests (legacy layout)
    * falls back to a plain directory read.
+   *
+   * The schema comes from the manifest's `schema=` line, so the read runs no
+   * schema-inference job. Its `keys=` line is declared on the relation as a
+   * unique key — informational, RELY-style: the store's merge keeps one row
+   * per key, and nothing re-checks it — and [[UniqueKeyRowNumberRule]] is
+   * added to the session, so a `row_number()` latest-per-key view over the
+   * read (e.g. `NutritionPipeline.enrichmentPipeline`) plans no shuffle and
+   * no window. A manifest without these lines reads as before.
    */
   def readStore(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     latestManifest(fs, root) match {
       case Some(m) => manifestDf(spark, path, m)
-      case None => spark.read.parquet(path).drop("__bucket")
+      case None => spark.read.parquet(path).drop(BucketCol)
     }
   }
 
@@ -260,6 +294,8 @@ object StreamingPipeline {
    * manifests but stay on disk), so any un-vacuumed generation remains a fully
    * consistent snapshot — the same mechanism backing Delta/Iceberg `VERSION AS OF`.
    * Fails fast if the generation was never committed or has been vacuumed.
+   * Schema and key declaration come from that generation's manifest, as in
+   * [[readStore]].
    */
   def readStoreAsOf(spark: org.apache.spark.sql.SparkSession, path: String,
                     generation: Long): DataFrame = {
@@ -280,7 +316,24 @@ object StreamingPipeline {
     val files = m.files.toSeq.sortBy(_._1)
       .flatMap(_._2).map(rel => new Path(root, rel).toString)
     if (files.isEmpty) spark.emptyDataFrame
-    else spark.read.option("basePath", path).parquet(files: _*).drop("__bucket")
+    else {
+      if (m.keys.nonEmpty) GraftBridge.addOptimization(spark, UniqueKeyRowNumberRule(spark))
+      readFiles(spark, path, files, m.schema, m.keys).drop(BucketCol)
+    }
+  }
+
+  /** Read committed store files under `path` (basePath keeps the bucket
+    * column). A known schema skips parquet schema inference; `keys`, if any,
+    * are declared unique on the relation for [[UniqueKeyRowNumberRule]]. */
+  private def readFiles(spark: org.apache.spark.sql.SparkSession, path: String,
+                        files: Seq[String], schema: Option[StructType],
+                        keys: Seq[String]): DataFrame = {
+    val base = spark.read.option("basePath", path)
+    val typed = schema.fold(base)(st => base.schema(st.add(BucketCol, IntegerType)))
+    val keyed =
+      if (keys.isEmpty) typed
+      else typed.option(UniqueKeyRowNumberRule.KeyOption, UniqueKeyRowNumberRule.encodeKey(keys))
+    keyed.parquet(files: _*)
   }
 
   /**
@@ -338,7 +391,7 @@ object StreamingPipeline {
         fs.listStatus(root).filter(_.isDirectory).foreach { d =>
           bucketOf(d.getPath).foreach { b =>
             fs.listStatus(d.getPath).filter(_.isFile).foreach { s =>
-              val rel = s"__bucket=$b/${s.getPath.getName}"
+              val rel = s"$BucketCol=$b/${s.getPath.getName}"
               if (!live.contains(rel) &&
                   s.getModificationTime <= reclaimableBefore) {
                 fs.delete(s.getPath, false); deleted += 1

@@ -399,4 +399,26 @@ class RelationalSpec extends GraftSuite {
     assert(windowLines.forall(l => !l.contains("payload")),
       s"a Window node sees the big-data lineage:\n$plan")
   }
+
+  test("globalRowNumber is the global rank under AQE (one range-shuffle evaluation)") {
+    // Offsets taken from a second evaluation of the range shuffle disagree
+    // with the first under AQE over a cached input (as Bench caches its
+    // tables): ~14,000 of these 15,000 ids came out wrong, some duplicated.
+    val saved = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    val df = spark.range(0, 15000).select(
+      ((col("id") * 7919L) % 15000L).as("key"), col("id").as("payload"))
+      .repartition(5).persist()
+    try {
+      val got = Relational.globalRowNumber(df, col("key"), 16, "sk")
+        .select("key", "sk").as[(Long, Long)].collect()
+      assert(got.length === 15000)
+      // key is a permutation of 0..14999, so its rank is key + 1.
+      val wrong = got.count { case (k, sk) => sk != k + 1 }
+      assert(wrong === 0, s"$wrong of 15000 ids differ from the rank")
+    } finally {
+      df.unpersist(blocking = true)
+      spark.conf.set("spark.sql.adaptive.enabled", saved)
+    }
+  }
 }

@@ -215,6 +215,27 @@ class StreamingSpec extends GraftSuite {
     assert(StreamingPipeline.readStore(spark, store).count() === 1)
   }
 
+  test("a batch with its own __bucket column is rejected before anything is staged") {
+    val store = tmpDir("reserved") + "/store"
+    val keys = Seq("item_name")
+    val ord = Seq(col("ingestion_ts").desc)
+    StreamingPipeline.upsertBatch(
+      Seq(("a", ts("2024-01-01 00:00:00"), 1.0)).toDF("item_name", "ingestion_ts", "calories"),
+      store, keys, ord)
+    val committed = StreamingPipeline.readStore(spark, store).collect().toSeq
+    for (name <- Seq("__bucket", "__BUCKET")) {
+      val e = intercept[IllegalArgumentException] {
+        StreamingPipeline.upsertBatch(
+          Seq(("b", ts("2024-01-02 00:00:00"), 2.0, 7)).toDF("item_name", "ingestion_ts",
+            "calories", name), store, keys, ord)
+      }
+      assert(e.getMessage.contains("__bucket"))
+    }
+    assert(StreamingPipeline.storeGenerations(spark, store) === Seq(1L))
+    assert(!new java.io.File(store).list().exists(_.startsWith("_staging-")))
+    assert(StreamingPipeline.readStore(spark, store).collect().toSeq === committed)
+  }
+
   test("vacuum keeps only the live generation; superseded files are reclaimed") {
     val store = tmpDir("vacuum") + "/store"
     val keys = Seq("item_name")
