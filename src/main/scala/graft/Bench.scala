@@ -16,9 +16,37 @@ import org.apache.spark.sql.SparkSession
  * instead rely on the parquet scan cluster-wide; the flag lives in graft.Tables).
  */
 object Bench {
+  /** The measurement session posture — Bench, Profile and PlanDump all run
+    * under it: `local[SPARK_GRAFT_CPUS]` (default 4) with as many shuffle
+    * partitions, AQE and base-table caching on, UTC. */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.graft.cacheTables", "true")
+      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
+      // Spark's compiled-class cache holds 100 entries (static conf); a
+      // 290-query drive churns thousands of codegen units through it, so
+      // every re-invocation — including best-of-K's second sample — pays
+      // Janino again for an IDENTICAL source. 10k entries ≈ tens of MB of
+      // metaspace; a long-lived production session wants the same.
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    // The round-3 bench tail was 100% WindowExec no-partition warnings from
+    // windows over already-reduced data — mute that one logger so the driver
+    // log carries signal.
+    LogHygiene.muteBenignWindowWarning()
+    spark
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Pre-run machine load, sampled before we generate any ourselves: the
     // ledger-overwrite guard below uses it to keep a contended run from
     // clobbering the clean committed record (observed r4: a turmoil-window
@@ -54,27 +82,7 @@ object Bench {
     }
     val calIters2s: Long = calBurn()
     val stat0 = readProcStat()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.graft.cacheTables", "true")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      // Spark's compiled-class cache holds 100 entries (static conf); a
-      // 290-query drive churns thousands of codegen units through it, so
-      // every re-invocation — including best-of-K's second sample — pays
-      // Janino again for an IDENTICAL source. 10k entries ≈ tens of MB of
-      // metaspace; a long-lived production session wants the same.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The round-3 bench tail was 100% WindowExec no-partition warnings from
-    // windows over already-reduced data — mute that one logger so the driver
-    // log carries signal.
-    LogHygiene.muteBenignWindowWarning()
+    val spark = session()
     // Warm-up: materialize each cached base table once so the first timed query
     // doesn't absorb parquet decode + cache build + JIT for everyone else.
     // Concurrent: ten sequential counts leave 32 cores mostly idle; Spark's

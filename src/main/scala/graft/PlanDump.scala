@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Optimization-round measurement aid (guide §7.2): dump the FORMATTED
  * physical plan of named queries to `<outDir>/<name>_<tag>.txt` — the
@@ -27,18 +25,7 @@ object PlanDump {
     val unknown = names.toSet -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown: ${unknown.mkString(",")}")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.graft.cacheTables", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    LogHygiene.muteBenignWindowWarning()
+    val spark = Bench.session()
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
       try {

@@ -3,7 +3,6 @@ package graft
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /**
  * Optimization-round measurement aid (guide §1): run named queries under the
@@ -25,23 +24,10 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val names = if (args.nonEmpty) args.toSeq else Seq("q_flagship")
     val unknown = names.toSet -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown: ${unknown.mkString(",")}")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.graft.cacheTables", "true")
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000") // match Bench
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    LogHygiene.muteBenignWindowWarning()
+    val spark = Bench.session()
 
     val jobs = new ConcurrentHashMap[Int, JobRec]()
     val stageToJob = new ConcurrentHashMap[Int, Int]()

@@ -880,11 +880,9 @@ object EventQueries {
         .getFileSystem(s.sessionState.newHadoopConf())
       fs.delete(new org.apache.hadoop.fs.Path(s"$scratch/ckpt"), true)
       fs.delete(new org.apache.hadoop.fs.Path(s"$scratch/out"), true)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       // 4 partitions: the stateful join pays state-store init per shuffle
       // partition and the state is tiny — values are partition-invariant.
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      graft.streaming.Drain.availableNow(s, "streamJoinDrain", Some(4)) { trigger =>
         val vS = s.readStream.schema(viewsSchema).parquet(s"$src/views")
         val pS = s.readStream.schema(purchSchema).parquet(s"$src/purch")
         val joined = graft.streaming.StreamJoins.intervalJoinFull(
@@ -892,19 +890,15 @@ object EventQueries {
           col("user_id") === col("p_user") &&
             col("p_ts") >= col("v_ts") &&
             col("p_ts") <= col("v_ts") + expr("INTERVAL 2 HOURS"))
-        val q = joined
+        joined
           .select(col("v_id"), col("p_id"),
             coalesce(col("user_id"), col("p_user")).as("uid"),
             r2(col("p_value")).as("p_value"),
             (unix_micros(col("p_ts")) - unix_micros(col("v_ts"))).as("gap_us"))
           .writeStream.option("checkpointLocation", s"$scratch/ckpt")
           .format("parquet").option("path", s"$scratch/out")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        val done = q.awaitTermination(240000)
-        q.stop()
-        require(done, "stream-join drain: AvailableNow did not finish in 240s")
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+          .trigger(trigger).start()
+      }
     })).force
     s"$scratch/out"
   }

@@ -2429,28 +2429,16 @@ object StarQueries {
           .partitionedBy(col("pk"))
           .tableProperty("fixture", marker).create()
       }
-      def drain(): Unit = {
-        // 3 groups don't need 32 state stores: the stateful aggregate's
-        // shuffle-partition count is baked into the checkpoint at first
-        // start, and each AvailableNow drain pays state-store init PER
-        // partition — 4 keeps the fixed cost proportional to the state, not
-        // the session default (values are partition-count invariant).
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "4")
-        try {
-          val q = s.readStream.table("graft.cs")
+      // 3 groups don't need 32 state stores: 4 shuffle partitions keep the
+      // fixed cost proportional to the state, not the session default
+      // (values are partition-count invariant).
+      def drain(): Unit =
+        graft.streaming.Drain.availableNow(s, "q_catalog_stream", Some(4))(trigger =>
+          s.readStream.table("graft.cs")
             .groupBy(col("pk")).agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"))
             .writeStream.option("checkpointLocation", ckpt)
             .outputMode("complete").format("memory").queryName("graft_cs_sink")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          // A timed-out drain would ship a PARTIAL aggregate that reads as a
-          // correctness bug — fail loudly instead.
-          val done = q.awaitTermination(240000)
-          q.stop()
-          require(done, "q_catalog_stream: AvailableNow drain did not finish in 240s")
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      }
+            .trigger(trigger).start())
       drain()                                           // snapshot batch
       base.filter(col("pk") === 2).writeTo("graft.cs").append()
       drain()                                           // incremental batch
@@ -3380,12 +3368,9 @@ object StarQueries {
         .getFileSystem(s.sessionState.newHadoopConf())
       def drain(ckpt: String): Unit = {
         fs.delete(new org.apache.hadoop.fs.Path(ckpt), true)
-        val q = graft.sources.GraftCatalogOps.continuousMviewMaintenance(
-          s, "graft", root, "cmqv", ckpt,
-          org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        val done = q.awaitTermination(240000)
-        q.stop()
-        require(done, "continuous-mview drain: AvailableNow did not finish in 240s")
+        graft.streaming.Drain.availableNow(s, "q_mview_continuous", None)(
+          graft.sources.GraftCatalogOps.continuousMviewMaintenance(
+            s, "graft", root, "cmqv", ckpt, _))
       }
       drain(s"$scratch/ckpt1")
       val dirV = new org.apache.hadoop.fs.Path(root, "cmqv")
@@ -4303,16 +4288,11 @@ object StarQueries {
           .tableProperty("dml", "dv")
           .tableProperty("fixture", marker).create()                  // gen 1
       }
-      def drain(): Unit = {
-        val q = s.readStream.table("graft.`cdfs$changes`")
-          .writeStream.option("checkpointLocation", ckpt)
-          .format("parquet")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start(out)
-        val done = q.awaitTermination(240000)
-        q.stop()
-        require(done, "q_catalog_cdf_stream: AvailableNow drain did not finish in 240s")
-      }
+      def drain(): Unit =
+        graft.streaming.Drain.availableNow(s, "q_catalog_cdf_stream", None)(trigger =>
+          s.readStream.table("graft.`cdfs$changes`")
+            .writeStream.option("checkpointLocation", ckpt)
+            .format("parquet").trigger(trigger).start(out))
       drain()                                      // snapshot batch: inserts @0
       base.filter(col("o_orderkey") % 2 === 1)
         .writeTo("graft.cdfs").append()                               // gen 1

@@ -74,9 +74,10 @@ import graft.SerializableHadoopConf
  * Concurrent writers are SUPPORTED (B177, the Delta optimistic-concurrency
  * protocol): every commit claims its generation by atomic exclusive create of
  * the manifest file ([[GraftManifest.publishCas]]); a loser reloads the
- * winner's snapshot and rebases metadata-only, with per-write-mode conflict
- * rules in [[GraftCommitProtocol]] — appends always serialize, replacing
- * writes fail loudly when a concurrent commit touched what they replace.
+ * winner's snapshot and rebases metadata-only, all in the one retry loop
+ * [[GraftManifest.publishNext]], with per-write-mode conflict rules in
+ * [[GraftCommitProtocol]] — appends always serialize, replacing writes fail
+ * loudly when a concurrent commit touched what they replace.
  */
 class GraftCatalog extends TableCatalog
     with org.apache.spark.sql.connector.catalog.ProcedureCatalog
@@ -917,11 +918,12 @@ object GraftManifest {
    * generation `m.gen` by exclusive create of its manifest file — exactly one
    * writer can win a generation (HDFS create-no-overwrite is atomic; object
    * stores give the same via conditional PUT). Returns false when another
-   * writer already owns the slot — the caller reloads the winner's manifest
-   * ([[loadClaimed]]) and REBASES. The content rides the claiming stream, so
-   * a concurrent rebase read may catch it mid-write — loadClaimed retries
-   * parse for that millisecond window (a conditional PUT is content-atomic,
-   * so the window is a local-FS artifact, not a protocol hole).
+   * writer already owns the slot — [[publishNext]] then reloads the winner's
+   * manifest ([[loadClaimed]]) and REBASES. The content rides the claiming
+   * stream, so a concurrent rebase read may catch it mid-write — loadClaimed
+   * retries parse for that millisecond window (a conditional PUT is
+   * content-atomic, so the window is a local-FS artifact, not a protocol
+   * hole).
    */
   def publishCas(dir: Path, m: GraftManifest, conf: Configuration): Boolean = {
     val fs = dir.getFileSystem(conf)
@@ -1052,13 +1054,22 @@ object GraftManifest {
     fs.delete(p, false)
   }
 
-  /** CAS-retry loop for metadata-only commits (ALTER/TRUNCATE/RESTORE/
-    * metadata DELETE): recompute the next manifest against the latest CLAIMED
-    * snapshot until the exclusive-create claim wins — these ops rebase
-    * trivially because `f` re-derives them from whatever snapshot they land
-    * on. */
+  /** Metadata-only commits (ALTER/TRUNCATE/RESTORE/metadata DELETE): these
+    * rebase trivially because `f` re-derives the next manifest from whatever
+    * snapshot it lands on. */
   def publishNext(dir: Path, conf: Configuration)
-                 (f: GraftManifest => GraftManifest): GraftManifest = {
+                 (f: GraftManifest => GraftManifest): GraftManifest =
+    publishNext(dir, conf, cur => Some(f(cur))).get
+
+  /** THE CAS-retry loop (B177) — every catalog commit goes through it:
+    * metadata ops, batch writes, delta DML and streaming epochs. Each attempt
+    * loads the highest CLAIMED manifest (reaping a dead writer's stale,
+    * body-less claim so the table un-wedges), asks `step` for the next
+    * generation on that base, and claims it by exclusive create. `step`
+    * holds the caller's own rebase rules: it may throw a conflict, or return
+    * None to publish nothing (a replayed txn). Returns what was published. */
+  def publishNext(dir: Path, conf: Configuration,
+                  step: GraftManifest => Option[GraftManifest]): Option[GraftManifest] = {
     var attempts = 0
     while (attempts < 20) {
       val top = highestClaimedGen(dir, conf)
@@ -1066,19 +1077,20 @@ object GraftManifest {
         try loadClaimed(dir, top, conf)
         catch {
           case e: IllegalStateException =>
-            // A dead writer's body-less claim: reap it after the staleness
-            // window so the table un-wedges, then rebase on the survivor.
             if (reapStaleClaim(dir, top, conf)) loadClaimed(dir, highestClaimedGen(dir, conf), conf)
             else throw e
         }
-      val next = f(cur)
-      require(next.gen == cur.gen + 1,
-        s"publishNext must advance exactly one generation (got ${next.gen} after ${cur.gen})")
-      if (publishCas(dir, next, conf)) return next
+      step(cur) match {
+        case None => return None
+        case Some(next) =>
+          require(next.gen == cur.gen + 1,
+            s"publishNext must advance exactly one generation (got ${next.gen} after ${cur.gen})")
+          if (publishCas(dir, next, conf)) return Some(next)
+      }
       attempts += 1
     }
     throw new IllegalStateException(
-      s"metadata commit on $dir lost $attempts CAS races")
+      s"commit on $dir lost $attempts CAS races — giving up under contention")
   }
 
   /** Move CURRENT forward to `gen`, never backward: concurrent winners of
@@ -1242,6 +1254,25 @@ object GraftCommitProtocol {
         conflict(s"deletion vectors on ${dvChanged.map(_._2).mkString(", ")} changed " +
           "concurrently under a row-level operation")
       base.entries.filterNot(replaced) ++ fresh
+  }
+
+  /** Delta-DML (merge-on-read) rebase: a commit that adds deletion vectors
+    * to the `touched` files rebases onto any concurrent commit that left
+    * those files live with UNCHANGED DVs — the commit unions its positions
+    * into the base's DV, so a concurrent delete on the same file would
+    * otherwise be silently dropped. Appends and commits on other files
+    * rebase. */
+  def requireDeltaRebasable(orig: GraftManifest, base: GraftManifest,
+      touched: collection.Set[String]): Unit = if (base.gen != orig.gen) {
+    val live = base.entries.map(_._2).toSet
+    val gone = touched.filterNot(live)
+    if (gone.nonEmpty)
+      conflict(s"delta-DML target file(s) ${gone.mkString(", ")} were rewritten or " +
+        "removed concurrently")
+    val dvChanged = touched.filter(rel => base.fileDVs.get(rel) != orig.fileDVs.get(rel))
+    if (dvChanged.nonEmpty)
+      conflict(s"deletion vectors on ${dvChanged.mkString(", ")} changed concurrently " +
+        "under a delta DML commit")
   }
 }
 
@@ -3704,40 +3735,19 @@ class GraftDeltaBatchWrite(dir: Path, prev: GraftManifest, writeSchema: StructTy
     msgs.foreach(_.deletes.foreach { case (rel, ps) =>
       byFile.getOrElseUpdate(rel, ArrayBuffer.empty) ++= ps })
     val c = conf.value
-    // CAS loop (B177): rebase-or-conflict like the group write — a delta
-    // commit touches exactly the files it adds DVs to, so it rebases iff
-    // those files are still live with UNCHANGED deletion vectors (the DV
-    // union below reads the base's DV; a concurrent delete on the same file
-    // would be silently dropped otherwise — conflict instead). First attempt
-    // bases on the highest CLAIMED manifest, like the group write.
-    var base = GraftManifest.loadClaimed(dir,
-      math.max(GraftManifest.highestClaimedGen(dir, c), prev.gen), c)
-    var g = base.gen + 1
-    var attempts = 0
-    var committed = false
+    // Rebase-or-conflict (B177) on every claimed base; the merged DV files
+    // are written per attempt, under the generation being claimed.
     var newDVAggs: Map[String, String] = null
-    while (!committed && attempts < 20) {
-      if (base.gen != prev.gen) {
-        val baseEntrySet = base.entries.map(_._2).toSet
-        val gone = byFile.keySet.filterNot(baseEntrySet)
-        if (gone.nonEmpty)
-          GraftCommitProtocol.conflict(
-            s"delta-DML target file(s) ${gone.mkString(", ")} were rewritten or " +
-              "removed concurrently")
-        val dvChanged = byFile.keySet.filter(rel =>
-          base.fileDVs.get(rel) != prev.fileDVs.get(rel))
-        if (dvChanged.nonEmpty)
-          GraftCommitProtocol.conflict(
-            s"deletion vectors on ${dvChanged.mkString(", ")} changed concurrently " +
-              "under a delta DML commit")
+    GraftManifest.publishNext(dir, c, base => {
+      GraftCommitProtocol.requireDeltaRebasable(prev, base, byFile.keySet)
+      val g = base.gen + 1
+      val merged = byFile.toSeq.sortBy(_._1).map { case (rel, ps) =>
+        rel -> (base.fileDVs.get(rel).map(GraftDV.read(dir, _, c))
+          .getOrElse(Array.empty[Long]) ++ ps)
       }
-      var dvIdx = 0
-      val newDVs = byFile.toSeq.sortBy(_._1).map { case (rel, ps) =>
-        val existing = base.fileDVs.get(rel)
-          .map(GraftDV.read(dir, _, c)).getOrElse(Array.empty[Long])
-        val dvRel = s"$genRel/dv-$g-$dvIdx.dv"
-        dvIdx += 1
-        GraftDV.write(dir, dvRel, existing ++ ps, c)
+      val newDVs = merged.zipWithIndex.map { case ((rel, pos), i) =>
+        val dvRel = s"$genRel/dv-$g-$i.dv"
+        GraftDV.write(dir, dvRel, pos, c)
         rel -> dvRel
       }.toMap
       // Deleted-row aggregates per touched file (GraftDVAggs): recorded over
@@ -3758,12 +3768,8 @@ class GraftDeltaBatchWrite(dir: Path, prev: GraftManifest, writeSchema: StructTy
           else org.apache.spark.sql.SparkSession.getActiveSession
             .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
             .map { spark =>
-              val fullPos = byFile.toSeq.sortBy(_._1).map { case (rel, ps) =>
-                val existing = base.fileDVs.get(rel)
-                  .map(GraftDV.read(dir, _, c)).getOrElse(Array.empty[Long])
-                rel -> (existing ++ ps).distinct
-              }
-              try GraftDVAggs.computeAll(spark, dir, fullPos)
+              try GraftDVAggs.computeAll(spark, dir,
+                merged.map { case (rel, pos) => rel -> pos.distinct })
               catch { case _: Exception => Map.empty[String, String] }
             }.getOrElse(Map.empty)
       }
@@ -3772,20 +3778,11 @@ class GraftDeltaBatchWrite(dir: Path, prev: GraftManifest, writeSchema: StructTy
       // still describe the old, smaller DV would make metadata COUNT/SUM
       // subtract too little — silently wrong. Absence instead refuses the
       // metadata path for that file (scan fallback, always correct).
-      val m = base.withFileMeta(freshAll).copy(gen = g,
+      Some(base.withFileMeta(freshAll).copy(gen = g,
         entries = base.entries ++ freshAll.map(f => (f.part, f.rel)),
         fileDVs = base.fileDVs ++ newDVs,
-        fileDVAggs = (base.fileDVAggs -- byFile.keys) ++ newDVAggs)
-      if (GraftManifest.publishCas(dir, m, c)) committed = true
-      else {
-        val claimed = GraftManifest.highestClaimedGen(dir, c)
-        base = GraftManifest.loadClaimed(dir, claimed, c)
-        g = claimed + 1
-        attempts += 1
-      }
-    }
-    if (!committed) throw new IllegalStateException(
-      s"delta commit on $dir lost $attempts CAS races — giving up under contention")
+        fileDVAggs = (base.fileDVAggs -- byFile.keys) ++ newDVAggs))
+    })
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -4022,22 +4019,14 @@ class GraftStreamingWrite(dir: Path, prev: GraftManifest, writeSchema: StructTyp
     val c = conf.value
     val fresh = messages.flatMap { case GraftFilesMessage(fs, _) => fs }.toSeq
     val key = s"$queryId:$epochId"
-    // CAS loop (B177): an epoch commit is a pure append + txn mark, so it
-    // rebases onto ANY concurrent commit; the exactly-once dedup check
-    // re-evaluates per attempt against the snapshot it actually lands on.
-    var attempts = 0
-    while (attempts < 20) {
-      val cur = GraftManifest.loadClaimed(dir,
-        GraftManifest.highestClaimedGen(dir, c), c)
-      if (cur.txns.contains(key)) return // replayed epoch — already visible
-      val m = cur.withFileMeta(fresh).copy(gen = cur.gen + 1,
+    // An epoch commit is a pure append + txn mark, so it rebases onto ANY
+    // concurrent commit (B177); the exactly-once dedup check re-evaluates
+    // against each base it lands on — a replayed epoch is already visible.
+    GraftManifest.publishNext(dir, c, cur =>
+      if (cur.txns.contains(key)) None
+      else Some(cur.withFileMeta(fresh).copy(gen = cur.gen + 1,
         entries = cur.entries ++ fresh.map(f => (f.part, f.rel)),
-        txns = cur.txns + key)
-      if (GraftManifest.publishCas(dir, m, c)) return
-      attempts += 1
-    }
-    throw new IllegalStateException(
-      s"streaming epoch commit on $dir lost $attempts CAS races")
+        txns = cur.txns + key)))
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
@@ -5326,55 +5315,33 @@ class GraftBatchWrite(dir: Path, prev: GraftManifest, writeSchema: StructType,
     val fresh = freshAll.map(f => (f.part, f.rel))
     val replaced = if (mode == "replace-groups") replaceGroups().toSet
                    else Set.empty[(String, String)]
-    // Optimistic concurrency (B177): claim the next generation by exclusive
-    // manifest create; on losing the race, REBASE onto the winner's snapshot
-    // (GraftCommitProtocol decides rebasable vs conflict per write mode) and
-    // claim again. The data files were already written under this writer's
-    // own gen-dir — rebasing re-points METADATA only, nothing re-executes.
-    // EVERY attempt (including the first) bases on the highest CLAIMED
-    // manifest, never the planning-time snapshot: a concurrent commit may
-    // have landed between plan and commit, and claiming a later free slot
-    // from the stale base would silently drop it.
-    val c0 = conf.value
-    var base = GraftManifest.loadClaimed(metaDir,
-      math.max(GraftManifest.highestClaimedGen(metaDir, c0), prev.gen), c0)
-    var g = base.gen + 1
-    var attempts = 0
-    while (attempts < 20) {
+    // Optimistic concurrency (B177): every attempt REBASES onto the claimed
+    // base (GraftCommitProtocol decides rebasable vs conflict per write
+    // mode). The data files were already written under this writer's own
+    // gen-dir — rebasing re-points METADATA only, nothing re-executes.
+    val published = GraftManifest.publishNext(metaDir, conf.value, base => {
       // Idempotent-write dedup: a replayed (txnAppId, txnVersion) batch is
-      // already visible — publish nothing, drop the orphaned gen dir.
-      if (txnKey.exists(base.txns.contains)) {
-        abort(messages); GraftCommitOutcome.record(published = false); return
-      }
-      // Per-file load markers (B200, COPY INTO): a commit may carry a set of
-      // `copy:<path>` ledger keys. Re-evaluated against the snapshot the
-      // commit actually lands on: a FULL replay (every marker present)
-      // publishes nothing; a PARTIAL overlap means a concurrent COPY INTO
-      // ingested some of these source files since planning — refuse rather
-      // than double-load.
-      if (txnFiles.nonEmpty) {
-        val dup = txnFiles.filter(base.txns.contains)
-        if (dup.size == txnFiles.size) {
-          abort(messages); GraftCommitOutcome.record(published = false); return
-        }
+      // already visible. Per-file load markers (B200, COPY INTO): a commit
+      // may carry a set of `copy:<path>` ledger keys — a FULL replay (every
+      // marker present) publishes nothing; a PARTIAL overlap means a
+      // concurrent COPY INTO ingested some of these source files since
+      // planning — refuse rather than double-load.
+      val dup = txnFiles.filter(base.txns.contains)
+      if (txnKey.exists(base.txns.contains) ||
+          (txnFiles.nonEmpty && dup.size == txnFiles.size)) None
+      else {
         require(dup.isEmpty,
           s"COPY INTO conflict: ${dup.size} of ${txnFiles.size} source files " +
             "were loaded by a concurrent copy — re-run to load the remainder")
+        Some(base.withFileMeta(freshAll).copy(gen = base.gen + 1,
+          entries = GraftCommitProtocol.rebasedEntries(
+            mode, prev, base, fresh, staticFilters, replaced),
+          txns = base.txns ++ txnKey ++ txnFiles))
       }
-      val entries = GraftCommitProtocol.rebasedEntries(
-        mode, prev, base, fresh, staticFilters, replaced)
-      val m = base.withFileMeta(freshAll)
-        .copy(gen = g, entries = entries, txns = base.txns ++ txnKey ++ txnFiles)
-      if (GraftManifest.publishCas(metaDir, m, conf.value)) {
-        GraftCommitOutcome.record(published = true); return
-      }
-      val claimed = GraftManifest.highestClaimedGen(metaDir, conf.value)
-      base = GraftManifest.loadClaimed(metaDir, claimed, conf.value)
-      g = claimed + 1
-      attempts += 1
-    }
-    throw new IllegalStateException(
-      s"catalog commit on $metaDir lost $attempts CAS races — giving up under contention")
+    })
+    // A replay published nothing: drop the orphaned gen dir.
+    if (published.isEmpty) abort(messages)
+    GraftCommitOutcome.record(published.isDefined)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

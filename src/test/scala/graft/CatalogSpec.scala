@@ -1622,6 +1622,33 @@ class CatalogSpec extends GraftSuite {
       .toSet == Set("pk=1" -> "gen-2/b2", "pk=0" -> "gen-2/c"))
   }
 
+  test("optimistic concurrency: the conflict matrix for delta DML rebases appends, rejects touched files") {
+    import graft.sources.{GraftCommitProtocol, GraftManifest}
+    import org.apache.spark.sql.types.StructType
+    val schema = StructType.fromDDL("id BIGINT, pk BIGINT")
+    def m(gen: Long, entries: (String, String)*) =
+      GraftManifest(gen, schema, Seq("pk"), entries.toSeq)
+    val orig = m(1, "pk=0" -> "gen-1/a", "pk=1" -> "gen-1/b")
+      .copy(fileDVs = Map("gen-1/b" -> "gen-1/dv-b"))
+    val touched = Set("gen-1/a")
+    // Same base: nothing to rebase over.
+    GraftCommitProtocol.requireDeltaRebasable(orig, orig, touched)
+    // An unrelated concurrent append, or a DV on another file, rebases.
+    val appended = orig.copy(gen = 2, entries = orig.entries :+ ("pk=0" -> "gen-2/c"),
+      fileDVs = Map("gen-1/b" -> "gen-2/dv-b"))
+    GraftCommitProtocol.requireDeltaRebasable(orig, appended, touched)
+    // A touched file removed (or rewritten) concurrently conflicts...
+    val removed = orig.copy(gen = 2, entries = Seq("pk=1" -> "gen-1/b", "pk=0" -> "gen-2/a2"))
+    intercept[java.util.ConcurrentModificationException] {
+      GraftCommitProtocol.requireDeltaRebasable(orig, removed, touched)
+    }
+    // ...and so does a DV that moved on a touched file.
+    val dvMoved = orig.copy(gen = 2, fileDVs = orig.fileDVs + ("gen-1/a" -> "gen-2/dv-a"))
+    intercept[java.util.ConcurrentModificationException] {
+      GraftCommitProtocol.requireDeltaRebasable(orig, dvMoved, touched)
+    }
+  }
+
   test("optimistic concurrency: racing appenders all land, no rows lost, generations contiguous") {
     import spark.implicits._
     val t = freshTable("casrace")
@@ -1659,6 +1686,40 @@ class CatalogSpec extends GraftSuite {
       assert(dir.getFileSystem(conf).exists(new Path(dir, s"manifest-$g.txt")),
         s"generation $g missing — CAS must hand out contiguous slots")
     }
+  }
+
+  test("optimistic concurrency: a delta DELETE racing appenders commits or conflicts, never loses rows") {
+    import spark.implicits._
+    val t = freshTable("casracedv")
+    base.writeTo(t).partitionedBy(col("pk")).tableProperty("dml", "dv").create()
+    val writers = 2
+    val rounds = 5
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
+    val appenders = (0 until writers).map { w =>
+      new Thread(() => {
+        try (0 until rounds).foreach { r =>
+          (0L until 10L).map(i => (10000L + w * 1000L + r * 10L + i, i % 3, s"w$w-r$r-$i"))
+            .toDF("id", "pk", "s").writeTo(t).append()
+        } catch { case e: Throwable => errs.add(e) }
+      })
+    }
+    @volatile var deleteError: Throwable = null
+    val deleter = new Thread(() =>
+      try spark.sql(s"DELETE FROM $t WHERE id < 100") catch { case e: Throwable => deleteError = e })
+    (appenders :+ deleter).foreach(_.start())
+    (appenders :+ deleter).foreach(_.join(120000))
+    assert(errs.isEmpty, s"racing appends must all succeed, got: ${errs.peek()}")
+    val deleted = deleteError == null
+    if (!deleted) {
+      val chain = Iterator.iterate(deleteError)(_.getCause).takeWhile(_ != null).toSeq
+      assert(chain.exists(_.isInstanceOf[java.util.ConcurrentModificationException]),
+        s"a losing DELETE must fail as a conflict, got: $deleteError")
+    }
+    // Every appended row landed once; the DELETE applied all or nothing.
+    val df = spark.table(t)
+    assert(df.filter(col("id") >= 10000L).count() == writers * rounds * 10L)
+    assert(df.filter(col("id") < 100L).count() == (if (deleted) 0L else 100L))
+    assert(df.count() == (if (deleted) 200L else 300L) + writers * rounds * 10L)
   }
 
   test("change-feed stream honors admission pacing (inherits the base source's knobs)") {
@@ -2080,6 +2141,50 @@ class CatalogSpec extends GraftSuite {
     base.limit(10).writeTo(t).append()
     assert(GraftManifest.currentGen(dir, conf) == committed + 1)
     assert(spark.table(t).count() == 310)
+  }
+
+  test("crashed CAS writer: a stale claim never blocks data commits (append, delta DELETE, stream epoch)") {
+    import graft.sources.GraftManifest
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import org.apache.spark.sql.streaming.Trigger
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val t = freshTable("casstale")
+    base.writeTo(t).partitionedBy(col("pk")).tableProperty("dml", "dv").create()
+    val dir = new Path(root, "casstale")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = dir.getFileSystem(conf)
+    // A writer that died between claim and body, well past the 30 s stale
+    // window: every data commit path must reap it on its own and land.
+    def plantStaleClaim(): Long = {
+      val committed = GraftManifest.currentGen(dir, conf)
+      val shell = new Path(dir, s"manifest-${committed + 1}.txt")
+      fs.create(shell, true).close()
+      fs.setTimes(shell, System.currentTimeMillis() - 120000L, -1L)
+      committed
+    }
+    def assertLanded(committed: Long, rows: Long): Unit = {
+      assert(GraftManifest.currentGen(dir, conf) == committed + 1)
+      assert(GraftManifest.bodyComplete(dir, committed + 1, conf))
+      assert(spark.table(t).count() == rows)
+    }
+    var committed = plantStaleClaim()
+    base.limit(10).writeTo(t).append()
+    assertLanded(committed, 310)
+    committed = plantStaleClaim()
+    spark.sql(s"DELETE FROM $t WHERE id < 5") // 5 base rows + 5 appended copies
+    assertLanded(committed, 300)
+    committed = plantStaleClaim()
+    val in = MemoryStream[Long]
+    in.addData(1000L until 1020L: _*)
+    val q = in.toDF().select(col("value").as("id"),
+        (col("value") % 3).as("pk"), concat(lit("v"), col("value")).as("s"))
+      .writeStream.trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", tmpDir("casstale_cp")).toTable(t)
+    assert(q.awaitTermination(120000), "streaming drain did not finish")
+    q.stop()
+    assertLanded(committed, 320)
+    assert(spark.table(t).filter(col("id") >= 1000L).count() == 20)
   }
 
   test("CAS claims are content-atomic on the file scheme: visible => complete, no temp residue") {
