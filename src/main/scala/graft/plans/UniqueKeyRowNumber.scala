@@ -22,7 +22,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
  * unique in what it reads, with NULL components comparing equal — the
  * grouping a window's PARTITION BY applies. The keyed upsert store's
  * readers (`StreamingPipeline.readStore` / `readStoreAsOf`) set it from
- * the manifest's `keys=` line: the store's own merge keeps one row per key.
+ * the key columns recorded in the store's catalog manifest: the store's own
+ * merge keeps one row per key.
  * The rule trusts the declaration and never scans to check it (RELY).
  *
  * A `Window` qualifies when ALL of:

@@ -4,6 +4,7 @@ import graft.streaming.{Producer, StreamingPipeline}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 /**
  * A3+A4 end-to-end, Kafka-shaped without a broker (no Kafka jars on this
@@ -69,7 +70,7 @@ class KafkaTopologySpec extends GraftSuite {
             lookup),
           store, Seq("item_name"), Seq(col("data").desc))
         .option("checkpointLocation", cCk)
-        .trigger(StreamingPipeline.availableNowTrigger).start()
+        .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       q.recentProgress.map(_.numInputRows).sum
     }

@@ -7,7 +7,9 @@ import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 
 import graft.operators.{NutritionPipeline, Relational}
+import graft.sources.GraftManifest
 import graft.streaming.StreamingPipeline
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -39,17 +41,17 @@ class KeyedStoreReadSpec extends GraftSuite with AdaptiveSparkPlanHelper {
 
   private def sorted(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
 
-  private def manifests(store: String) =
-    Files.list(Paths.get(store, "_manifests")).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".manifest")).toSeq.sortBy(_.getFileName.toString)
-
-  /** The newest generation through a plain parquet read of its files: schema
-    * inferred, no key declared. */
-  private def plainRead(store: String, manifest: java.nio.file.Path): DataFrame = {
-    val files = Files.readAllLines(manifest, UTF_8).asScala.filter(_.startsWith("f\t"))
-      .map(l => s"$store/${l.split("\t", 3)(2)}").toSeq
-    spark.read.option("basePath", store).parquet(files: _*).drop("__bucket")
+  /** The store's committed catalog manifests, oldest first. */
+  private def manifests(store: String): Seq[GraftManifest] = {
+    val dir = new Path(store)
+    val conf = spark.sparkContext.hadoopConfiguration
+    (0L to GraftManifest.currentGen(dir, conf)).map(GraftManifest.load(dir, _, conf))
   }
+
+  /** A generation through a plain parquet read of its files: schema
+    * inferred, no key declared. */
+  private def plainRead(store: String, manifest: GraftManifest): DataFrame =
+    spark.read.parquet(manifest.entries.map(e => s"$store/${e._2}"): _*)
 
   /** Two generations of a one-key store; returns the store path. */
   private def twoGenerations(): String = {
@@ -63,12 +65,12 @@ class KeyedStoreReadSpec extends GraftSuite with AdaptiveSparkPlanHelper {
 
   test("manifests record the store's keys and schema") {
     val store = twoGenerations()
-    val lines = Files.readAllLines(manifests(store).last, UTF_8).asScala
-    assert(lines.contains("keys=item_name"))
-    val schema = lines.find(_.startsWith("schema=")).map(l =>
-      org.apache.spark.sql.types.DataType.fromJson(l.substring(7)))
-    assert(schema.map(_.asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq)
-      === Some(Seq("item_name", "ingestion_ts", "data")))
+    val m = manifests(store).last
+    assert(m.props.get("store.keys") === Some("item_name"))
+    assert(m.schema.fieldNames.toSeq === Seq("item_name", "ingestion_ts", "data", "__bucket"))
+    assert(m.partCols === Seq("__bucket"))
+    assert(m.entries.nonEmpty && m.entries.forall { case (part, rel) =>
+      part.startsWith("__bucket=") && rel.matches(s"gen-[12]-[0-9a-f]{8}/$part/part-.*\\.parquet") })
   }
 
   test("readStore and readStoreAsOf run no schema-inference job") {
@@ -147,12 +149,14 @@ class KeyedStoreReadSpec extends GraftSuite with AdaptiveSparkPlanHelper {
   }
 
   test("a manifest without keys= and schema= reads as before: no rewrite") {
+    // The catalog manifest always carries a schema; drop the key columns.
     val store = twoGenerations()
     val latest = manifests(store).last
-    val legacy = Files.readAllLines(latest, UTF_8).asScala
-      .filterNot(l => l.startsWith("keys=") || l.startsWith("schema="))
-    Files.write(latest, legacy.mkString("", "\n", "\n").getBytes(UTF_8))
-    Files.deleteIfExists(latest.resolveSibling(s".${latest.getFileName}.crc"))
+    val file = Paths.get(store, s"manifest-${latest.gen}.txt")
+    val legacy = Files.readAllLines(file, UTF_8).asScala
+      .filterNot(_.startsWith("prop=store.keys\t"))
+    Files.write(file, legacy.mkString("", "\n", "\n").getBytes(UTF_8))
+    Files.deleteIfExists(file.resolveSibling(s".${file.getFileName}.crc"))
     val got = NutritionPipeline.enrichmentPipeline(StreamingPipeline.readStore(spark, store))
     assert(windows(got).nonEmpty)
     assert(sorted(got) === sorted(NutritionPipeline.enrichmentPipeline(plainRead(store, latest))))
@@ -221,7 +225,7 @@ class KeyedStoreReadSpec extends GraftSuite with AdaptiveSparkPlanHelper {
           val df = rows.toDF("item_name", "region", "ingestion_ts", "data")
           if (composite) df else df.drop("region")
         }
-        StreamingPipeline.upsertBatch(frame(batch), store, keys, ord, numBuckets = 4)
+        StreamingPipeline.upsertBatch(frame(batch), store, keys, ord)
         val clue = s"seed $seed, commit $commit"
         val got = StreamingPipeline.readStore(spark, store)
         assert(sorted(got) === sorted(Relational.latestPerKey(frame(all), keys, ord)), clue)

@@ -1,11 +1,14 @@
 package graft
 
 import graft.operators.Relational
+import graft.sources.GraftManifest
 import graft.streaming.StreamingPipeline
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 /**
  * Structured Streaming layer (SURVEY.md §3.1 / M3): MemoryStream-driven micro-batches
@@ -16,6 +19,22 @@ class StreamingSpec extends GraftSuite {
   import spark.implicits._
 
   private def ts(s: String) = Timestamp.valueOf(s)
+
+  /** The store's committed catalog manifest. */
+  private def currentManifest(store: String): GraftManifest = {
+    val dir = new Path(store)
+    val conf = spark.sparkContext.hadoopConfiguration
+    GraftManifest.load(dir, GraftManifest.currentGen(dir, conf), conf)
+  }
+
+  /** Store-relative paths of every parquet file on disk under the store. */
+  private def parquetFiles(store: String): Set[String] = {
+    val root = java.nio.file.Paths.get(store)
+    val walk = java.nio.file.Files.walk(root)
+    try walk.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet"))
+      .map(p => root.relativize(p).toString).toSet
+    finally walk.close()
+  }
 
   private lazy val lookup = Seq(
     ("apple", """[{"name":"apple","calories":52}]"""),
@@ -60,7 +79,6 @@ class StreamingSpec extends GraftSuite {
   }
 
   test("bucketed upsert rewrites only the buckets its batch touches") {
-    import org.apache.hadoop.fs.Path
     val store = tmpDir("bucketed") + "/store"
     val keys = Seq("item_name")
     val ord = Seq(col("ingestion_ts").desc)
@@ -69,32 +87,18 @@ class StreamingSpec extends GraftSuite {
     // Seed the store with keys spread over many buckets.
     val seed = (0 until 40).map(i => (s"item_$i", ts("2024-01-01 00:00:00"), i.toDouble))
     StreamingPipeline.upsertBatch(batchDf(seed: _*), store, keys, ord)
-    val fs = new Path(store).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Data files only: the _manifests dir gains a (tiny) file per committed
-    // generation by design, so the untouched-bucket assertion scopes to bucket dirs.
-    def fileStamps(): Map[String, Long] =
-      fs.listStatus(new Path(store))
-        .filter(d => d.isDirectory && d.getPath.getName.startsWith("__bucket="))
-        .flatMap { dir =>
-          fs.listStatus(dir.getPath).filter(_.isFile)
-            .map(f => f.getPath.toString -> f.getModificationTime)
-        }.toMap
-    val before = fileStamps()
-    val bucketDirs = fs.listStatus(new Path(store))
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("__bucket=")).length
-    assert(bucketDirs > 1, "seed keys must span multiple buckets")
-    // One-key batch: only that key's bucket dir may change.
-    Thread.sleep(1100) // local-FS mtime granularity can be 1s
+    val before = currentManifest(store).entries.toSet
+    assert(before.map(_._1).size > 1, "seed keys must span multiple buckets")
+    // One-key batch: only that key's bucket entry may change.
     StreamingPipeline.upsertBatch(
       batchDf(("item_7", ts("2024-01-02 00:00:00"), 700.0)), store, keys, ord)
-    val after = fileStamps()
+    val after = currentManifest(store).entries.toSet
     val touchedBucket = spark.range(1).select(
       pmod(hash(lit("item_7")), lit(StreamingPipeline.DefaultStoreBuckets)))
       .collect().head.getInt(0)
-    val changed = (after.keySet ++ before.keySet).filter(p =>
-      before.get(p) != after.get(p))
+    val changed = (after -- before) ++ (before -- after)
     assert(changed.nonEmpty)
-    assert(changed.forall(_.contains(s"__bucket=$touchedBucket")),
+    assert(changed.forall(_._1 == s"__bucket=$touchedBucket"),
       s"batch touching bucket $touchedBucket must not rewrite others; changed=$changed")
     // Upsert semantics unchanged: last write wins, all other keys intact.
     val readBack = StreamingPipeline.readStore(spark, store)
@@ -106,7 +110,6 @@ class StreamingSpec extends GraftSuite {
   }
 
   test("crashed writer's stale files are invisible: manifest commit is atomic") {
-    import org.apache.hadoop.fs.Path
     val store = tmpDir("crash") + "/store"
     val keys = Seq("item_name")
     val ord = Seq(col("ingestion_ts").desc)
@@ -115,31 +118,26 @@ class StreamingSpec extends GraftSuite {
       rows.toDF("item_name", "ingestion_ts", "calories"), store, keys, ord)
     val committed = StreamingPipeline.readStore(spark, store)
       .orderBy("item_name").collect().toSeq
-    // Simulate a writer that crashed AFTER moving data files but BEFORE the
-    // manifest rename: plant an extra parquet file (conflicting content for an
-    // existing key) directly into a bucket dir.
-    val fs = new Path(store).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staleSrc = tmpDir("crash") + "/stale"
+    // Simulate a writer that crashed AFTER writing its data files but BEFORE
+    // claiming its manifest: plant a parquet file (conflicting content for an
+    // existing key) in an uncommitted gen dir.
+    val committedFiles = parquetFiles(store)
     Seq(("item_3", ts("2030-01-01 00:00:00"), 999999.0))
-      .toDF("item_name", "ingestion_ts", "calories").coalesce(1).write.parquet(staleSrc)
-    val stalePart = fs.listStatus(new Path(staleSrc))
-      .filter(s => s.isFile && s.getPath.getName.startsWith("part-")).head.getPath
-    val bucketDir = fs.listStatus(new Path(store))
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("__bucket=")).head.getPath
-    assert(fs.rename(stalePart, new Path(bucketDir, "part-stale-uncommitted.parquet")))
+      .toDF("item_name", "ingestion_ts", "calories").coalesce(1)
+      .write.parquet(s"$store/gen-2-deadbeef/__bucket=0")
     // The committed store is exactly what it was: the stale file is not listed in
-    // any manifest, so readers never see it (a plain directory read would).
+    // any manifest, so readers never see it.
     val after = StreamingPipeline.readStore(spark, store)
       .orderBy("item_name").collect().toSeq
     assert(after === committed)
-    assert(spark.read.parquet(store).count() === committed.size + 1,
+    assert(parquetFiles(store).size === committedFiles.size + 1,
       "sanity: the stale file IS physically present in the store directory")
     // vacuum reclaims the orphan; the store is unchanged.
     val deleted = StreamingPipeline.vacuumStore(spark, store, graceMs = 0L)
     assert(deleted >= 1)
     assert(StreamingPipeline.readStore(spark, store)
       .orderBy("item_name").collect().toSeq === committed)
-    assert(spark.read.parquet(store).count() === committed.size)
+    assert(parquetFiles(store) === committedFiles)
   }
 
   test("time travel: each committed generation stays a consistent snapshot until vacuum") {
@@ -198,23 +196,6 @@ class StreamingSpec extends GraftSuite {
     assert(back === Map("a" -> "update", "c" -> "delete"))
   }
 
-  test("merge with a different numBuckets is rejected (store pins its bucket count)") {
-    val store = tmpDir("pinned") + "/store"
-    val keys = Seq("item_name")
-    val ord = Seq(col("ingestion_ts").desc)
-    StreamingPipeline.upsertBatch(
-      Seq(("a", ts("2024-01-01 00:00:00"), 1.0)).toDF("item_name", "ingestion_ts", "calories"),
-      store, keys, ord, numBuckets = 16)
-    val e = intercept[IllegalArgumentException] {
-      StreamingPipeline.upsertBatch(
-        Seq(("b", ts("2024-01-01 00:00:00"), 2.0)).toDF("item_name", "ingestion_ts", "calories"),
-        store, keys, ord, numBuckets = 8)
-    }
-    assert(e.getMessage.contains("numBuckets"))
-    // The rejected merge must not have changed the committed store.
-    assert(StreamingPipeline.readStore(spark, store).count() === 1)
-  }
-
   test("a batch with its own __bucket column is rejected before anything is staged") {
     val store = tmpDir("reserved") + "/store"
     val keys = Seq("item_name")
@@ -232,7 +213,8 @@ class StreamingSpec extends GraftSuite {
       assert(e.getMessage.contains("__bucket"))
     }
     assert(StreamingPipeline.storeGenerations(spark, store) === Seq(1L))
-    assert(!new java.io.File(store).list().exists(_.startsWith("_staging-")))
+    assert(new java.io.File(store).list().count(_.startsWith("gen-")) === 1,
+      "the rejected upserts left no gen dir behind")
     assert(StreamingPipeline.readStore(spark, store).collect().toSeq === committed)
   }
 
@@ -244,13 +226,119 @@ class StreamingSpec extends GraftSuite {
       Seq(("k", ts(f"2024-01-$day%02d 00:00:00"), v)).toDF("item_name", "ingestion_ts", "calories"),
       store, keys, ord)
     up(1, 1.0); up(2, 2.0); up(3, 3.0) // three generations of the same key
-    assert(spark.read.parquet(store).count() === 3, "superseded files accumulate until vacuum")
+    assert(parquetFiles(store).size === 3, "superseded files accumulate until vacuum")
     assert(StreamingPipeline.readStore(spark, store).count() === 1)
     val deleted = StreamingPipeline.vacuumStore(spark, store, graceMs = 0L)
     assert(deleted === 2)
     val live = StreamingPipeline.readStore(spark, store)
     assert(live.count() === 1)
     assert(live.select("calories").as[Double].collect().head === 3.0)
+  }
+
+  test("a batch re-run after a restart commits nothing: upsertSink is exactly once") {
+    val dir = tmpDir("replay")
+    val (channel, store, ckpt) = (s"$dir/channel", s"$dir/store", s"$dir/ckpt")
+    def drain(): Seq[org.apache.spark.sql.streaming.StreamingQueryProgress] = {
+      val q = StreamingPipeline.upsertSink(
+          StreamingPipeline.fromWire(StreamingPipeline.fileChannel(spark, channel))
+            .withColumn("n", length(col("item_name"))),
+          store, Seq("item_name"), Seq(col("n").desc))
+        .option("checkpointLocation", ckpt).trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      q.recentProgress.toSeq
+    }
+    def land(names: String*): Unit =
+      names.toDF("value").write.mode("append").json(channel)
+    land("apple", "banana"); drain()
+    land("banana", "cherry"); drain()
+    val gens = StreamingPipeline.storeGenerations(spark, store)
+    assert(gens === Seq(1L, 2L))
+    val rows = StreamingPipeline.readStore(spark, store).collect().map(_.toString).sorted.toSeq
+    val genDirs = new java.io.File(store).list().filter(_.startsWith("gen-")).toSet
+    // Forget that batch 1 committed: the restarted query re-runs it.
+    java.nio.file.Files.delete(java.nio.file.Paths.get(ckpt, "commits", "1"))
+    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(ckpt, "commits", ".1.crc"))
+    val replay = drain()
+    assert(replay.exists(p => p.batchId == 1 && p.numInputRows > 0),
+      "sanity: batch 1 ran again")
+    assert(StreamingPipeline.storeGenerations(spark, store) === gens)
+    assert(StreamingPipeline.readStore(spark, store).collect().map(_.toString).sorted.toSeq
+      === rows)
+    assert(new java.io.File(store).list().filter(_.startsWith("gen-")).toSet === genDirs,
+      "the replay removed its own gen dir")
+  }
+
+  test("concurrent upserts: disjoint buckets both land, overlapping ones fail cleanly") {
+    val store = tmpDir("concurrent") + "/store"
+    val keys = Seq("item_name")
+    val ord = Seq(col("ingestion_ts").desc)
+    val rnd = new scala.util.Random(7)
+    var seq = 0
+    // Unique ingestion times, so latest-per-key is a total order.
+    def batch(n: Int): Seq[(String, Timestamp, Double)] = Seq.fill(n) {
+      seq += 1
+      val name = if (rnd.nextInt(3) == 0) s"shared_${rnd.nextInt(4)}" else s"item_$seq"
+      (name, new Timestamp(1700000000000L + seq * 1000L), seq.toDouble)
+    }
+    val seed = batch(8)
+    StreamingPipeline.upsertBatch(seed.toDF("item_name", "ingestion_ts", "calories"),
+      store, keys, ord)
+    val rounds = Seq.fill(3)(Seq.fill(4)(batch(1 + rnd.nextInt(3))))
+    val landed = scala.collection.mutable.ArrayBuffer(seed)
+    val failures = scala.collection.mutable.ArrayBuffer.empty[Throwable]
+    for (round <- rounds) {
+      val outcomes = round.map { rows =>
+        val df = rows.toDF("item_name", "ingestion_ts", "calories")
+        val t = new Thread(() => StreamingPipeline.upsertBatch(df, store, keys, ord))
+        var err: Option[Throwable] = None
+        t.setUncaughtExceptionHandler((_, e) => err = Some(e))
+        t.start()
+        (rows, t, () => err)
+      }
+      outcomes.foreach { case (rows, t, err) =>
+        t.join(240000)
+        assert(!t.isAlive)
+        err() match {
+          case Some(e) => failures += e
+          case None => landed += rows
+        }
+      }
+    }
+    info(s"${failures.size} of ${rounds.flatten.size} concurrent upserts conflicted")
+    assert(failures.forall(_.isInstanceOf[java.util.ConcurrentModificationException]),
+      failures.map(_.toString).mkString("; "))
+    val want = Relational.latestPerKey(
+      landed.flatten.toSeq.toDF("item_name", "ingestion_ts", "calories"), keys, ord)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(StreamingPipeline.readStore(spark, store)) === rows(want),
+      s"${failures.size} of ${rounds.flatten.size} concurrent upserts failed")
+    StreamingPipeline.vacuumStore(spark, store, graceMs = 0L)
+    assert(parquetFiles(store) === currentManifest(store).entries.map(_._2).toSet)
+  }
+
+  test("the store is a graft catalog table: same rows, versions and history") {
+    val parent = tmpDir("storecat")
+    val store = s"$parent/store"
+    val keys = Seq("item_name")
+    val ord = Seq(col("ingestion_ts").desc)
+    def batch(rows: (String, java.sql.Timestamp, Double)*) =
+      rows.toDF("item_name", "ingestion_ts", "calories")
+    StreamingPipeline.upsertBatch(
+      batch(("a", ts("2024-01-01 00:00:00"), 1.0), ("b", ts("2024-01-01 00:00:00"), 2.0)),
+      store, keys, ord)
+    StreamingPipeline.upsertBatch(
+      batch(("a", ts("2024-01-02 00:00:00"), 100.0), ("c", ts("2024-01-02 00:00:00"), 3.0)),
+      store, keys, ord)
+    spark.conf.set("spark.sql.catalog.gstore", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.gstore.root", parent)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(spark.table("gstore.store").drop("__bucket")) ===
+      rows(StreamingPipeline.readStore(spark, store)))
+    assert(rows(spark.sql("SELECT * FROM gstore.store VERSION AS OF 1").drop("__bucket")) ===
+      rows(StreamingPipeline.readStoreAsOf(spark, store, 1L)))
+    val history = spark.sql("SELECT gen FROM gstore.`store$history`").as[Long].collect()
+    assert(history.filter(_ >= 1).sorted.toSeq === StreamingPipeline.storeGenerations(spark, store))
+    assert(StreamingPipeline.storeGenerations(spark, store) === Seq(1L, 2L))
   }
 
   test("watermarked tumbling window emits closed windows in append mode") {
@@ -378,7 +466,7 @@ class StreamingSpec extends GraftSuite {
         .groupBy("event_type").agg(count(lit(1)).as("n"))
         .writeStream.outputMode("complete").format("memory").queryName("avnow_t")
         .option("checkpointLocation", ck)
-        .trigger(StreamingPipeline.availableNowTrigger).start()
+        .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
     runOnce()
