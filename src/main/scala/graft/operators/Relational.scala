@@ -23,7 +23,10 @@ object Relational {
    */
   def latestPerKey(df: DataFrame, keys: Seq[String], ordering: Seq[Column]): DataFrame = {
     val w = Window.partitionBy(keys.map(col): _*).orderBy(ordering: _*)
-    df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
+    // The rank rides in a helper column whose name no input column uses.
+    val rn = Iterator.from(0).map(i => if (i == 0) "__rn" else s"__rn$i")
+      .find(n => !df.columns.exists(_.equalsIgnoreCase(n))).get
+    df.withColumn(rn, row_number().over(w)).filter(col(rn) === 1).drop(rn)
   }
 
   /** Top-k rows per group under a total order — one shuffle on `partCols`. */

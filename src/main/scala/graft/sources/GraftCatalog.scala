@@ -636,8 +636,9 @@ class GraftCatalog extends TableCatalog
 }
 
 /** One committed snapshot: entries are (partition path like "pk=3" or "", data
-  * file); `txns` records (queryId:epochId) streaming commits already visible,
-  * so a replayed micro-batch after restart is recognized and skipped. */
+  * file); `txns` holds each streaming query's newest visible epoch as
+  * `queryId:epochId` (one mark per query), so a replayed micro-batch after
+  * restart is recognized and skipped. */
 case class GraftManifest(gen: Long, schema: StructType, partCols: Seq[String],
     entries: Seq[(String, String)], txns: Set[String] = Set.empty,
     fileStats: Map[String, String] = Map.empty,
@@ -1154,6 +1155,23 @@ object GraftCommitProtocol {
     throw new java.util.ConcurrentModificationException(
       s"concurrent catalog commit conflict: $msg — re-run the statement " +
         "against the new table state")
+
+  /** A streaming sink's exactly-once ledger keeps ONE high-water mark per
+    * query, `<queryId>:<batch>`: batches commit in order, so batch `batch`
+    * of `queryId` is already visible when any mark of that query is at or
+    * past it. Other ledger keys (`batch:`, `copy:`, …) are not marks of a
+    * query id and are never read or dropped here. */
+  def epochReplayed(txns: Set[String], queryId: String, batch: Long): Boolean =
+    txns.exists(t => epochOf(t, queryId).exists(_ >= batch))
+
+  /** The ledger after committing `batch` of `queryId`: that query's marks
+    * replaced by one, so the ledger does not grow with the stream. */
+  def epochMarked(txns: Set[String], queryId: String, batch: Long): Set[String] =
+    txns.filterNot(t => epochOf(t, queryId).isDefined) + s"$queryId:$batch"
+
+  private def epochOf(txn: String, queryId: String): Option[Long] =
+    if (txn.startsWith(s"$queryId:")) txn.substring(queryId.length + 1).toLongOption
+    else None
 
   def rebasedEntries(mode: String, orig: GraftManifest, base: GraftManifest,
       fresh: Seq[(String, String)], staticFilters: Array[Filter],
@@ -4018,15 +4036,14 @@ class GraftStreamingWrite(dir: Path, prev: GraftManifest, writeSchema: StructTyp
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     val c = conf.value
     val fresh = messages.flatMap { case GraftFilesMessage(fs, _) => fs }.toSeq
-    val key = s"$queryId:$epochId"
     // An epoch commit is a pure append + txn mark, so it rebases onto ANY
     // concurrent commit (B177); the exactly-once dedup check re-evaluates
     // against each base it lands on — a replayed epoch is already visible.
     GraftManifest.publishNext(dir, c, cur =>
-      if (cur.txns.contains(key)) None
+      if (GraftCommitProtocol.epochReplayed(cur.txns, queryId, epochId)) None
       else Some(cur.withFileMeta(fresh).copy(gen = cur.gen + 1,
         entries = cur.entries ++ fresh.map(f => (f.part, f.rel)),
-        txns = cur.txns + key)))
+        txns = GraftCommitProtocol.epochMarked(cur.txns, queryId, epochId))))
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {

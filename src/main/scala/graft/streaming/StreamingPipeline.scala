@@ -1,10 +1,18 @@
 package graft.streaming
 
-import graft.operators.Relational
+import graft.SerializableHadoopConf
 import graft.plans.UniqueKeyRowNumberRule
-import graft.sources.{GraftCatalogOps, GraftCommitProtocol, GraftManifest}
+import graft.sources.{GraftCatalogOps, GraftCommitProtocol, GraftFileRecord, GraftFileSlice,
+  GraftFilesMessage, GraftManifest, GraftParquetRead, GraftRowWriter}
 import org.apache.hadoop.fs.Path
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, BoundReference, Cast, Expression,
+  JoinedRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
+import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.execution.datasources.parquet.ParquetOptions
 import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -81,14 +89,19 @@ object StreamingPipeline {
    * with atomic visibility.
    *
    * The store directory is a graft catalog table ([[GraftManifest]] files plus
-   * `CURRENT`) partitioned by `__bucket = pmod(hash(keys), numBuckets)`, so a
-   * micro-batch merges ONLY the buckets its keys land in: read the touched
-   * buckets' committed files, union the batch, re-rank latest-per-key, write
-   * the replacement content into this writer's own `gen-<g>-<uuid8>` dir, then
-   * commit the next manifest through [[GraftManifest.publishNext]]. Cost is
-   * O(batch × bucket-size) per batch — the per-key cost model of the
-   * reference's Cassandra PK store — instead of O(store) per batch. Untouched
-   * buckets are never read or written; their entries carry forward.
+   * `CURRENT`) partitioned by `__bucket = pmod(hash(keys), numBuckets)`. A
+   * merge is ONE Spark job: the batch is evaluated once and only its rows
+   * are shuffled, to one task per bucket. A task that receives rows reads
+   * its bucket's committed files, sorts them with the batch rows by (keys,
+   * `ordering`) in Spark's spillable sorter, keeps the first row per key
+   * (NULL keys group together) and writes the winners into this writer's
+   * own `gen-<g>-<uuid8>` dir; the driver then commits the next manifest
+   * through [[GraftManifest.publishNext]]. A bucket the batch does not touch
+   * is never read or written, and its entries carry forward. The cost is the
+   * batch plus the buckets it touches — but a batch of n hashed keys misses
+   * a given bucket with probability (15/16)^n, under 1% from n = 72, so a
+   * batch of a few hundred keys rewrites practically the whole store, as a
+   * copy-on-write store must.
    *
    * The commit rebases by the catalog's dynamic-partition-overwrite rule
    * ([[GraftCommitProtocol.rebasedEntries]]): a concurrent commit on other
@@ -96,25 +109,27 @@ object StreamingPipeline {
    * this merge replaces fails it with `ConcurrentModificationException`. A
    * merge that publishes nothing deletes its own `gen-…` dir; a writer that
    * crashes before its claim leaves the previous generation fully visible, and
-   * [[vacuumStore]] reclaims what it wrote.
+   * [[vacuumStore]] reclaims what it wrote. An empty batch publishes nothing.
    *
    * The first upsert creates the store as generation 0 (no files), recording
    * the schema (bucket column included), the key columns and
    * [[DefaultStoreBuckets]]; every upsert reads the bucket count from the
-   * manifest. Each commit records the merge's schema and key columns, which
-   * [[readStore]], [[readStoreAsOf]] and the next merge read use instead of
-   * parquet schema inference. A batch with its own `__bucket` column is
-   * rejected before anything is written: that name is the store's bucket
-   * column.
+   * manifest. Batch columns map onto the store's by name, as `unionByName`
+   * maps them, and a batch `unionByName` would refuse fails the merge. Each
+   * commit records the merge's schema and key columns, which [[readStore]],
+   * [[readStoreAsOf]] and the next merge read use instead of parquet schema
+   * inference. A batch with its own `__bucket` column is rejected before
+   * anything is written: that name is the store's bucket column.
    */
   def upsertBatch(batch: DataFrame, path: String, keys: Seq[String],
                   ordering: Seq[Column]): Unit =
     merge(batch, path, keys, ordering, None)
 
-  /** [[upsertBatch]], recording `txn` in the manifest's txn ledger: a merge
-    * whose txn is already there publishes nothing. */
+  /** [[upsertBatch]] as batch `txn._2` of streaming query `txn._1`: a merge
+    * whose batch the manifest's txn ledger already holds publishes nothing
+    * ([[GraftCommitProtocol.epochReplayed]]). */
   private def merge(batch: DataFrame, path: String, keys: Seq[String],
-                    ordering: Seq[Column], txn: Option[String]): Unit = {
+                    ordering: Seq[Column], txn: Option[(String, Long)]): Unit = {
     require(!batch.columns.exists(_.equalsIgnoreCase(BucketCol)),
       s"upsert batch has a column named $BucketCol, which the store reserves for " +
         "its bucket directories; rename it before upserting")
@@ -129,42 +144,96 @@ object StreamingPipeline {
         Seq(BucketCol), Nil, props = Map(keysProp,
           BucketsProp -> DefaultStoreBuckets.toString)), conf)
     val planned = GraftManifest.load(root, GraftManifest.currentGen(root, conf), conf)
-    def bucketed(df: DataFrame) = df.withColumn(BucketCol,
+    // Batch columns onto the store's, as a union with its rows would map
+    // them; stored rows read back nullable, as any file scan reads them.
+    val aligned =
+      if (planned.entries.isEmpty) batch
+      else spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        StructType(planned.dataSchema.map(_.copy(nullable = true)))).unionByName(batch)
+    val bucketed = aligned.withColumn(BucketCol,
       pmod(hash(keys.map(col): _*), lit(planned.props(BucketsProp).toInt)))
-    // Partition pruning metadata, not data: at most numBuckets small integers.
-    val touched = bucketed(batch).select(BucketCol).distinct()
-      .collect().map(r => s"$BucketCol=${r.getInt(0)}").toSet
-    if (touched.isEmpty) return
-    val oldPaths = planned.entries.collect {
-      case (part, rel) if touched(part) => GraftManifest.resolveRel(root, rel).toString
-    }
-    // Inputs are the touched buckets' committed files only, read without the
-    // bucket column (recomputed after the union). No key declaration: the
-    // union repeats keys.
-    val input =
-      if (oldPaths.isEmpty) batch
-      else readFiles(spark, oldPaths, planned.dataSchema, Nil).unionByName(batch)
-    val merged = Relational.latestPerKey(bucketed(input), keys, ordering)
     val genRel = s"gen-${planned.gen + 1}-${java.util.UUID.randomUUID().toString.take(8)}"
     val genDir = new Path(root, genRel)
     var published: Option[GraftManifest] = None
     try {
-      // No _SUCCESS marker: every file under a gen dir is a data file.
-      merged.repartition(col(BucketCol)).write
-        .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
-        .partitionBy(BucketCol).parquet(genDir.toString)
-      val fresh = fs.listStatus(genDir).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith(s"$BucketCol=")).flatMap { part =>
-          fs.listStatus(new Path(genDir, part))
-            .map(f => part -> s"$genRel/$part/${f.getPath.getName}")
-        }
-      published = GraftManifest.publishNext(root, conf, base =>
-        if (txn.exists(base.txns)) None
-        else Some(base.copy(gen = base.gen + 1, schema = merged.schema,
-          entries = GraftCommitProtocol.rebasedEntries(
-            "dynamic", planned, base, fresh, Array.empty, Set.empty),
-          txns = base.txns ++ txn, props = base.props + keysProp)))
+      val fresh = mergeBuckets(bucketed, keys, ordering, root, planned, genDir)
+      if (fresh.nonEmpty)
+        published = GraftManifest.publishNext(root, conf, base =>
+          if (txn.exists { case (q, b) => GraftCommitProtocol.epochReplayed(base.txns, q, b) }) None
+          else Some(base.withFileMeta(fresh).copy(gen = base.gen + 1, schema = bucketed.schema,
+            entries = GraftCommitProtocol.rebasedEntries("dynamic", planned, base,
+              fresh.map(f => f.part -> f.rel), Array.empty, Set.empty),
+            txns = txn.fold(base.txns) { case (q, b) =>
+              GraftCommitProtocol.epochMarked(base.txns, q, b) },
+            props = base.props + keysProp)))
     } finally if (published.isEmpty) fs.delete(genDir, true)
+  }
+
+  /** The merge's one Spark job: `bucketed`'s rows go to one task per
+    * bucket by an identity partitioner; each task that receives rows merges
+    * them with its bucket's files in `planned` and writes the first row per
+    * key under `genDir`. Returns the files written; none for an empty batch. */
+  private def mergeBuckets(bucketed: DataFrame, keys: Seq[String], ordering: Seq[Column],
+      root: Path, planned: GraftManifest, genDir: Path): Seq[GraftFileRecord] = {
+    val spark = bucketed.sparkSession
+    val schema = bucketed.schema
+    val attrs = GraftBridge.analyzed(bucketed).output
+    // (keys, ordering), resolved by the analyzer and bound to row positions.
+    val order = GraftBridge.analyzed(bucketed.sort(keys.map(col) ++ ordering: _*)) match {
+      case s: Sort => s.order.map(BindReferences.bindReference(_, attrs))
+      case other => throw new IllegalStateException(s"expected Sort, got: $other")
+    }
+    // Stored rows come back in the store's column order, which the union
+    // kept; widen them to the batch's types and append their bucket.
+    val stored = planned.dataSchema
+    val tz = Option(spark.sessionState.conf.sessionLocalTimeZone)
+    val storedToBatch: Seq[Expression] = stored.fields.toSeq.zip(schema.fields).zipWithIndex
+      .map { case ((have, want), i) =>
+        val ref = BoundReference(i, have.dataType, nullable = true)
+        if (have.dataType == want.dataType) ref else Cast(ref, want.dataType, tz)
+      } :+ BoundReference(stored.length, IntegerType, nullable = false)
+    val reader =
+      if (planned.entries.isEmpty) None
+      else Some(GraftParquetRead.readerFactory(root.toString, planned, stored, allowColumnar = false))
+    val oldFiles: Map[Int, Seq[GraftFileSlice]] = planned.entries.groupBy(_._1).map {
+      case (part, es) => part.stripPrefix(s"$BucketCol=").toInt ->
+        es.map { case (_, rel) => GraftFileSlice(part, rel, planned.fileBytes.getOrElse(rel, -1L)) }
+    }
+    // The session's parquet codec, as a DataFrame parquet write uses it.
+    val hconf = spark.sessionState.newHadoopConf()
+    hconf.set("parquet.compression",
+      new ParquetOptions(Map.empty[String, String], spark.sessionState.conf).compressionCodecClassName)
+    val conf = new SerializableHadoopConf(hconf)
+    val (tableDir, dir) = (root.toString, genDir.toString)
+    GraftBridge.shuffleByIntColumn(bucketed.queryExecution.toRdd, schema,
+        schema.fieldIndex(BucketCol), planned.props(BucketsProp).toInt)
+      .mapPartitionsWithIndex { (bucket, batchRows) =>
+        if (!batchRows.hasNext) Iterator.empty
+        else {
+          val sorter = GraftBridge.externalRowSorter(schema, order)
+          batchRows.foreach(r => sorter.insertRow(r.asInstanceOf[UnsafeRow]))
+          lazy val toBatch = UnsafeProjection.create(storedToBatch)
+          val withBucket = new JoinedRow(null, InternalRow(bucket))
+          for (factory <- reader; slice <- oldFiles.getOrElse(bucket, Nil)) {
+            val sized = if (slice.len >= 0) slice else slice.copy(len =
+              new Path(tableDir).getFileSystem(conf.value)
+                .getFileStatus(GraftManifest.resolveRel(new Path(tableDir), slice.rel)).getLen)
+            val rows = factory.createReader(sized)
+            try while (rows.next()) sorter.insertRow(toBatch(withBucket.withLeft(rows.get())))
+            finally rows.close()
+          }
+          val sameKey = GenerateOrdering.generate(order.take(keys.size))
+          val writer = new GraftRowWriter(schema, Seq(BucketCol), dir, conf, bucket,
+            TaskContext.get().taskAttemptId())
+          try {
+            var prev: InternalRow = null
+            sorter.sort().foreach { r =>
+              if (prev == null || sameKey.compare(prev, r) != 0) { writer.write(r); prev = r.copy() }
+            }
+            Iterator.single(writer.commit().asInstanceOf[GraftFilesMessage])
+          } catch { case e: Throwable => writer.abort(); throw e }
+        }
+      }.collect().toSeq.flatMap(_.files)
   }
 
   /**
@@ -293,16 +362,16 @@ object StreamingPipeline {
   }
 
   /** A9 as a streaming sink: foreachBatch keyed upsert, exactly once per
-    * batch. Batch `b` of query `q` commits under txn `q:b` — the key form of
-    * the catalog's streaming write — so a batch Spark re-runs after a restart
-    * publishes nothing. */
+    * batch. Batch `b` of query `q` commits the ledger mark `q:b` — the
+    * catalog streaming write's high-water mark, one per query — so a batch
+    * Spark re-runs after a restart publishes nothing. */
   def upsertSink(stream: DataFrame, path: String, keys: Seq[String],
                  ordering: Seq[Column]): DataStreamWriter[Row] =
     stream.writeStream.outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val queryId = batch.sparkSession.sparkContext
           .getLocalProperty(StreamExecution.QUERY_ID_KEY)
-        merge(batch, path, keys, ordering, Option(queryId).map(q => s"$q:$batchId"))
+        merge(batch, path, keys, ordering, Option(queryId).map(_ -> batchId))
       }
 
   /** B10: watermarked tumbling-window aggregation over an event stream. */

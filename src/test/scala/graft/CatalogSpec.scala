@@ -122,6 +122,27 @@ class CatalogSpec extends GraftSuite {
     assert(gens.nonEmpty)
   }
 
+  test("streaming sink keeps one txn mark per query, however many epochs commit") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val t = freshTable("streamledger")
+    base.limit(0).writeTo(t).partitionedBy(col("pk")).create()
+    val in = MemoryStream[Long]
+    val q = in.toDF().select(col("value").as("id"),
+        (col("value") % 3).as("pk"), concat(lit("v"), col("value")).as("s"))
+      .writeStream.option("checkpointLocation", tmpDir("graft_cat_ledger")).toTable(t)
+    try (0 until 5).foreach { b =>
+      in.addData(b * 10L until b * 10L + 10L: _*)
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(spark.table(t).count() == 50)
+    val dir = new Path(root, "streamledger")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val m = graft.sources.GraftManifest.load(dir, graft.sources.GraftManifest.currentGen(dir, conf), conf)
+    assert(m.txns.filter(_.startsWith(s"${q.id}:")) == Set(s"${q.id}:4"), m.txns.toString)
+  }
+
   test("ALTER TABLE ADD COLUMN backfills NULL on old generations without rewrite") {
     val t = freshTable("evolve")
     base.writeTo(t).partitionedBy(col("pk")).create()

@@ -236,4 +236,43 @@ class KeyedStoreReadSpec extends GraftSuite with AdaptiveSparkPlanHelper {
       }
     }
   }
+
+  test("seeded sweep: nullable ordering column, batches of 0 to 30 keys") {
+    // A NULL `prio` sorts last, so a row with a priority beats every row
+    // without one; ingestion times are unique, so every order is total. An
+    // empty batch must publish no generation.
+    val prioOrd = Seq(col("prio").asc_nulls_last, col("ingestion_ts").desc)
+    for (seed <- 11 to 14) {
+      val rnd = new scala.util.Random(seed)
+      val composite = seed % 2 == 0
+      val keys = if (composite) Seq("item_name", "region") else Seq("item_name")
+      val store = tmpDir(s"prio$seed") + "/store"
+      var seq = 0
+      var all = Seq.empty[(String, String, Integer, Timestamp, String)]
+      def frame(rows: Seq[(String, String, Integer, Timestamp, String)]) = {
+        val df = rows.toDF("item_name", "region", "prio", "ingestion_ts", "data")
+        if (composite) df else df.drop("region")
+      }
+      for ((size, commit) <- Seq(0, 1, 2, 30, 0, 2, 30, 1).zipWithIndex) {
+        val batch = Seq.fill(size) {
+          seq += 1
+          val name = if (rnd.nextInt(8) == 0) null else s"item_${rnd.nextInt(20)}"
+          val region = if (rnd.nextInt(5) == 0) null else s"r${rnd.nextInt(3)}"
+          val prio: Integer = if (rnd.nextInt(3) == 0) null else Int.box(rnd.nextInt(3))
+          (name, region, prio, new Timestamp(1700000000000L + seq * 1000L), payload(seq))
+        }
+        all ++= batch
+        // No store before the first upsert.
+        val gensBefore =
+          if (commit == 0) Nil else StreamingPipeline.storeGenerations(spark, store)
+        StreamingPipeline.upsertBatch(frame(batch), store, keys, prioOrd)
+        val clue = s"seed $seed, commit $commit, batch of $size"
+        val gensAfter = StreamingPipeline.storeGenerations(spark, store)
+        if (size == 0) assert(gensAfter === gensBefore, clue)
+        else assert(gensAfter === gensBefore :+ (gensBefore.lastOption.getOrElse(0L) + 1), clue)
+        assert(sorted(StreamingPipeline.readStore(spark, store)) ===
+          sorted(Relational.latestPerKey(frame(all), keys, prioOrd)), clue)
+      }
+    }
+  }
 }

@@ -36,6 +36,17 @@ class RelationalSpec extends GraftSuite {
     assert(r.length === 1 && r.head.getString(2) === "b")
   }
 
+  test("latestPerKey keeps a user column named like its rank helper") {
+    val df = Seq(("k", 1, 7L), ("k", 2, 8L), ("j", 0, 9L)).toDF("key", "v", "__rn")
+    val r = Relational.latestPerKey(df, Seq("key"), Seq(col("v").desc))
+    assert(r.columns.toSeq === Seq("key", "v", "__rn"))
+    assert(r.as[(String, Int, Long)].collect().toSet === Set(("k", 2, 8L), ("j", 0, 9L)))
+    val upper = Relational.latestPerKey(df.withColumnRenamed("__rn", "__RN")
+      .withColumn("__rn1", lit(1)), Seq("key"), Seq(col("v").desc))
+    assert(upper.columns.toSeq === Seq("key", "v", "__RN", "__rn1"))
+    assert(upper.count() === 2)
+  }
+
   test("topKPerGroup returns exactly k under total order") {
     val df = Tables.orders(spark, sfTiny)
     val top = Relational.topKPerGroup(df, Seq("o_orderpriority"),

@@ -78,6 +78,110 @@ class StreamingSpec extends GraftSuite {
     } finally q.stop()
   }
 
+  test("upsertSink keeps one txn mark per query, however many batches commit") {
+    implicit val ctx = spark.sqlContext
+    val store = tmpDir("ledger") + "/store"
+    val in = MemoryStream[(String, Timestamp)]
+    val q = StreamingPipeline.upsertSink(in.toDF.toDF("item_name", "ingestion_ts"), store,
+        Seq("item_name"), Seq(col("ingestion_ts").desc))
+      .trigger(Trigger.ProcessingTime(0)).start()
+    try (0 until 5).foreach { b =>
+      in.addData((s"item_$b", ts(s"2024-01-0${b + 1} 00:00:00")))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(StreamingPipeline.storeGenerations(spark, store) === (1L to 5L))
+    val txns = currentManifest(store).txns
+    assert(txns.filter(_.startsWith(s"${q.id}:")) === Set(s"${q.id}:4"), txns.toString)
+  }
+
+  test("upsertBatch runs exactly one Spark job") {
+    val store = tmpDir("onejob") + "/store"
+    val keys = Seq("item_name")
+    val ord = Seq(col("ingestion_ts").desc)
+    def batchDf(from: Int, until: Int, day: Int) = (from until until)
+      .map(i => (s"item_$i", ts(s"2024-01-0$day 00:00:00"), i.toDouble))
+      .toDF("item_name", "ingestion_ts", "calories")
+    StreamingPipeline.upsertBatch(batchDf(0, 40, 1), store, keys, ord)
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("one-upsert", "upsert")
+      StreamingPipeline.upsertBatch(batchDf(20, 60, 2), store, keys, ord)
+      // Listener events arrive in order: once the marker job shows, every
+      // job the upsert started has shown too.
+      sc.setJobGroup("one-upsert-marker", "marker")
+      sc.parallelize(Seq(1)).count()
+      val deadline = System.nanoTime() + 10000000000L
+      while (!groups.contains("one-upsert-marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(groups.contains("one-upsert-marker"))
+      assert(groups.asScala.count(_ == "one-upsert") === 1, groups.asScala.mkString(", "))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val readBack = StreamingPipeline.readStore(spark, store)
+    assert(readBack.count() === 60)
+    assert(readBack.filter(col("calories") === 30.0).select("ingestion_ts").as[Timestamp]
+      .collect().toSeq === Seq(ts("2024-01-02 00:00:00")))
+  }
+
+  test("an upsert never opens a bucket its batch does not touch") {
+    val store = tmpDir("untouched") + "/store"
+    val keys = Seq("item_name")
+    val ord = Seq(col("ingestion_ts").desc)
+    val seed = (0 until 40).map(i => (s"item_$i", ts("2024-01-01 00:00:00"), i.toDouble))
+    StreamingPipeline.upsertBatch(seed.toDF("item_name", "ingestion_ts", "calories"),
+      store, keys, ord)
+    val touched = spark.range(1).select(
+      pmod(hash(lit("item_7")), lit(StreamingPipeline.DefaultStoreBuckets)))
+      .collect().head.getInt(0)
+    val (_, victimRel) = currentManifest(store).entries
+      .find(_._1 != s"__bucket=$touched").get
+    val victim = java.nio.file.Paths.get(store, victimRel)
+    val original = java.nio.file.Files.readAllBytes(victim)
+    java.nio.file.Files.write(victim, "not parquet".getBytes)
+    try StreamingPipeline.upsertBatch(
+      Seq(("item_7", ts("2024-01-02 00:00:00"), 700.0)).toDF("item_name", "ingestion_ts",
+        "calories"), store, keys, ord)
+    finally java.nio.file.Files.write(victim, original)
+    assert(currentManifest(store).entries.exists(_._2 == victimRel),
+      "the untouched bucket's file carries forward")
+    val readBack = StreamingPipeline.readStore(spark, store)
+    assert(readBack.count() === 40)
+    assert(readBack.filter(col("item_name") === "item_7")
+      .select("calories").as[Double].collect().head === 700.0)
+  }
+
+  test("a store whose manifest records no file sizes still merges every stored row") {
+    // Stores written before merges recorded per-file metadata carry bare
+    // `entry=<part>\t<file>` lines; the merge must size such files itself.
+    val store = tmpDir("sizeless") + "/store"
+    val keys = Seq("item_name")
+    val ord = Seq(col("ingestion_ts").desc)
+    def batchDf(rows: Seq[(String, Timestamp, Double)]) =
+      rows.toDF("item_name", "ingestion_ts", "calories")
+    val seed = (0 until 40).map(i => (s"item_$i", ts("2024-01-01 00:00:00"), i.toDouble))
+    StreamingPipeline.upsertBatch(batchDf(seed), store, keys, ord)
+    val file = java.nio.file.Paths.get(store, s"manifest-${currentManifest(store).gen}.txt")
+    val bare = java.nio.file.Files.readAllLines(file).asScala.map { l =>
+      if (l.startsWith("entry=")) l.split("\t").take(2).mkString("\t") else l
+    }
+    java.nio.file.Files.write(file, bare.mkString("", "\n", "\n").getBytes)
+    java.nio.file.Files.deleteIfExists(file.resolveSibling(s".${file.getFileName}.crc"))
+    assert(currentManifest(store).fileBytes.isEmpty)
+    val update = (30 until 50).map(i => (s"item_$i", ts("2024-01-02 00:00:00"), 100.0 + i))
+    StreamingPipeline.upsertBatch(batchDf(update), store, keys, ord)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(StreamingPipeline.readStore(spark, store)) ===
+      rows(Relational.latestPerKey(batchDf(seed ++ update), keys, ord)))
+  }
+
   test("bucketed upsert rewrites only the buckets its batch touches") {
     val store = tmpDir("bucketed") + "/store"
     val keys = Seq("item_name")
