@@ -20,8 +20,9 @@ import org.apache.spark.sql.connector.expressions.{Expression, Expressions, Sort
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, SupportsDynamicOverwrite, SupportsOverwrite, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetOutputWriter, ParquetWriteSupport}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetOutputWriter, ParquetWriteSupport}
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.{AlwaysTrue, And, EqualNullSafe, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Not, Or, StringContains, StringEndsWith, StringStartsWith}
 import org.apache.spark.sql.types.{DataType, DateType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -906,7 +907,7 @@ object GraftManifest {
   }
 
   def publish(dir: Path, m: GraftManifest, conf: Configuration): Unit = {
-    val fs = dir.getFileSystem(conf)
+    val fs = GraftLocalFileSystem.forPath(dir, conf)
     fs.mkdirs(dir)
     val mf = new Path(dir, s"manifest-${m.gen}.txt")
     val out = fs.create(mf, true)
@@ -927,7 +928,7 @@ object GraftManifest {
    * hole).
    */
   def publishCas(dir: Path, m: GraftManifest, conf: Configuration): Boolean = {
-    val fs = dir.getFileSystem(conf)
+    val fs = GraftLocalFileSystem.forPath(dir, conf)
     fs.mkdirs(dir)
     val mf = new Path(dir, s"manifest-${m.gen}.txt")
     // CONTENT-ATOMIC claim on the file scheme: write the full body to a
@@ -1098,11 +1099,14 @@ object GraftManifest {
     * later generations may already have advanced it, and a stale writer's
     * pointer update must not roll the table back. Verified post-rename with
     * bounded retries (the rename itself is atomic; the read-check-rename
-    * cycle is what loops). */
+    * cycle is what loops). The `_CURRENT.tmp-<gen>` file is created through
+    * [[GraftLocalFileSystem]] on the `file` scheme (no `chmod` fork for it
+    * or its `.crc`), with the same bits and sidecar Hadoop's local FS
+    * writes, so the sidecar clean-up below applies unchanged. */
   private val currentSwapLock = new Object
 
   def advanceCurrent(dir: Path, gen: Long, conf: Configuration): Unit = currentSwapLock.synchronized {
-    val fs = dir.getFileSystem(conf)
+    val fs = GraftLocalFileSystem.forPath(dir, conf)
     val cur = new Path(dir, "CURRENT")
     var attempts = 0
     while (attempts < 10) {
@@ -4425,7 +4429,7 @@ object GraftLease {
     * resolves duplicates to the newest position. */
   def renew(dir: Path, checkpoint: String, gen: Long, conf: Configuration): Unit =
     try {
-      val fs = dir.getFileSystem(conf)
+      val fs = GraftLocalFileSystem.forPath(dir, conf)
       val dg = digest(checkpoint)
       val f = new Path(leaseDir(dir), s"$dg.$gen.lease")
       if (fs.exists(f)) {
@@ -5002,7 +5006,7 @@ object GraftDV {
 
   def write(dir: Path, rel: String, positions: Array[Long], conf: Configuration): Unit = {
     val p = new Path(dir, rel)
-    val fs = p.getFileSystem(conf)
+    val fs = GraftLocalFileSystem.forPath(p, conf)
     val out = fs.create(p, true)
     try out.write(encode(positions)) finally out.close()
   }
@@ -5395,7 +5399,14 @@ class GraftWriterFactory(writeSchema: StructType, partCols: Seq[String],
 
 /** Per-task writer shared by the batch and streaming paths: one parquet file
   * per partition value seen by this task (the clustered write distribution
-  * makes that exactly one file per partition per commit). */
+  * makes that exactly one file per partition per commit).
+  *
+  * Files are written with the session's parquet codec
+  * (`spark.sql.parquet.compression.codec`, read from `conf`, snappy by
+  * default), as a DataFrame parquet write would. On the `file` scheme they
+  * are created through [[GraftLocalFileSystem]] (the private task conf
+  * routes it), so a new file, its `.crc` and its partition dir cost no
+  * `chmod` fork. */
 class GraftRowWriter(writeSchema: StructType, partCols: Seq[String],
     genDir: String, conf: SerializableHadoopConf, partitionId: Int, taskId: Long,
     bloomCols: Seq[String] = Seq.empty, checks: Seq[GraftCheckPredicate] = Seq.empty,
@@ -5428,7 +5439,10 @@ class GraftRowWriter(writeSchema: StructType, partCols: Seq[String],
         c.set("spark.sql.parquet.datetimeRebaseModeInWrite", "CORRECTED")
         c.set("spark.sql.parquet.int96RebaseModeInWrite", "CORRECTED")
         c.set("spark.sql.parquet.variant.annotateLogicalType.enabled", "false")
-        c
+        c.set("parquet.compression", ParquetOptions.getParquetCompressionCodecName(
+          c.get(SQLConf.PARQUET_COMPRESSION.key, SQLConf.PARQUET_COMPRESSION.defaultValueString)
+            .toLowerCase(java.util.Locale.ROOT)))
+        GraftLocalFileSystem.routeLocal(c)
       }
       private val writers = scala.collection.mutable.LinkedHashMap
         .empty[String, (ParquetOutputWriter, String, GraftStatsCollector, Array[java.util.BitSet])]
@@ -5934,7 +5948,6 @@ object GraftCatalogOps {
       fileRows = remap(m.fileRows),
       fileNdvs = remap(m.fileNdvs),
       fileDVAggs = remap(m.fileDVAggs))
-    fs.mkdirs(dstDir)
     GraftManifest.publish(dstDir, cloned, conf)
     0L
   }
@@ -6104,7 +6117,7 @@ object GraftCatalogOps {
     require(name.exists(!_.isDigit), s"tag '$name' would shadow numeric time travel")
     val dir = new Path(root, table)
     val conf = spark.sessionState.newHadoopConf()
-    val fs = dir.getFileSystem(conf)
+    val fs = GraftLocalFileSystem.forPath(dir, conf)
     require(fs.exists(new Path(dir, s"manifest-$gen.txt")),
       s"cannot tag generation $gen — no such committed manifest")
     require(!fs.exists(branchDir(dir, name)),

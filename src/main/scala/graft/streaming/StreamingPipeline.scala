@@ -3,7 +3,7 @@ package graft.streaming
 import graft.SerializableHadoopConf
 import graft.plans.UniqueKeyRowNumberRule
 import graft.sources.{GraftCatalogOps, GraftCommitProtocol, GraftFileRecord, GraftFileSlice,
-  GraftFilesMessage, GraftManifest, GraftParquetRead, GraftRowWriter}
+  GraftFilesMessage, GraftLocalFileSystem, GraftManifest, GraftParquetRead, GraftRowWriter}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
@@ -12,7 +12,6 @@ import org.apache.spark.sql.catalyst.expressions.{BindReferences, BoundReference
   JoinedRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
 import org.apache.spark.sql.catalyst.plans.logical.Sort
-import org.apache.spark.sql.execution.datasources.parquet.ParquetOptions
 import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -136,7 +135,7 @@ object StreamingPipeline {
     val spark = batch.sparkSession
     val root = new Path(path)
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = root.getFileSystem(conf)
+    val fs = GraftLocalFileSystem.forPath(root, conf)
     val keysProp = KeysProp -> UniqueKeyRowNumberRule.encodeKey(keys)
     // A concurrent creator may win generation 0; its manifest serves as well.
     if (!fs.exists(new Path(root, "CURRENT")))
@@ -199,11 +198,7 @@ object StreamingPipeline {
       case (part, es) => part.stripPrefix(s"$BucketCol=").toInt ->
         es.map { case (_, rel) => GraftFileSlice(part, rel, planned.fileBytes.getOrElse(rel, -1L)) }
     }
-    // The session's parquet codec, as a DataFrame parquet write uses it.
-    val hconf = spark.sessionState.newHadoopConf()
-    hconf.set("parquet.compression",
-      new ParquetOptions(Map.empty[String, String], spark.sessionState.conf).compressionCodecClassName)
-    val conf = new SerializableHadoopConf(hconf)
+    val conf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
     val (tableDir, dir) = (root.toString, genDir.toString)
     GraftBridge.shuffleByIntColumn(bucketed.queryExecution.toRdd, schema,
         schema.fieldIndex(BucketCol), planned.props(BucketsProp).toInt)

@@ -3523,4 +3523,27 @@ class CatalogSpec extends GraftSuite {
       spark.sql(s"DROP TABLE IF EXISTS $t")
     }
   }
+
+  test("catalog writes store parquet in the session's codec, snappy by default") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val t = freshTable("codec")
+    base.writeTo(t).partitionedBy(col("pk")).create()
+    val key = "spark.sql.parquet.compression.codec"
+    spark.conf.set(key, "gzip")
+    try base.writeTo(t).append() finally spark.conf.unset(key)
+    val conf = spark.sparkContext.hadoopConfiguration
+    // Codecs per data generation, oldest first: the create, then the append.
+    val byGen = new Path(root).getFileSystem(conf)
+      .globStatus(new Path(root, "codec/gen-*/pk=*/*.parquet")).toSeq
+      .groupBy(_.getPath.getParent.getParent.getName.split("-")(1).toLong).toSeq.sortBy(_._1)
+      .map { case (_, files) => files.flatMap { st =>
+        val r = ParquetFileReader.open(HadoopInputFile.fromPath(st.getPath, conf))
+        try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec))
+        finally r.close()
+      }.toSet }
+    assert(byGen === Seq(Set(CompressionCodecName.SNAPPY), Set(CompressionCodecName.GZIP)))
+  }
 }

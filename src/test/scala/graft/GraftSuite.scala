@@ -19,6 +19,22 @@ trait GraftSuite extends AnyFunSuite {
 
   val sfTiny = "/root/testdata/sf0.001"
 
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  /** A fresh dir under `java.io.tmpdir`, deleted with everything in it
+    * when the test JVM exits. */
+  def tmpDir(prefix: String): String = GraftSuite.tmpDir(prefix)
+}
+
+object GraftSuite {
+  private val created = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  // Priority 0 runs after Spark's own hook (40) has stopped the context, so
+  // no stream or task still writes into a dir while it is deleted.
+  org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+    () => created.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile)), 0)
+
+  def tmpDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    created.add(d)
+    d.toString
+  }
 }

@@ -171,7 +171,7 @@ class RelationalSpec extends GraftSuite {
 
   test("zorderWrite drops the layout key: output schema equals input schema") {
     import graft.operators.Layout
-    val dir = java.nio.file.Files.createTempDirectory("zw").toString
+    val dir = tmpDir("zw")
     val df = (for (x <- 0L until 32L; y <- 0L until 32L) yield (x, y)).toDF("x", "y")
     Layout.zorderWrite(df, dir, col("x"), col("y"), numFiles = Some(4))
     val back = spark.read.parquet(dir)

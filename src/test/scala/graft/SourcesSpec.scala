@@ -226,7 +226,7 @@ class SourcesSpec extends GraftSuite {
     // (fixture tables, ANN indexes) survive a dataset REGENERATION in place —
     // the fingerprint is the only thing standing between a stale cache and
     // wrong answers. Pin all three invalidation axes.
-    val dir = java.nio.file.Files.createTempDirectory("graft_fp").toFile
+    val dir = new java.io.File(tmpDir("graft_fp"))
     val t = new java.io.File(dir, "orders.parquet")
     java.nio.file.Files.write(t.toPath, Array[Byte](1, 2, 3))
     t.setLastModified(1700000000000L)

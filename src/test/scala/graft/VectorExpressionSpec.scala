@@ -331,12 +331,12 @@ class VectorExpressionSpec extends GraftSuite {
     import graft.operators.VectorIndex
     // A private dataset dir whose embeddings.parquet is a DIRECTORY of parts —
     // the shape the incremental path detects growth in.
-    val ds = java.nio.file.Files.createTempDirectory("graft_vds").toFile
+    val ds = new java.io.File(tmpDir("graft_vds"))
     val embDir = new java.io.File(ds, "embeddings.parquet"); embDir.mkdirs()
     val src = Tables.embeddings(spark, sfTiny)
     def addPart(ids: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
                 name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_vpart").toFile
+      val tmp = new java.io.File(tmpDir("graft_vpart"))
       src.filter(ids(col("vec_id"))).select(col("vec_id"), col("embedding"))
         .coalesce(1).write.mode("overwrite").parquet(tmp.getAbsolutePath)
       val part = tmp.listFiles().filter(_.getName.endsWith(".parquet")).head
