@@ -141,6 +141,15 @@ import graft.sources.{GraftBatchScan, GraftCatalogOps, GraftCheck, GraftGenerate
  * `_groupingexpression` Project is inlined back one level so expression
  * keys are visible to the classifier at all.
  *
+ * One serving core, four shape front ends (the Goldstein & Larson layout,
+ * "Optimizing Queries Using Materialized Views", SIGMOD 2001): the
+ * single-table (`rewrite`), join (`attemptJoin`), grouping-sets
+ * (`rewriteExpand`) and multi-distinct (`rewriteMultiDistinct`) paths keep
+ * only their structural code and share one pipeline — `sourceOf` qualifies
+ * the base scan, `classify` + `partialsOf` check the outputs against what a
+ * view maintains, `serve` picks a fresh view, scans it and replays the key
+ * filter, and `reAggregate` folds the partials.
+ *
  * The replacement preserves the Aggregate's exact output (names, exprIds,
  * types) via an aliasing Project over a manually-built scan of the view, so
  * parent operators never notice. Registered like the other graft rules —
@@ -215,21 +224,29 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
   private sealed trait Out
   private case class KeyOut(emit: KeyEmit, orig: NamedExpression)
       extends Out
-  private case class CountOut(al: Alias) extends Out
+  /** An aggregate output: re-emitted under its alias's name and exprId. */
+  private sealed trait AggOut extends Out { def al: Alias }
+  /** An aggregate served from a view partial of one source column `col` —
+    * the view's declared sum column. */
+  private sealed trait PartialOut extends AggOut { def col: AttributeReference }
+  private case class CountOut(al: Alias) extends AggOut
   // count(<declared sum col>) = the view's mv_nncount (count skips NULLs —
   // exactly what the fold maintains for AVG's denominator). Eval-mode-free:
   // counting never wraps.
-  private case class NNCountOut(al: Alias, col: AttributeReference) extends Out
+  private case class NNCountOut(al: Alias, col: AttributeReference)
+      extends PartialOut
   private case class SumOut(al: Alias, col: AttributeReference, ansi: Boolean)
-      extends Out
+      extends PartialOut
   private case class AvgOut(al: Alias, col: AttributeReference, ansi: Boolean)
-      extends Out
+      extends PartialOut
   // MIN/MAX carry no overflow-bearing arithmetic, so no eval-mode leg; the
   // view maintains them delete-aware (affected-group recompute on folds
   // whose delta could strip an extremum) and stores them UNCAST, so serving
   // them preserves the query's output type exactly (type gate below).
-  private case class MinOut(al: Alias, col: AttributeReference) extends Out
-  private case class MaxOut(al: Alias, col: AttributeReference) extends Out
+  private case class MinOut(al: Alias, col: AttributeReference)
+      extends PartialOut
+  private case class MaxOut(al: Alias, col: AttributeReference)
+      extends PartialOut
   // hll_sketch_estimate(hll_sketch_agg(<declared sum col>)) — the Spark 3.5
   // sketchable-distinct shape, served from the view's mv_hll union column
   // (exact match reads the stored sketch; rollup/join re-aggregates with
@@ -246,7 +263,7 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
   // is not a contract Spark offers either). Exact COUNT(DISTINCT x) never
   // classifies (isDistinct aggregates fall through to the refusal).
   private case class HllOut(al: Alias, col: AttributeReference, lgK: Int)
-      extends Out
+      extends PartialOut
   // count(DISTINCT k) where k is a bare column (r15): serveable when k is a
   // VIEW KEY — the view's key tuples enumerate exactly the (group, k) combos
   // present in the base (one view row per base group), so the distinct
@@ -262,7 +279,7 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
   // duplicate-dim-key multiplication cannot skew it. Other DISTINCT
   // aggregates (sum/avg DISTINCT) still fall through to the refusal.
   private case class DistinctCountOut(al: Alias, col: AttributeReference)
-      extends Out
+      extends AggOut
 
   /** Every output must be a key (bare, aliased, or a whole grouping
     * EXPRESSION re-emitted under an alias), count(*)/count(1), or a
@@ -467,6 +484,53 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
       }
     }
 
+  /** A qualified view source: the base graft relation and table under a
+    * subtree, its residual filter with that filter's column set, and THIS
+    * session's effective B233 read regime on the table. */
+  private case class Source(rel: DataSourceV2Relation, table: GraftTable,
+      filter: Option[Expression], filterCols: Set[String], regime: String,
+      policed: Boolean)
+
+  /** Source qualification, shared by every rewrite path: a full (or
+    * accountably pruned) scan of a graft table under at most a residual
+    * filter that is deterministic and subquery-free, with every pushed data
+    * filter covered by it. B233 regime matching (r14): a policied base is
+    * serveable — by a view whose stamped seed regime equals THIS session's
+    * effective read regime (both paths then aggregate the same
+    * policy-transformed rows; see GraftPolicies.regime). Enforced per
+    * candidate in pickVerified. */
+  private def sourceOf(sub: LogicalPlan): Option[Source] = {
+    val (rel, table, filter) = baseOf(sub).getOrElse(return None)
+    val filterCols = filterColsOf(filter).getOrElse(return None)
+    if (!pushedCovered(sub, filterCols)) return None
+    Some(Source(rel, table, filter, filterCols,
+      GraftPolicies.regime(table.manifest.props, session),
+      GraftPolicies.declared(table.manifest.props)))
+  }
+
+  /** What the classified outputs need of a view's partials. */
+  private case class Partials(col: Option[String], exactFold: Boolean)
+
+  /** The needed-partials check, shared by every rewrite path: the one source
+    * column the partials read (a view maintains partials of ONE declared
+    * column, so two distinct inputs refuse), and whether any ANSI-mode
+    * sum/avg demands an EXACT stored sum — serveable only from a view whose
+    * every fold ran under ANSI (mview.foldmode stamp). `source` names the
+    * source column a partial's input attribute reads, or refuses it (None). */
+  private def partialsOf(outs: Seq[Out],
+      source: AttributeReference => Option[String] = a => Some(a.name))
+      : Option[Partials] = {
+    val cols = outs.collect {
+      case p: PartialOut => source(p.col).getOrElse(return None)
+    }.distinct
+    if (cols.size > 1) None
+    else Some(Partials(cols.headOption, outs.exists {
+      case SumOut(_, _, ansi) => ansi
+      case AvgOut(_, _, ansi) => ansi
+      case _ => false
+    }))
+  }
+
   // ------------------------------------------------- candidate verification
 
   /** Walk `candidates` (already preference-ordered) and return the first
@@ -487,8 +551,7 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
     * diagnostics-ring consumer. Flushed only when NO candidate verifies. */
   private def pickVerified(tc: TableCatalog,
       candidates: Seq[(Identifier, Set[String])], srcName: String,
-      boundGen: Long, sumCols: Seq[String], needsExactFold: Boolean,
-      outs: Seq[Out], curRegime: String, srcPoliced: Boolean)
+      src: Source, outs: Seq[Out], partials: Partials)
       : Option[(Identifier, GraftTable, Set[String])] = {
     val staleNotes = scala.collection.mutable.ListBuffer.empty[String]
     def verified(id: Identifier, keys: Set[String])
@@ -500,7 +563,7 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
                 v.manifest.props.get("mview.keys").exists(
                   _.split(',').map(_.trim.toLowerCase).toSet == keys) &&
                 v.manifest.props.get("mview.sum").exists(vs =>
-                  sumCols.forall(_.equalsIgnoreCase(vs))) &&
+                  partials.col.forall(_.equalsIgnoreCase(vs))) &&
                 v.manifest.gen >= 1 =>
             // Schema probe per candidate: an old-schema view (no mv_nncount
             // / mv_min / mv_max, or drifted mv types) cannot serve THESE
@@ -522,12 +585,12 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
             // with no stamp on a POLICIED source was seeded under an
             // unknowable regime (pre-stamp vintage) — never serve it.
             val viewRegime = v.manifest.props.get("mview.policy")
-              .getOrElse(if (srcPoliced) "<unknown>" else "none")
-            if (viewRegime != curRegime) {
+              .getOrElse(if (src.policed) "<unknown>" else "none")
+            if (viewRegime != src.regime) {
               staleNotes +=
                 s"view ${id.name()} matches this aggregate but materializes " +
                   s"the policy regime [$viewRegime] while this session reads " +
-                  s"the source under [$curRegime] — run CALL " +
+                  s"the source under [${src.regime}] — run CALL " +
                   s"graft.system.recompute_mview(name => '${id.name()}') " +
                   "under the current regime to re-stamp it"
               return None
@@ -552,7 +615,7 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
             }
             // ANSI query over a legacy-folded view: the stored sum may be a
             // wrapped value the un-rewritten query would have raised on.
-            if (needsExactFold &&
+            if (partials.exactFold &&
                 !v.manifest.props.get("mview.foldmode").contains("ansi")) {
               // The remedy must be one that actually restores the stamp:
               // incremental refreshes only ever AND-weaken the fold mode (a
@@ -573,6 +636,7 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
             // stale case is THE near-miss a user can fix without touching
             // the query — name the refresh call that resumes serving.
             val floor = GraftCatalogOps.mviewFoldFloor(v.manifest)
+            val boundGen = src.table.manifest.gen
             if (floor == boundGen) Some((id, v, keys))
             else {
               staleNotes +=
@@ -670,19 +734,112 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
   private def reSum(a: AttributeReference): Expression =
     AggregateExpression(Sum(a), Complete, isDistinct = false)
 
+  /** The partial re-aggregation algebra, shared by every path that folds
+    * view rows (rollup, grouping sets, the multi-distinct inner aggregate,
+    * join): exact because the view partitions the base rows — each base row
+    * contributes to exactly one (finer) view group, so folding the partials
+    * over coarser groups reproduces the coarser aggregate. `col` resolves a
+    * view column name to the attribute the fold reads. (Type gates ran per
+    * candidate in the verification walk.) */
+  private def reAggregate(o: Out, col: String => AttributeReference)
+      : NamedExpression = o match {
+    case KeyOut(ViaView(n), orig) =>
+      Alias(col(n), orig.name)(exprId = orig.exprId)
+    case KeyOut(Verbatim, orig) => orig
+    case a: AggOut => Alias(a match {
+      // count(*) = SUM(mv_count), coalesced to the non-null 0 of an empty
+      // input (count's output is non-nullable); count(x) = SUM(mv_nncount)
+      // likewise.
+      case _: CountOut => Coalesce(Seq(reSum(col("mv_count")), Literal(0L)))
+      case _: NNCountOut =>
+        Coalesce(Seq(reSum(col("mv_nncount")), Literal(0L)))
+      // sum(x) = SUM(mv_sum): null iff every partial is null, exactly sum's
+      // semantics; avg divides the two exact longs the way Average-of-long
+      // itself does.
+      case _: SumOut => reSum(col("mv_sum"))
+      case _: AvgOut => avgOf(reSum(col("mv_sum")), reSum(col("mv_nncount")))
+      // min-of-mins / max-of-maxes: exact under any regrouping, and
+      // multiplicity-blind, so a duplicate dim key repeating a view group in
+      // the join rewrite changes nothing.
+      case _: MinOut =>
+        AggregateExpression(Min(col("mv_min")), Complete, isDistinct = false)
+      case _: MaxOut =>
+        AggregateExpression(Max(col("mv_max")), Complete, isDistinct = false)
+      // union-of-sketches: the fine groups partition the base rows, so the
+      // union's register/coupon state equals the coarse sketch's; unions are
+      // multiplicity-blind too (a duplicate dim key unions a group's sketch
+      // with itself — a no-op).
+      case _: HllOut => HllSketchEstimate(AggregateExpression(
+        new HllUnionAgg(col("mv_hll")), Complete, isDistinct = false))
+      // count(DISTINCT k) over the view's rows: the view key domain
+      // enumerates exactly the (group, k) combos present in the base — one
+      // view row per base group — so distinct non-null k per coarser group
+      // is identical on both paths. Exact, and |view| ≪ |base|.
+      case DistinctCountOut(_, c) => AggregateExpression(
+        Count(Seq(col(c.name))), Complete, isDistinct = true)
+    }, a.al.name)(exprId = a.al.exprId)
+  }
+
+  /** A picked view, scanned: its key set, its rows with the source's
+    * residual filter replayed on them, and a name → view attribute resolver. */
+  private case class Served(keys: Set[String], input: LogicalPlan,
+      attr: String => AttributeReference)
+
+  /** The view-serving core's catalog half, shared by every rewrite path:
+    * the first FRESH view of the source whose key set contains `keys` and the
+    * filter's columns and whose declared sum column is the one the partials
+    * read, scanned for those keys plus the mv_* columns `outs` read.
+    *
+    * View DECLARATIONS come from a short-TTL cache
+    * (MviewRewriteRule.candidateViews): enumerating + loading every table in
+    * the namespace per qualifying aggregate would make PLANNING O(catalog
+    * size). Freshness is NEVER cached — each candidate's manifest is
+    * re-loaded and its fold floor compared against this scan's bound
+    * generation, so a stale cache can only delay noticing a NEW view
+    * (rewrite silently off for up to the TTL — plans stay correct), never
+    * serve a stale one. */
+  private def serve(src: Source, keys: Set[String], outs: Seq[Out],
+      partials: Partials): Option[Served] = {
+    val tc = src.rel.catalog.getOrElse(return None) match {
+      case t: TableCatalog => t
+      case _ => return None
+    }
+    val srcIdent = src.rel.identifier.getOrElse(return None)
+    val required = keys ++ src.filterCols
+    // Candidates: any view whose key set CONTAINS the required keys. Fewest
+    // keys first: an exact match (no re-aggregation) is the smallest such
+    // set, and among rollup candidates the coarsest view has the fewest
+    // rows to re-aggregate or join. Declarations filter first (cached, no
+    // IO); loadTable + manifest-read freshness verification is LAZY in
+    // preference order, so the common exact-match case pays exactly one
+    // verification however many views the namespace holds.
+    val candidates = MviewRewriteRule.candidateViews(tc, srcIdent.namespace())
+      .filter { case (_, source, vKeys, sum) =>
+        source == srcIdent.name() && required.subsetOf(vKeys) &&
+          partials.col.forall(_.equalsIgnoreCase(sum))
+      }
+      .sortBy(_._3.size).map(d => (d._1, d._3))
+    val (vIdent, vTable, vKeys) = pickVerified(tc, candidates,
+      srcIdent.name(), src, outs, partials).getOrElse(return None)
+    val (vScan, vAttr) =
+      buildViewScan(vTable, vIdent, src.rel.catalog, required ++ mvWanted(outs))
+    // Key-only filters commute with the view substitution: replay them on
+    // the VIEW's key columns (every reference is a view key by the candidate
+    // gate above).
+    val input = src.filter match {
+      case Some(c) => Filter(c.transform {
+        case ar: AttributeReference => vAttr(ar.name)
+      }, vScan)
+      case None => vScan
+    }
+    Some(Served(vKeys, input, vAttr))
+  }
+
   // ------------------------------------------------- single-table rewrite
 
   private def rewrite(ges: Seq[Expression],
       aes: Seq[NamedExpression], child: LogicalPlan): Option[LogicalPlan] = {
-    val (baseRel, baseTable, baseFilter) = baseOf(child).getOrElse(return None)
-    // B233 regime matching (r14): a policied base is serveable — by a view
-    // whose stamped seed regime equals THIS session's effective read regime
-    // (both paths then aggregate the same policy-transformed rows; see
-    // GraftPolicies.regime). Enforced per candidate in pickVerified.
-    val curRegime = GraftPolicies.regime(baseTable.manifest.props, session)
-    val srcPoliced = GraftPolicies.declared(baseTable.manifest.props)
-    val filterCols = filterColsOf(baseFilter).getOrElse(return None)
-    if (!pushedCovered(child, filterCols)) return None
+    val src = sourceOf(child).getOrElse(return None)
 
     // Grouping keys → view key names. A bare attribute maps to its own
     // column; a grouping EXPRESSION maps through the source's B189
@@ -692,7 +849,7 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
     // row), so a view keyed on ts_month serves it and re-emits the view's
     // stored key value AS the expression's output. An expression matching NO
     // declaration refuses — there is no view column that provably carries it.
-    lazy val genKey = genKeyOf(baseTable)
+    lazy val genKey = genKeyOf(src.table)
     val keyMap: Seq[(Expression, String)] = ges.map {
       case ar: AttributeReference => (ar, ar.name.toLowerCase)
       case e => genKey(e) match {
@@ -704,152 +861,54 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
       keyMap.find(_._1.canonicalized == e.canonicalized)
         .map(km => ViaView(km._2))
     val outs = classify(aes, keyFor).getOrElse(return None)
-    val sumCols = outs.collect {
-      case SumOut(_, c, _) => c.name
-      case AvgOut(_, c, _) => c.name
-      case MinOut(_, c) => c.name
-      case MaxOut(_, c) => c.name
-      case NNCountOut(_, c) => c.name
-      case HllOut(_, c, _) => c.name
-    }.distinct
-    if (sumCols.size > 1) return None
+    val partials = partialsOf(outs).getOrElse(return None)
     // count(DISTINCT k): k must be a VIEW KEY (its distinct values are then
-    // exactly the view's key domain) — required of every candidate below,
+    // exactly the view's key domain) — required of every candidate,
     // alongside the grouping and filter columns. Not a sum column: the
     // re-aggregation reads the key column itself, no mv_* partial involved.
     val distinctCols = outs.collect {
       case DistinctCountOut(_, c) => c.name.toLowerCase
     }.toSet
-    // Any ANSI-mode sum/avg demands an EXACT stored sum — serveable only
-    // from a view whose every fold ran under ANSI (mview.foldmode stamp).
-    val needsExactFold = outs.exists {
-      case SumOut(_, _, a) => a
-      case AvgOut(_, _, a) => a
-      case _ => false
-    }
-
-    // A fresh view for this (source, keys, sum) in the same catalog. View
-    // DECLARATIONS come from a short-TTL cache (MviewRewriteRule.viewIndex):
-    // enumerating + loading every table in the namespace per qualifying
-    // aggregate would make PLANNING O(catalog size). Freshness is NEVER
-    // cached — each candidate's manifest is re-loaded and its fold floor
-    // compared against this scan's bound generation, so a stale cache can
-    // only delay noticing a NEW view (rewrite silently off for up to the
-    // TTL — plans stay correct), never serve a stale one.
-    val tc = baseRel.catalog.getOrElse(return None) match {
-      case t: TableCatalog => t
-      case _ => return None
-    }
-    val srcIdent = baseRel.identifier.getOrElse(return None)
     val keyNames = keyMap.map(_._2).toSet
-    // Candidates: any fresh view whose key set CONTAINS the query's keys.
-    // Exact match serves as a plain projection; a PROPER superset serves via
-    // ROLLUP — re-aggregating the view's finer groups is provably exact for
-    // the abelian set the view maintains (count(*) = SUM(mv_count),
-    // sum(x) = SUM(mv_sum), avg derives from both) because every base row
-    // lands in exactly one view group. Prefer exact (no re-aggregation);
-    // among rollup candidates prefer the FEWEST keys (coarsest view = fewest
-    // rows to re-aggregate). Declarations filter first (cached, no IO);
-    // loadTable + manifest-read freshness verification is LAZY in preference
-    // order, so the common exact-match case pays exactly one verification
-    // however many views the namespace holds.
-    val declared = MviewRewriteRule.candidateViews(tc, srcIdent.namespace())
-      .filter { case (_, source, keys, sum) =>
-        source == srcIdent.name() && keyNames.subsetOf(keys) &&
-          filterCols.subsetOf(keys) && distinctCols.subsetOf(keys) &&
-          sumCols.forall(_.equalsIgnoreCase(sum))
-      }
-    val ordered = (declared.filter(_._3 == keyNames) ++
-      declared.filterNot(_._3 == keyNames).sortBy(_._3.size))
-      .map(d => (d._1, d._3))
-    val (vIdent, vTable, vKeys) = pickVerified(tc, ordered, srcIdent.name(),
-      baseTable.manifest.gen, sumCols, needsExactFold, outs,
-      curRegime, srcPoliced)
+    // An exact key match serves as a plain projection; a PROPER superset
+    // serves via ROLLUP — re-aggregating the view's finer groups is provably
+    // exact for the abelian set the view maintains (count(*) =
+    // SUM(mv_count), sum(x) = SUM(mv_sum), avg derives from both) because
+    // every base row lands in exactly one view group.
+    val v = serve(src, keyNames ++ distinctCols, outs, partials)
       .getOrElse(return None)
 
-    val wanted = keyNames ++ filterCols ++ distinctCols ++ mvWanted(outs)
-    val (vScan, vAttr) =
-      buildViewScan(vTable, vIdent, baseRel.catalog, wanted)
-
-    // Key-only filters commute with the view substitution: replay them on
-    // the VIEW's key columns (every reference is a view key by the candidate
-    // gate above).
-    val vInput: LogicalPlan = baseFilter match {
-      case Some(c) => Filter(c.transform {
-        case ar: AttributeReference => vAttr(ar.name)
-      }, vScan)
-      case None => vScan
-    }
-
-    if (vKeys == keyNames) {
+    if (v.keys == keyNames) {
       // Exact key match: the view IS the aggregate — preserve the
       // Aggregate's exact output (names + exprIds) with a projection.
       val projList: Seq[NamedExpression] = outs.map {
         case KeyOut(ViaView(n), orig) =>
-          Alias(vAttr(n), orig.name)(exprId = orig.exprId)
+          Alias(v.attr(n), orig.name)(exprId = orig.exprId)
         case KeyOut(Verbatim, orig) => orig // unreachable: single-table keys are ViaView
-        case CountOut(al) => Alias(vAttr("mv_count"), al.name)(exprId = al.exprId)
+        case CountOut(al) => Alias(v.attr("mv_count"), al.name)(exprId = al.exprId)
         case NNCountOut(al, _) =>
-          Alias(vAttr("mv_nncount"), al.name)(exprId = al.exprId)
-        case SumOut(al, _, _) => Alias(vAttr("mv_sum"), al.name)(exprId = al.exprId)
+          Alias(v.attr("mv_nncount"), al.name)(exprId = al.exprId)
+        case SumOut(al, _, _) => Alias(v.attr("mv_sum"), al.name)(exprId = al.exprId)
         case AvgOut(al, _, _) =>
-          Alias(avgOf(vAttr("mv_sum"), vAttr("mv_nncount")),
+          Alias(avgOf(v.attr("mv_sum"), v.attr("mv_nncount")),
             al.name)(exprId = al.exprId)
-        case MinOut(al, _) => Alias(vAttr("mv_min"), al.name)(exprId = al.exprId)
-        case MaxOut(al, _) => Alias(vAttr("mv_max"), al.name)(exprId = al.exprId)
+        case MinOut(al, _) => Alias(v.attr("mv_min"), al.name)(exprId = al.exprId)
+        case MaxOut(al, _) => Alias(v.attr("mv_max"), al.name)(exprId = al.exprId)
         case HllOut(al, _, _) =>
-          Alias(HllSketchEstimate(vAttr("mv_hll")), al.name)(exprId = al.exprId)
+          Alias(HllSketchEstimate(v.attr("mv_hll")), al.name)(exprId = al.exprId)
         // distinctCols ⊆ view keys == grouping keys here, so k is constant
         // per group: its distinct non-null count is 1 unless the group IS
         // the NULL-key group (count(DISTINCT) skips nulls).
         case DistinctCountOut(al, c) =>
-          Alias(If(IsNull(vAttr(c.name)), Literal(0L), Literal(1L)),
+          Alias(If(IsNull(v.attr(c.name)), Literal(0L), Literal(1L)),
             al.name)(exprId = al.exprId)
       }
-      Some(Project(projList, vInput))
+      Some(Project(projList, v.input))
     } else {
       // ROLLUP (query keys ⊂ view keys): re-aggregate the view's finer
-      // groups. Exact because the view partitions the base rows: each base
-      // row contributes to exactly one (finer) view group, so summing the
-      // partials over the coarser keys reproduces the coarser aggregate —
-      // count(*) = SUM(mv_count) (coalesced to the non-null 0 of an empty
-      // input, matching count's non-nullable output), sum(x) = SUM(mv_sum)
-      // (null iff every partial is null, exactly sum's semantics), and avg
-      // divides the two exact longs the way Average-of-long itself does.
-      // (Type gates ran per candidate in the verification walk.)
-      val aggList: Seq[NamedExpression] = outs.map {
-        case KeyOut(ViaView(n), orig) =>
-          Alias(vAttr(n), orig.name)(exprId = orig.exprId)
-        case KeyOut(Verbatim, orig) => orig // unreachable: single-table keys are ViaView
-        case CountOut(al) => Alias(Coalesce(Seq(reSum(vAttr("mv_count")),
-          Literal(0L))), al.name)(exprId = al.exprId)
-        // count(x) = SUM(mv_nncount): same non-nullable-zero coalesce as
-        // count(*), same partition-of-base-rows exactness argument.
-        case NNCountOut(al, _) => Alias(Coalesce(Seq(reSum(vAttr("mv_nncount")),
-          Literal(0L))), al.name)(exprId = al.exprId)
-        case SumOut(al, _, _) =>
-          Alias(reSum(vAttr("mv_sum")), al.name)(exprId = al.exprId)
-        case AvgOut(al, _, _) => Alias(avgOf(reSum(vAttr("mv_sum")),
-          reSum(vAttr("mv_nncount"))), al.name)(exprId = al.exprId)
-        // min-of-mins / max-of-maxes: exact under any regrouping.
-        case MinOut(al, _) => Alias(AggregateExpression(Min(vAttr("mv_min")),
-          Complete, isDistinct = false), al.name)(exprId = al.exprId)
-        case MaxOut(al, _) => Alias(AggregateExpression(Max(vAttr("mv_max")),
-          Complete, isDistinct = false), al.name)(exprId = al.exprId)
-        // union-of-sketches: the fine groups partition the base rows, so
-        // the union's register/coupon state equals the coarse sketch's.
-        case HllOut(al, _, _) => Alias(HllSketchEstimate(AggregateExpression(
-          new HllUnionAgg(vAttr("mv_hll")), Complete, isDistinct = false)),
-          al.name)(exprId = al.exprId)
-        // count(DISTINCT k) over the view's rows: the view key domain
-        // enumerates exactly the (group, k) combos present in the base —
-        // one view row per base group — so distinct non-null k per coarser
-        // group is identical on both paths. Exact, and |view| ≪ |base|.
-        case DistinctCountOut(al, c) =>
-          Alias(AggregateExpression(Count(Seq(vAttr(c.name))), Complete,
-            isDistinct = true), al.name)(exprId = al.exprId)
-      }
-      Some(Aggregate(keyMap.map(km => vAttr(km._2)), aggList, vInput))
+      // groups.
+      Some(Aggregate(keyMap.map(km => v.attr(km._2)),
+        outs.map(reAggregate(_, v.attr)), v.input))
     }
   }
 
@@ -955,11 +1014,7 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
         (pin, plist.collect { case al: Alias => al.exprId -> al.child }.toMap)
       case c => (c, Map.empty[ExprId, Expression])
     }
-    val (baseRel, baseTable, baseFilter) = baseOf(exChild).getOrElse(return None)
-    val curRegime = GraftPolicies.regime(baseTable.manifest.props, session)
-    val srcPoliced = GraftPolicies.declared(baseTable.manifest.props)
-    val filterCols = filterColsOf(baseFilter).getOrElse(return None)
-    if (!pushedCovered(exChild, filterCols)) return None
+    val src = sourceOf(exChild).getOrElse(return None)
 
     sealed trait Pos
     case class PassThrough(attr: AttributeReference) extends Pos
@@ -994,7 +1049,7 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
     // or — for an aliased grouping expression — the B189 generated column
     // whose declared rule it matches (genKeyOf: canonical compare after the
     // optimizer's own normalization, timezone pin enforced).
-    lazy val genKey = genKeyOf(baseTable)
+    lazy val genKey = genKeyOf(src.table)
     val keyName: Map[ExprId, String] = poses.collect { case KeyPos(u) =>
       val n = aliasMap.get(u.exprId) match {
         case Some(e) => genKey(e).getOrElse(return None).toLowerCase
@@ -1032,94 +1087,36 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
     val passIds = ex.output.indices.collect {
       case i if poses(i).isInstanceOf[PassThrough] => ex.output(i).exprId
     }.toSet
-    val sumAttrs = outs.collect {
-      case SumOut(_, c, _) => c
-      case AvgOut(_, c, _) => c
-      case MinOut(_, c) => c
-      case MaxOut(_, c) => c
-      case NNCountOut(_, c) => c
-      case HllOut(_, c, _) => c
-    }
-    if (sumAttrs.exists(sa => !passIds.contains(sa.exprId))) return None
-    val sumCols = sumAttrs.map(_.name).distinct
-    if (sumCols.size > 1) return None
-    val needsExactFold = outs.exists {
-      case SumOut(_, _, a) => a
-      case AvgOut(_, _, a) => a
-      case _ => false
-    }
-
-    val tc = baseRel.catalog.getOrElse(return None) match {
-      case t: TableCatalog => t
-      case _ => return None
-    }
-    val srcIdent = baseRel.identifier.getOrElse(return None)
-    val keyNames: Set[String] = keyName.values.toSet
-    val declared = MviewRewriteRule.candidateViews(tc, srcIdent.namespace())
-      .filter { case (_, source, keys, sum) =>
-        source == srcIdent.name() && (keyNames ++ filterCols).subsetOf(keys) &&
-          sumCols.forall(_.equalsIgnoreCase(sum))
-      }
-    val ordered = declared.sortBy(_._3.size).map(d => (d._1, d._3))
-    val (vIdent, vTable, _) = pickVerified(tc, ordered, srcIdent.name(),
-      baseTable.manifest.gen, sumCols, needsExactFold, outs,
-      curRegime, srcPoliced)
+    val partials = partialsOf(outs,
+      a => if (passIds.contains(a.exprId)) Some(a.name) else None)
       .getOrElse(return None)
-
-    val wanted = keyNames ++ filterCols ++ mvWanted(outs)
-    val (vScan, vAttr) = buildViewScan(vTable, vIdent, baseRel.catalog, wanted)
-    val vInput: LogicalPlan = baseFilter match {
-      case Some(c) => Filter(c.transform {
-        case ar: AttributeReference => vAttr(ar.name)
-      }, vScan)
-      case None => vScan
-    }
+    val v = serve(src, keyName.values.toSet, outs, partials)
+      .getOrElse(return None)
 
     // Rebuild the Expand over the view: key/gid output attrs VERBATIM (the
     // Aggregate's grouping references them), passthrough positions dropped,
     // the needed mv_* columns appended as plain passthroughs of the view
     // scan's own attributes.
     val keepIdx = ex.output.indices.filterNot(i => poses(i).isInstanceOf[PassThrough])
-    val mvCols = mvWanted(outs).toSeq.sorted.map(vAttr)
+    val mvCols = mvWanted(outs).toSeq.sorted.map(v.attr)
     val newOutput: Seq[Attribute] = keepIdx.map(ex.output) ++ mvCols
     val newProjections: Seq[Seq[Expression]] = ex.projections.map { row =>
       keepIdx.map { i =>
         poses(i) match {
           case KeyPos(u) => row(i) match {
-            case Literal(v, dt) if v == null => Literal(null, dt)
-            case _ => vAttr(keyName(u.exprId))
+            case Literal(lv, dt) if lv == null => Literal(null, dt)
+            case _ => v.attr(keyName(u.exprId))
           }
           case GidPos => row(i)
           case _: PassThrough => row(i) // unreachable (filtered out)
         }
       } ++ mvCols
     }
-    val newExpand = Expand(newProjections, newOutput, vInput)
+    val newExpand = Expand(newProjections, newOutput, v.input)
 
     // Re-aggregate partials per expanded group — each view group appears
     // exactly once per projection row, so the folds are the ROLLUP path's.
-    val aggList: Seq[NamedExpression] = outs.map {
-      case KeyOut(Verbatim, orig) => orig
-      case KeyOut(ViaView(n), orig) => // unreachable: keyFor emits Verbatim only
-        Alias(vAttr(n), orig.name)(exprId = orig.exprId)
-      case CountOut(al) => Alias(Coalesce(Seq(reSum(vAttr("mv_count")),
-        Literal(0L))), al.name)(exprId = al.exprId)
-      case NNCountOut(al, _) => Alias(Coalesce(Seq(reSum(vAttr("mv_nncount")),
-        Literal(0L))), al.name)(exprId = al.exprId)
-      case SumOut(al, _, _) =>
-        Alias(reSum(vAttr("mv_sum")), al.name)(exprId = al.exprId)
-      case AvgOut(al, _, _) => Alias(avgOf(reSum(vAttr("mv_sum")),
-        reSum(vAttr("mv_nncount"))), al.name)(exprId = al.exprId)
-      case MinOut(al, _) => Alias(AggregateExpression(Min(vAttr("mv_min")),
-        Complete, isDistinct = false), al.name)(exprId = al.exprId)
-      case MaxOut(al, _) => Alias(AggregateExpression(Max(vAttr("mv_max")),
-        Complete, isDistinct = false), al.name)(exprId = al.exprId)
-      case HllOut(al, _, _) => Alias(HllSketchEstimate(AggregateExpression(
-        new HllUnionAgg(vAttr("mv_hll")), Complete, isDistinct = false)),
-        al.name)(exprId = al.exprId)
-      case DistinctCountOut(al, _) => al // unreachable: refused above
-    }
-    Some(Aggregate(ges, aggList, newExpand))
+    Some(Aggregate(ges, outs.map(reAggregate(_, v.attr)), newExpand))
   }
 
   // --------------------------------------- multi-distinct-lowering rewrite
@@ -1174,11 +1171,7 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
     val ex = inner.child match { case e: Expand => e; case _ => return None }
     val nProj = ex.projections.length
     if (nProj < 2) return None
-    val (baseRel, baseTable, baseFilter) = baseOf(ex.child).getOrElse(return None)
-    val curRegime = GraftPolicies.regime(baseTable.manifest.props, session)
-    val srcPoliced = GraftPolicies.declared(baseTable.manifest.props)
-    val filterCols = filterColsOf(baseFilter).getOrElse(return None)
-    if (!pushedCovered(ex.child, filterCols)) return None
+    val src = sourceOf(ex.child).getOrElse(return None)
 
     val gesIIds: Set[ExprId] = inner.groupingExpressions.map {
       case ar: AttributeReference => ar.exprId
@@ -1256,57 +1249,35 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
       }
     }
 
-    // Inner aggregate list: passthroughs ride; partials classify into the
-    // abelian set over RegChild columns. Build the verification `outs` and
-    // the per-alias replacement plan.
+    // Inner aggregate list: grouping attributes pass through bare, and every
+    // other output classifies like a single-table aggregate over RegChild
+    // columns, each input read as the scan column its RegChild carries.
+    // Sketch partials refuse (see above) — before classify, whose
+    // approx_count_distinct note advises a respelling this path refuses too —
+    // and so do distincts and renamed keys (shapes the lowering never makes).
     val regScanOf: Map[ExprId, AttributeReference] = regIdx.map { i =>
       ex.output(i).exprId -> (poses(i) match {
         case RegChild(sa) => sa
         case _ => return None
       })
     }.toMap
-    sealed trait PartialKind
-    case object PSum extends PartialKind
-    case object PCountStar extends PartialKind
-    case object PNNCount extends PartialKind
-    case object PMin extends PartialKind
-    case object PMax extends PartialKind
-    case object PAvg extends PartialKind
-    val partials = scala.collection.mutable.ListBuffer
-      .empty[(Alias, PartialKind, AttributeReference)]
-    var needsExactFold = false
-    inner.aggregateExpressions.foreach {
-      case ar: AttributeReference if gesIIds.contains(ar.exprId) => ()
-      case al @ Alias(AggregateExpression(fn, Complete, false, None, _), _) =>
-        fn match {
-          case sm @ Sum(sa: AttributeReference, _)
-              if regScanOf.contains(sa.exprId) &&
-                sm.evalContext.evalMode != EvalMode.TRY =>
-            if (sm.evalContext.evalMode == EvalMode.ANSI) needsExactFold = true
-            partials += ((al, PSum, regScanOf(sa.exprId)))
-          case Count(cs) if cs.nonEmpty &&
-              cs.forall(c => c.foldable && c.eval() != null) =>
-            partials += ((al, PCountStar, null))
-          case Count(Seq(sa: AttributeReference))
-              if regScanOf.contains(sa.exprId) =>
-            partials += ((al, PNNCount, regScanOf(sa.exprId)))
-          case Min(sa: AttributeReference) if regScanOf.contains(sa.exprId) =>
-            partials += ((al, PMin, regScanOf(sa.exprId)))
-          case Max(sa: AttributeReference) if regScanOf.contains(sa.exprId) =>
-            partials += ((al, PMax, regScanOf(sa.exprId)))
-          case av @ Average(sa: AttributeReference, _)
-              if regScanOf.contains(sa.exprId) &&
-                av.evalMode != EvalMode.TRY &&
-                Set[org.apache.spark.sql.types.DataType](LongType,
-                  org.apache.spark.sql.types.IntegerType,
-                  org.apache.spark.sql.types.ShortType)(sa.dataType) =>
-            if (av.evalMode == EvalMode.ANSI) needsExactFold = true
-            partials += ((al, PAvg, regScanOf(sa.exprId)))
-          case _ => return None
-        }
-      case _ => return None
-    }
-    if (partials.nonEmpty && regularRow.isEmpty) return None
+    if (inner.aggregateExpressions.exists(_.exists {
+      case _: HyperLogLogPlusPlus | _: HllSketchAgg => true
+      case _ => false
+    })) return None
+    val outs = classify(inner.aggregateExpressions, {
+      case ar: AttributeReference if gesIIds.contains(ar.exprId) =>
+        Some(Verbatim)
+      case _ => None
+    }).getOrElse(return None)
+    if (outs.exists {
+      case _: DistinctCountOut | KeyOut(_, _: Alias) => true
+      case _ => false
+    }) return None
+    val partials = partialsOf(outs, a => regScanOf.get(a.exprId).map(_.name))
+      .getOrElse(return None)
+    val partialIds = outs.collect { case a: AggOut => a.al.exprId }.toSet
+    if (partialIds.nonEmpty && regularRow.isEmpty) return None
 
     // OUTER verification: grouping over pass attrs only; every aggregate
     // pinned by FILTER (gid = <literal>) to one projection row, reading only
@@ -1316,7 +1287,6 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
       case ar: AttributeReference => passIds.contains(ar.exprId)
       case _ => false
     }) return None
-    val partialIds = partials.map(_._1.exprId).toSet
     val distIdsOfRow: Map[Any, Set[ExprId]] = gidOfRow.zipWithIndex.map {
       case (g, r) =>
         g -> distIdx.filter(i => poses(i) match {
@@ -1363,43 +1333,8 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
     val distCols = distIdx.map(i => poses(i) match {
       case Dist(sa, _) => sa.name.toLowerCase; case _ => return None
     }).toSet
-    val outs: Seq[Out] = partials.toSeq.map {
-      case (al, PSum, sa) => SumOut(al, sa, ansi = needsExactFold)
-      case (al, PCountStar, _) => CountOut(al)
-      case (al, PNNCount, sa) => NNCountOut(al, sa)
-      case (al, PMin, sa) => MinOut(al, sa)
-      case (al, PMax, sa) => MaxOut(al, sa)
-      case (al, PAvg, sa) => AvgOut(al, sa, ansi = needsExactFold)
-    }
-    val sumCols = partials.toSeq.collect {
-      case (_, k, sa) if k != PCountStar => sa.name
-    }.distinct
-    if (sumCols.size > 1) return None
-    val tc = baseRel.catalog.getOrElse(return None) match {
-      case t: TableCatalog => t
-      case _ => return None
-    }
-    val srcIdent = baseRel.identifier.getOrElse(return None)
-    val requiredKeys = passCols ++ distCols ++ filterCols
-    val declared = MviewRewriteRule.candidateViews(tc, srcIdent.namespace())
-      .filter { case (_, source, keys, sum) =>
-        source == srcIdent.name() && requiredKeys.subsetOf(keys) &&
-          sumCols.forall(_.equalsIgnoreCase(sum))
-      }
-    val ordered = declared.sortBy(_._3.size).map(d => (d._1, d._3))
-    val (vIdent, vTable, _) = pickVerified(tc, ordered, srcIdent.name(),
-      baseTable.manifest.gen, sumCols, needsExactFold, outs,
-      curRegime, srcPoliced)
+    val v = serve(src, passCols ++ distCols, outs, partials)
       .getOrElse(return None)
-
-    val wanted = requiredKeys ++ mvWanted(outs)
-    val (vScan, vAttr) = buildViewScan(vTable, vIdent, baseRel.catalog, wanted)
-    val vInput: LogicalPlan = baseFilter match {
-      case Some(c) => Filter(c.transform {
-        case ar: AttributeReference => vAttr(ar.name)
-      }, vScan)
-      case None => vScan
-    }
 
     // Rebuild the Expand: pass/dist/gid output attrs VERBATIM (the inner
     // grouping and the outer's filters/refs resolve against them), RegChild
@@ -1409,51 +1344,31 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
     val keepIdx = ex.output.indices.filterNot(i => poses(i).isInstanceOf[RegChild])
     val mvNames = mvWanted(outs).toSeq.sorted
     val mvOut: Seq[AttributeReference] =
-      mvNames.map(n => AttributeReference(n, vAttr(n).dataType)())
+      mvNames.map(n => AttributeReference(n, v.attr(n).dataType)())
     val mvAttrOf: Map[String, AttributeReference] = mvNames.zip(mvOut).toMap
     val newOutput: Seq[Attribute] = keepIdx.map(ex.output) ++ mvOut
     val newProjections: Seq[Seq[Expression]] =
       ex.projections.indices.map { r =>
         keepIdx.map { i =>
           poses(i) match {
-            case Pass(sa) => vAttr(sa.name)
+            case Pass(sa) => v.attr(sa.name)
             case Dist(sa, drs) =>
-              if (drs.contains(r)) vAttr(sa.name)
+              if (drs.contains(r)) v.attr(sa.name)
               else Literal(null, ex.output(i).dataType)
             case GidP => ex.projections(r)(gidIdx)
             case RegChild(_) => ex.projections(r)(i) // unreachable (dropped)
           }
         } ++ mvNames.map { n =>
-          if (regularRow.contains(r)) vAttr(n)
+          if (regularRow.contains(r)) v.attr(n)
           else Literal(null, mvAttrOf(n).dataType)
         }
       }
-    val newExpand = Expand(newProjections, newOutput, vInput)
+    val newExpand = Expand(newProjections, newOutput, v.input)
 
     // Rebuild the inner aggregate: passthroughs verbatim, each partial's
     // function swapped for its mv_* fold under the SAME alias/exprId.
-    val replOf: Map[ExprId, Expression] = partials.toSeq.map { case (al, k, _) =>
-      al.exprId -> (k match {
-        case PSum => reSum(mvAttrOf("mv_sum"))
-        case PCountStar =>
-          Coalesce(Seq(reSum(mvAttrOf("mv_count")), Literal(0L)))
-        case PNNCount =>
-          Coalesce(Seq(reSum(mvAttrOf("mv_nncount")), Literal(0L)))
-        case PMin => AggregateExpression(Min(mvAttrOf("mv_min")), Complete,
-          isDistinct = false)
-        case PMax => AggregateExpression(Max(mvAttrOf("mv_max")), Complete,
-          isDistinct = false)
-        case PAvg =>
-          avgOf(reSum(mvAttrOf("mv_sum")), reSum(mvAttrOf("mv_nncount")))
-      })
-    }.toMap
-    val newAesI: Seq[NamedExpression] = inner.aggregateExpressions.map {
-      case ar: AttributeReference => ar
-      case al: Alias if replOf.contains(al.exprId) =>
-        Alias(replOf(al.exprId), al.name)(exprId = al.exprId)
-      case _ => return None // unreachable: classified above
-    }
-    val newInner = Aggregate(inner.groupingExpressions, newAesI, newExpand)
+    val newInner = Aggregate(inner.groupingExpressions,
+      outs.map(reAggregate(_, mvAttrOf)), newExpand)
     // The outer aggregate rides verbatim — same grouping, same outputs, same
     // exprIds; only its input changed, and only in slices it never reads.
     Some(Aggregate(ges, aes, newInner))
@@ -1518,14 +1433,9 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
     // FACT side: the view's source, full scan, at most one key-only Filter —
     // the same proof obligations as the single-table rewrite, because the
     // view substitutes for exactly this subtree.
-    val (baseRel, baseTable, baseFilter) = baseOf(fact).getOrElse(return None)
-    // Same B233 regime matching as the single-table rewrite (the dim
-    // subtrees ride verbatim, policied or not — only the FACT substitution
-    // must match regimes).
-    val curRegime = GraftPolicies.regime(baseTable.manifest.props, session)
-    val srcPoliced = GraftPolicies.declared(baseTable.manifest.props)
-    val filterCols = filterColsOf(baseFilter).getOrElse(return None)
-    if (!pushedCovered(fact, filterCols)) return None
+    // Regimes match on the FACT substitution only: the dim subtrees ride
+    // verbatim, policied or not.
+    val src = sourceOf(fact).getOrElse(return None)
 
     val factOut = fact.outputSet
     // Grouping keys: a fact-side bare attribute must be a view key (ViaView);
@@ -1536,7 +1446,7 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
     // fact rides verbatim (a dim attr, or a deterministic dim-side
     // expression — identical on both plans). Mixed fact+dim expressions
     // refuse: no single stored column carries them.
-    lazy val genKey = genKeyOf(baseTable)
+    lazy val genKey = genKeyOf(src.table)
     val keyMap: Seq[(Expression, KeyEmit)] = ges.map {
       case ar: AttributeReference =>
         (ar, if (factOut.contains(ar)) ViaView(ar.name.toLowerCase) else Verbatim)
@@ -1603,15 +1513,9 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
     val outs = classify(aes, keyFor).getOrElse(return None)
     // Sum/avg/min/max inputs must be FACT columns: a dimension-column
     // aggregate needs per-join-row values the view does not carry.
-    val sumAttrs = outs.collect {
-      case SumOut(_, c, _) => c
-      case AvgOut(_, c, _) => c
-      case MinOut(_, c) => c
-      case MaxOut(_, c) => c
-      case NNCountOut(_, c) => c
-      case HllOut(_, c, _) => c
-    }
-    if (sumAttrs.exists(sa => !factOut.contains(sa))) return None
+    val partials = partialsOf(outs,
+      a => if (factOut.contains(a)) Some(a.name) else None)
+      .getOrElse(return None)
     // count(DISTINCT …) splits by side: a FACT-side distinct column must be
     // a view key (its per-group value set survives the substitution — the
     // view row carries the same key values every row of its group did); a
@@ -1621,55 +1525,22 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
     val factDistinctCols = outs.collect {
       case DistinctCountOut(_, c) if factOut.contains(c) => c.name.toLowerCase
     }.toSet
-    val sumCols = sumAttrs.map(_.name).distinct
-    if (sumCols.size > 1) return None
-    val needsExactFold = outs.exists {
-      case SumOut(_, _, a) => a
-      case AvgOut(_, _, a) => a
-      case _ => false
-    }
 
-    val tc = baseRel.catalog.getOrElse(return None) match {
-      case t: TableCatalog => t
-      case _ => return None
-    }
-    val srcIdent = baseRel.identifier.getOrElse(return None)
     // Every fact-side column the plan still needs must be a view key: the
     // join keys (group identity), the fact grouping keys, and the replayed
-    // filter columns. Coarsest qualifying view first — fewest rows to join.
-    val requiredKeys: Set[String] =
-      factJoinKeys.map(_.name.toLowerCase).toSet ++
-        keyMap.collect { case (_, ViaView(n)) => n } ++ filterCols ++
-        factDistinctCols
-    val declared = MviewRewriteRule.candidateViews(tc, srcIdent.namespace())
-      .filter { case (_, source, keys, sum) =>
-        source == srcIdent.name() && requiredKeys.subsetOf(keys) &&
-          sumCols.forall(_.equalsIgnoreCase(sum))
-      }
-    val ordered = declared.sortBy(_._3.size).map(d => (d._1, d._3))
-    val (vIdent, vTable, _) = pickVerified(tc, ordered, srcIdent.name(),
-      baseTable.manifest.gen, sumCols, needsExactFold, outs,
-      curRegime, srcPoliced)
-      .getOrElse(return None)
+    // filter columns (serve adds those).
+    val v = serve(src, factJoinKeys.map(_.name.toLowerCase).toSet ++
+      keyMap.collect { case (_, ViaView(n)) => n } ++ factDistinctCols,
+      outs, partials).getOrElse(return None)
 
-    val wanted = requiredKeys ++ mvWanted(outs)
-    val (vScan, vAttr) =
-      buildViewScan(vTable, vIdent, baseRel.catalog, wanted)
-
-    // Replay the key-only fact filter on the view, then re-join the view to
-    // the UNTOUCHED dimension subtrees on the same (renamed) keys: rebuild
-    // only the path joins, renaming fact attrs in their conditions; bare
-    // pruning Projects on the path are dropped (removing a pruning Project
-    // only widens the join output — the Aggregate above projects anyway, and
-    // the fact data columns such Projects carried are served by mv_* now).
-    val vInput: LogicalPlan = baseFilter match {
-      case Some(c) => Filter(c.transform {
-        case ar: AttributeReference => vAttr(ar.name)
-      }, vScan)
-      case None => vScan
-    }
+    // Re-join the view (its key-only fact filter replayed) to the UNTOUCHED
+    // dimension subtrees on the same (renamed) keys: rebuild only the path
+    // joins, renaming fact attrs in their conditions; bare pruning Projects
+    // on the path are dropped (removing a pruning Project only widens the
+    // join output — the Aggregate above projects anyway, and the fact data
+    // columns such Projects carried are served by mv_* now).
     def rebuild(p: LogicalPlan): LogicalPlan =
-      if (p eq fact) vInput
+      if (p eq fact) v.input
       else if (!containsFact(p)) p // dim subtree rides verbatim
       else p match {
         case Project(_, inner) => rebuild(inner)
@@ -1680,47 +1551,22 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
         case Join(l, r, jt, cond, hint) =>
           Join(rebuild(l), rebuild(r), jt, cond.map(_.transform {
             case ar: AttributeReference if factOut.contains(ar) =>
-              vAttr(ar.name)
+              v.attr(ar.name)
           }), hint)
         case other => other
       }
     val newJoin = rebuild(top)
 
     // Re-aggregate the partials: dim keys verbatim, fact keys renamed to the
-    // view's columns, counts/sums folded exactly as the ROLLUP path does.
+    // view's columns, partials folded exactly as the ROLLUP path does.
+    // DISTINCT is multiplicity-blind: fact-side over the (renamed) view key,
+    // dim-side verbatim — see the factDistinctCols note above.
     val aggList: Seq[NamedExpression] = outs.map {
-      case KeyOut(ViaView(n), orig) =>
-        Alias(vAttr(n), orig.name)(exprId = orig.exprId)
-      case KeyOut(Verbatim, orig) => orig
-      case CountOut(al) => Alias(Coalesce(Seq(reSum(vAttr("mv_count")),
-        Literal(0L))), al.name)(exprId = al.exprId)
-      case NNCountOut(al, _) => Alias(Coalesce(Seq(reSum(vAttr("mv_nncount")),
-        Literal(0L))), al.name)(exprId = al.exprId)
-      case SumOut(al, _, _) =>
-        Alias(reSum(vAttr("mv_sum")), al.name)(exprId = al.exprId)
-      case AvgOut(al, _, _) => Alias(avgOf(reSum(vAttr("mv_sum")),
-        reSum(vAttr("mv_nncount"))), al.name)(exprId = al.exprId)
-      // min/max are multiplicity-blind, so the join re-aggregation is exact
-      // even where a duplicate dim key repeats a view group.
-      case MinOut(al, _) => Alias(AggregateExpression(Min(vAttr("mv_min")),
-        Complete, isDistinct = false), al.name)(exprId = al.exprId)
-      case MaxOut(al, _) => Alias(AggregateExpression(Max(vAttr("mv_max")),
-        Complete, isDistinct = false), al.name)(exprId = al.exprId)
-      // sketch unions are multiplicity-blind too: a duplicate dim key
-      // unions a group's sketch with itself — a no-op.
-      case HllOut(al, _, _) => Alias(HllSketchEstimate(AggregateExpression(
-        new HllUnionAgg(vAttr("mv_hll")), Complete, isDistinct = false)),
-        al.name)(exprId = al.exprId)
-      // DISTINCT is multiplicity-blind: fact-side over the (renamed) view
-      // key, dim-side verbatim — see the factDistinctCols note above.
-      case DistinctCountOut(al, c) =>
-        if (factOut.contains(c))
-          Alias(AggregateExpression(Count(Seq(vAttr(c.name))), Complete,
-            isDistinct = true), al.name)(exprId = al.exprId)
-        else al
+      case DistinctCountOut(al, c) if !factOut.contains(c) => al
+      case o => reAggregate(o, v.attr)
     }
     val newGes = keyMap.map {
-      case (_, ViaView(n)) => vAttr(n)
+      case (_, ViaView(n)) => v.attr(n)
       case (e, Verbatim) => e
     }
     Some(Aggregate(newGes, aggList, newJoin))

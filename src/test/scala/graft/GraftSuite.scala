@@ -3,7 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession per suite (same config posture as Verify/Bench). */
+/** Shared local SparkSession per suite, in Verify's posture pinned to 4
+  * cores: UTC, nanos-as-long parquet timestamps, 4 shuffle partitions, AQE at
+  * Spark's default. It is not Bench's posture: base tables are not cached
+  * (`spark.graft.cacheTables`), and the codegen-cache and checkpoint-checksum
+  * settings are Spark's defaults. */
 trait GraftSuite extends AnyFunSuite {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -37,4 +41,9 @@ object GraftSuite {
     created.add(d)
     d.toString
   }
+
+  /** Delete `dir` with everything in it when the test JVM exits — for a dir
+    * the engine makes itself, such as a per-dataset scratch memo keyed by a
+    * `tmpDir` path. */
+  def deleteOnExit(dir: String): Unit = created.add(java.nio.file.Paths.get(dir))
 }

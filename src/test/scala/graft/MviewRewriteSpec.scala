@@ -1125,12 +1125,20 @@ class MviewRewriteSpec extends GraftSuite {
         count(lit(1)).as("n")),
       Seq(expr("hll_sketch_estimate(hll_sketch_agg(x))").as("nd"),
         sum(col("x")).as("sx"), min(col("x")).as("mn")))
-    var fired = 0
-    def check(label: String, df: => DataFrame, sortCols: Seq[String]): Unit = {
+    // Fires per rewrite-path family: the total alone would still pass if
+    // one path stopped firing (rule on and off would then simply agree).
+    val Single = "single-table/rollup/filtered"
+    val JoinF = "join"
+    val GSets = "grouping sets"
+    val MultiD = "multi-distinct"
+    val firedBy = scala.collection.mutable.Map(
+      Seq(Single, JoinF, GSets, MultiD).map(_ -> 0): _*)
+    def check(label: String, family: String, df: => DataFrame,
+        sortCols: Seq[String]): Unit = {
       val scans = scansOf(df)
       val serves = scans.exists(_.contains("pfact_mv")) &&
         !scans.exists(_.contains("pfact@"))
-      if (serves) fired += 1
+      if (serves) firedBy(family) += 1
       val got = df.orderBy(sortCols.map(c => col(c).asc_nulls_first): _*)
         .collect().map(_.toSeq).toSeq
       ruleOff {
@@ -1144,18 +1152,18 @@ class MviewRewriteSpec extends GraftSuite {
       rnd.nextInt(8) match {
         case 0 => // single-table: exact or rollup keys
           val keys = Seq(Seq("k1", "k2"), Seq("k1"), Seq("k2"))(rnd.nextInt(3))
-          check(s"t$trial single", fact.groupBy(keys.map(col): _*)
+          check(s"t$trial single", Single, fact.groupBy(keys.map(col): _*)
             .agg(aggs.head, aggs.tail: _*), keys)
         case 1 => // key-filtered rollup
           val kv = rnd.nextInt(4).toLong
-          check(s"t$trial filtered", fact.filter(col("k2") === kv)
+          check(s"t$trial filtered", Single, fact.filter(col("k2") === kv)
             .groupBy(col("k1")).agg(aggs.head, aggs.tail: _*), Seq("k1"))
         case 2 => // join on k1 (dup + missing dim keys), group by dim attr
           val gk = Seq("attr", "lbl")(rnd.nextInt(2))
-          check(s"t$trial join", fact.join(dim, col("k1") === col("pk"))
+          check(s"t$trial join", JoinF, fact.join(dim, col("k1") === col("pk"))
             .groupBy(col(gk)).agg(aggs.head, aggs.tail: _*), Seq(gk))
         case 3 => // theta conjunct over a view key + mixed grouping
-          check(s"t$trial theta", fact.join(dim,
+          check(s"t$trial theta", JoinF, fact.join(dim,
               col("k1") === col("pk") && col("k2") <= col("pk"))
             .groupBy(col("attr"), col("k2"))
             .agg(aggs.head, aggs.tail: _*), Seq("attr", "k2"))
@@ -1171,34 +1179,41 @@ class MviewRewriteSpec extends GraftSuite {
             case 1 => fact.cube(col("k1"), col("k2"))
             case 2 => fact.rollup(col("k2"))
           }).agg(aggs.head, aggs.tail: _*)
-          check(s"t$trial gsets", df, df.columns.toSeq)
+          check(s"t$trial gsets", GSets, df, df.columns.toSeq)
         case 5 => // r15 OUTER join: NULL-bearing fact keys never match (the
           // null-extension battery), missing dim keys null-extend whole
           // groups, dup keys multiply matched ones.
           val gk = Seq("attr", "lbl")(rnd.nextInt(2))
-          check(s"t$trial louter", fact.join(dim, col("k1") === col("pk"),
+          check(s"t$trial louter", JoinF, fact.join(dim, col("k1") === col("pk"),
               "left")
             .groupBy(col(gk)).agg(aggs.head, aggs.tail: _*), Seq(gk))
         case 6 => // r15 SEMI/ANTI join: set-wise keep/drop of whole groups.
           val jt = if (rnd.nextBoolean()) "left_semi" else "left_anti"
-          check(s"t$trial $jt", fact.join(dim, col("k1") === col("pk"), jt)
+          check(s"t$trial $jt", JoinF, fact.join(dim, col("k1") === col("pk"), jt)
             .groupBy(col("k2")).agg(aggs.head, aggs.tail: _*), Seq("k2"))
-        case 7 => // r15 distinct counts: the single-group mix and the
-          // multi-group Expand lowering, over NULL-bearing keys (distinct
-          // skips NULLs identically on both paths).
+        case 7 => // r15 distinct counts: the single-group mix (served by the
+          // single-table path) and the multi-group Expand lowering, over
+          // NULL-bearing keys (distinct skips NULLs identically on both
+          // paths).
           if (rnd.nextBoolean())
-            check(s"t$trial mdist", fact.groupBy(col("k1"))
+            check(s"t$trial mdist", Single, fact.groupBy(col("k1"))
               .agg(countDistinct(col("k2")).as("ndk"),
                 count(lit(1)).as("n"), sum(col("x")).as("sx")), Seq("k1"))
           else
-            check(s"t$trial mdist2", fact.agg(
+            check(s"t$trial mdist2", MultiD, fact.agg(
               countDistinct(col("k1")).as("nd1"),
               countDistinct(col("k2")).as("nd2"),
               sum(col("x")).as("sx"), count(lit(1)).as("n")), Seq("nd1"))
       }
     }
+    val fired = firedBy.values.sum
+    info(s"fires per family: $firedBy")
     assert(fired >= 14, s"property sweep exercised the rewrite only $fired/24 " +
       "times — the generator no longer hits the qualifying space")
+    firedBy.foreach { case (family, n) =>
+      assert(n >= 1, s"no $family shape fired in the sweep ($firedBy) — " +
+        "rule on and off agree vacuously for that path")
+    }
     spark.sql("DROP TABLE IF EXISTS gmvr.pfact_mv")
     spark.sql("DROP TABLE IF EXISTS gmvr.pfact")
     spark.sql("DROP TABLE IF EXISTS gmvr.pdim")

@@ -4,8 +4,9 @@ import graft.operators.Relational
 import org.apache.spark.sql.functions._
 
 /**
- * Skew-mitigation evidence (deterministic — no wall-clock assertions; measured
- * timings live in DESIGN.md §6 via `graft.SkewBench`): a planted hot key owning
+ * Skew-mitigation evidence (deterministic — no wall-clock assertions; the
+ * historical timings of the removed `graft.SkewBench` main stay in DESIGN.md
+ * §6): a planted hot key owning
  * 20% of the rows, shown (1) concentrated onto one reducer under plain hash
  * partitioning and spread by ~saltFactor under `saltedJoin`'s salted key, and
  * (2) detected and split by AQE's skew-join handling in the executed plan.

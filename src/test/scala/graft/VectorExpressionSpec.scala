@@ -332,6 +332,9 @@ class VectorExpressionSpec extends GraftSuite {
     // A private dataset dir whose embeddings.parquet is a DIRECTORY of parts —
     // the shape the incremental path detects growth in.
     val ds = new java.io.File(tmpDir("graft_vds"))
+    // VectorIndex persists the index under a scratch dir keyed by the
+    // dataset path, which is fresh per run: reclaim it at exit.
+    GraftSuite.deleteOnExit(Tables.scratchDir(spark, "vecindex", ds.getAbsolutePath))
     val embDir = new java.io.File(ds, "embeddings.parquet"); embDir.mkdirs()
     val src = Tables.embeddings(spark, sfTiny)
     def addPart(ids: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
