@@ -224,6 +224,9 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
   private sealed trait Out
   private case class KeyOut(emit: KeyEmit, orig: NamedExpression)
       extends Out
+  /** A foldable output (`lit(x) AS c`, folded into the Aggregate's outputs):
+    * one value on every row of either plan, so every path re-emits it. */
+  private case class ConstOut(al: Alias) extends Out
   /** An aggregate output: re-emitted under its alias's name and exprId. */
   private sealed trait AggOut extends Out { def al: Alias }
   /** An aggregate served from a view partial of one source column `col` —
@@ -282,11 +285,11 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
       extends AggOut
 
   /** Every output must be a key (bare, aliased, or a whole grouping
-    * EXPRESSION re-emitted under an alias), count(*)/count(1), or a
-    * sum/avg/min/max over a bare column; anything else disqualifies the
-    * aggregate. `keyFor` resolves an output expression to its grouping key's
-    * emission (canonical equality — for bare attributes that is exprId
-    * identity, for expression keys the canonical shape). */
+    * EXPRESSION re-emitted under an alias), a foldable constant,
+    * count(*)/count(1), or a sum/avg/min/max over a bare column; anything
+    * else disqualifies the aggregate. `keyFor` resolves an output expression
+    * to its grouping key's emission (canonical equality — for bare attributes
+    * that is exprId identity, for expression keys the canonical shape). */
   private def classify(aes: Seq[NamedExpression],
       keyFor: Expression => Option[KeyEmit]): Option[Seq[Out]] =
     Some(aes.map {
@@ -294,6 +297,7 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
         KeyOut(keyFor(ar).get, ar)
       case al @ Alias(e, _) if keyFor(e).isDefined =>
         KeyOut(keyFor(e).get, al)
+      case al @ Alias(e, _) if e.foldable => ConstOut(al)
       case al @ Alias(AggregateExpression(Count(cs), Complete, false, None, _), _)
           if cs.forall(c => c.foldable && c.eval() != null) => CountOut(al)
       case al @ Alias(AggregateExpression(Count(Seq(ca: AttributeReference)),
@@ -746,6 +750,7 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
     case KeyOut(ViaView(n), orig) =>
       Alias(col(n), orig.name)(exprId = orig.exprId)
     case KeyOut(Verbatim, orig) => orig
+    case ConstOut(al) => al
     case a: AggOut => Alias(a match {
       // count(*) = SUM(mv_count), coalesced to the non-null 0 of an empty
       // input (count's output is non-nullable); count(x) = SUM(mv_nncount)
@@ -885,6 +890,7 @@ case class MviewRewriteRule(session: SparkSession) extends Rule[LogicalPlan]
         case KeyOut(ViaView(n), orig) =>
           Alias(v.attr(n), orig.name)(exprId = orig.exprId)
         case KeyOut(Verbatim, orig) => orig // unreachable: single-table keys are ViaView
+        case ConstOut(al) => al
         case CountOut(al) => Alias(v.attr("mv_count"), al.name)(exprId = al.exprId)
         case NNCountOut(al, _) =>
           Alias(v.attr("mv_nncount"), al.name)(exprId = al.exprId)

@@ -9,7 +9,8 @@ import org.apache.spark.sql.catalyst.optimizer.{CollapseProject, ConstantFolding
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.trees.TreePattern.WINDOW
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
+import graft.sources.{GraftPolicies, GraftTable}
 
 /**
  * `row_number()` over a declared unique key is the literal 1 — the same
@@ -17,14 +18,13 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
  * the "latest row per key" view (`Relational.latestPerKey`) when its input
  * is already one row per key.
  *
- * Declaration: a file-source read carrying the option [[KeyOption]] (the
- * key's column names, see [[encodeKey]]) declares that the key columns are
- * unique in what it reads, with NULL components comparing equal — the
- * grouping a window's PARTITION BY applies. The keyed upsert store's
- * readers (`StreamingPipeline.readStore` / `readStoreAsOf`) set it from
- * the key columns recorded in the store's catalog manifest: the store's own
- * merge keeps one row per key.
- * The rule trusts the declaration and never scans to check it (RELY).
+ * Declaration: a graft catalog table whose manifest carries [[KeysProp]]
+ * (the key's column names, see [[encodeKey]]) declares the key unique in
+ * every scan of it, NULL components comparing equal — the grouping a
+ * window's PARTITION BY applies. The keyed upsert store's merge records it
+ * and keeps one row per key. The rule trusts the declaration and never
+ * scans to check it (RELY); a table with row/column policies is refused, as
+ * a masked key can collapse distinct keys.
  *
  * A `Window` qualifies when ALL of:
  *   1. every window expression is `row_number()`;
@@ -38,10 +38,10 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
  * window goes with it — the partition shuffle and sort disappear.
  *
  * Registered via [[GraftExtensions]] (inside the operator-optimization
- * fixpoint, before `WindowGroupLimit` inference) and at run time through
- * [[org.apache.spark.sql.GraftBridge.addOptimization]] (the terminal user
- * batch, after it — no constant folding follows there, so the rule folds
- * the now-constant `rn = 1` filter itself).
+ * fixpoint, before scan pushdown and `WindowGroupLimit` inference) and at
+ * run time through [[org.apache.spark.sql.GraftBridge.addOptimization]]
+ * (the terminal user batch, after both — no constant folding follows there,
+ * so the rule folds the now-constant `rn = 1` filter itself).
  */
 case class UniqueKeyRowNumberRule(session: SparkSession) extends Rule[LogicalPlan] {
 
@@ -72,14 +72,8 @@ case class UniqueKeyRowNumberRule(session: SparkSession) extends Rule[LogicalPla
   /** The declared unique keys visible in `plan`'s output, each as the
     * output attributes carrying its columns. */
   private def uniqueKeys(plan: LogicalPlan): Seq[Seq[Attribute]] = plan match {
-    case l: LogicalRelation => l.relation match {
-      case h: HadoopFsRelation => h.options.get(KeyOption).toSeq.flatMap { v =>
-        val cols = decodeKey(v).map(n => l.output.find(a => session.sessionState.conf
-          .resolver(a.name, n)))
-        if (cols.nonEmpty && cols.forall(_.isDefined)) Seq(cols.flatten) else Nil
-      }
-      case _ => Nil
-    }
+    case r: DataSourceV2Relation => declaredKey(r, r.output)
+    case s: DataSourceV2ScanRelation => declaredKey(s.relation, s.output)
     case Filter(_, child) => uniqueKeys(child)
     case Project(list, child) =>
       uniqueKeys(child).flatMap { key =>
@@ -91,15 +85,28 @@ case class UniqueKeyRowNumberRule(session: SparkSession) extends Rule[LogicalPla
       }
     case _ => Nil
   }
+
+  /** The key `r`'s table declares, as the attributes of `output` carrying
+    * its columns — none when a column is not in `output`. */
+  private def declaredKey(r: DataSourceV2Relation, output: Seq[Attribute]): Seq[Seq[Attribute]] =
+    r.table match {
+      case t: GraftTable if !GraftPolicies.declared(t.manifest.props) =>
+        t.manifest.props.get(KeysProp).toSeq.flatMap { v =>
+          val cols = decodeKey(v).map(n => output.find(a => session.sessionState.conf
+            .resolver(a.name, n)))
+          if (cols.nonEmpty && cols.forall(_.isDefined)) Seq(cols.flatten) else Nil
+        }
+      case _ => Nil
+    }
 }
 
 object UniqueKeyRowNumberRule {
 
-  /** File-source read option declaring the columns of a unique key. */
-  val KeyOption = "graft.uniqueKey"
+  /** Manifest property declaring the columns of a graft table's unique key. */
+  val KeysProp = "store.keys"
 
-  /** Key columns as one option/manifest value: URL-encoded names joined by
-    * commas, so any column name survives. */
+  /** Key columns as one manifest value: URL-encoded names joined by commas,
+    * so any column name survives. */
   def encodeKey(cols: Seq[String]): String =
     cols.map(URLEncoder.encode(_, UTF_8)).mkString(",")
 

@@ -229,17 +229,12 @@ class GraftCatalog extends TableCatalog
   override def loadTable(ident: Identifier, timestamp: Long): Table = {
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
     val dir = tableDir(ident)
-    val fs = dir.getFileSystem(conf)
     val tsMillis = timestamp / 1000L
-    // Cap candidates at the COMMITTED generation: the raw glob also sees a
+    // Cap candidates at the COMMITTED generation: the raw listing also sees a
     // claim whose body never completed (crashed writer) or an in-flight
     // commit — resolving into either would read uncommitted state.
     val committed = GraftManifest.currentGen(dir, conf)
-    val candidates = fs.globStatus(new Path(dir, "manifest-*.txt")).toSeq
-      .map { st =>
-        val g = st.getPath.getName.stripPrefix("manifest-").stripSuffix(".txt").toLong
-        (g, st.getModificationTime)
-      }
+    val candidates = GraftManifest.generations(dir, conf)
       .filter { case (g, mt) => g <= committed && mt <= tsMillis }
     require(candidates.nonEmpty,
       s"no committed snapshot of ${ident.name()} at or before " +
@@ -1004,12 +999,16 @@ object GraftManifest {
         else done = true
       }
       g
-    } else {
-      val st = fs.globStatus(new Path(dir, "manifest-*.txt"))
-      if (st == null || st.isEmpty) -1L
-      else st.map(_.getPath.getName.stripPrefix("manifest-").stripSuffix(".txt").toLong).max
-    }
+    } else generations(dir, conf).map(_._1).maxOption.getOrElse(-1L)
   }
+
+  /** Every generation with a manifest file in `dir` (committed, in flight or
+    * a crashed claim alike; unordered) with the file's mtime, the commit
+    * instant the publish rename stamps. Each caller filters. */
+  def generations(dir: Path, conf: Configuration): Seq[(Long, Long)] =
+    Option(dir.getFileSystem(conf).globStatus(new Path(dir, "manifest-*.txt")))
+      .toSeq.flatten.map(st => st.getPath.getName.stripPrefix("manifest-")
+        .stripSuffix(".txt").toLong -> st.getModificationTime)
 
   /** Load a claimed manifest, retrying across the claimer's content-write
     * window (small file; the claim create and the body write are one stream). */
@@ -2416,7 +2415,6 @@ object GraftScanBuilder {
     }
 }
 
-/** Manifest-pruned scan; rows flow through the public V1 bridge. */
 /**
  * The table's default scan: the NATIVE V2 batch read (inherited — file
  * slices through [[GraftParquetRead]], deletion-vector merge, runtime `_file`
@@ -2709,12 +2707,9 @@ class GraftMicroBatchStream(dir: Path, manifest: GraftManifest, required: Struct
     * stream's first batch to an island would emit a stale snapshot and then
     * wedge on the reclaimed gap right after it. */
   private def oldestRetainedGen: Long = {
-    val fs = dir.getFileSystem(conf)
-    val st = fs.globStatus(new Path(dir, "manifest-*.txt"))
-    if (st == null || st.isEmpty) 0L
+    val gens = GraftManifest.generations(dir, conf).map(_._1).toSet
+    if (gens.isEmpty) 0L
     else {
-      val gens = st.map(_.getPath.getName.stripPrefix("manifest-")
-        .stripSuffix(".txt").toLong).toSet
       var g = gens.max
       while (gens.contains(g - 1)) g -= 1
       g
@@ -3491,13 +3486,14 @@ object GraftParquetRead {
   }
 }
 
-/** Native V2 batch scan over a pruned entry list — the scan the row-level
-  * (copy-on-write) operations plan (the normal read path rides the V1 bridge;
-  * ReplaceData requires a true Batch). `currentEntries` doubles as the GROUP
-  * list the rewrite's commit replaces, and it shrinks further under RUNTIME
-  * filtering: a keyed MERGE pushes the source keys back into this scan, so
-  * only files whose partition values / min-max stats overlap the keys are
-  * read — or rewritten. Without this every MERGE would rewrite the table. */
+/** Native V2 batch scan over a pruned entry list — the base of the table's
+  * default [[GraftScan]] and, bare, the scan the row-level (copy-on-write)
+  * operations plan (ReplaceData requires a true Batch). `currentEntries`
+  * doubles as the GROUP list the rewrite's commit replaces, and it shrinks
+  * further under RUNTIME filtering: a keyed MERGE pushes the source keys back
+  * into this scan, so only files whose partition values / min-max stats
+  * overlap the keys are read — or rewritten. Without this every MERGE would
+  * rewrite the table. */
 class GraftBatchScan(dir: Path, val manifest: GraftManifest,
     val entries: Seq[(String, String)], required: StructType,
     val dataFilters: Array[Filter] = Array.empty,
@@ -3643,10 +3639,9 @@ class GraftRowLevelOperation(dir: Path, manifest: GraftManifest,
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftScanBuilder(dir, manifest) {
-      // ReplaceData requires a true V2 Batch (the V1 bridge is read-only
-      // surface); prune the same two manifest layers, then remember the scan —
-      // its final (runtime-filtered) file list is the group set the rewrite
-      // commit swaps.
+      // ReplaceData requires a true V2 Batch; prune the same two manifest
+      // layers, then remember the scan — its final (runtime-filtered) file
+      // list is the group set the rewrite commit swaps.
       override def build(): Scan = {
         val s = new GraftBatchScan(dir, manifest, keptEntries, required,
           partFilters = partFilters, fileFilters = fileFilters)
@@ -5928,7 +5923,7 @@ object GraftCatalogOps {
     val dstDir = new Path(root, dstTable)
     val conf = spark.sessionState.newHadoopConf()
     val fs = dstDir.getFileSystem(conf)
-    require(fs.globStatus(new Path(dstDir, "manifest-*.txt")).isEmpty,
+    require(GraftManifest.generations(dstDir, conf).isEmpty,
       s"clone target $dstTable already exists")
     val m = GraftManifest.load(srcDir,
       GraftManifest.currentGen(srcDir, conf), conf)

@@ -3,7 +3,8 @@ package graft.streaming
 import graft.SerializableHadoopConf
 import graft.plans.UniqueKeyRowNumberRule
 import graft.sources.{GraftCatalogOps, GraftCommitProtocol, GraftFileRecord, GraftFileSlice,
-  GraftFilesMessage, GraftLocalFileSystem, GraftManifest, GraftParquetRead, GraftRowWriter}
+  GraftFilesMessage, GraftLocalFileSystem, GraftManifest, GraftParquetRead, GraftRowWriter,
+  GraftTable}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
@@ -12,6 +13,8 @@ import org.apache.spark.sql.catalyst.expressions.{BindReferences, BoundReference
   JoinedRow, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.GenerateOrdering
 import org.apache.spark.sql.catalyst.plans.logical.Sort
+import org.apache.spark.sql.connector.catalog.Identifier
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.execution.streaming.runtime.StreamExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -77,10 +80,7 @@ object StreamingPipeline {
 
   private val BucketCol = "__bucket"
 
-  // Manifest props: the store's key columns (UniqueKeyRowNumberRule.encodeKey)
-  // and its bucket count.
-  private val KeysProp = "store.keys"
-  private val BucketsProp = "store.buckets"
+  private val BucketsProp = "store.buckets" // manifest prop: the bucket count
 
   /**
    * A9: last-write-wins keyed upsert of one micro-batch into the store — the
@@ -136,7 +136,7 @@ object StreamingPipeline {
     val root = new Path(path)
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = GraftLocalFileSystem.forPath(root, conf)
-    val keysProp = KeysProp -> UniqueKeyRowNumberRule.encodeKey(keys)
+    val keysProp = UniqueKeyRowNumberRule.KeysProp -> UniqueKeyRowNumberRule.encodeKey(keys)
     // A concurrent creator may win generation 0; its manifest serves as well.
     if (!fs.exists(new Path(root, "CURRENT")))
       GraftManifest.publishCas(root, GraftManifest(0L, batch.schema.add(BucketCol, IntegerType),
@@ -232,18 +232,20 @@ object StreamingPipeline {
   }
 
   /**
-   * Read the upsert store back without its internal bucketing column, resolving
-   * the current generation through the catalog's committed manifest — files of
-   * an uncommitted or failed writer are never visible.
+   * Read the upsert store back without its internal bucketing column: the
+   * current committed generation through the catalog's own scan
+   * ([[GraftTable]] over the manifest, planned as a `GraftScan`) — files of
+   * an uncommitted or failed writer are never visible. The schema comes from
+   * the manifest, so the read runs no schema-inference job, and a store whose
+   * generation holds no files (an empty first batch) reads as zero rows of
+   * its columns.
    *
-   * The read lists the generation's files explicitly and takes the schema
-   * from the manifest, so it runs no schema-inference job and no partition
-   * discovery. The manifest's key columns are declared on the relation as a
-   * unique key — informational, RELY-style: the store's merge keeps one row
-   * per key, and nothing re-checks it — and [[UniqueKeyRowNumberRule]] is
-   * added to the session, so a `row_number()` latest-per-key view over the
-   * read (e.g. `NutritionPipeline.enrichmentPipeline`) plans no shuffle and
-   * no window. A manifest without key columns declares no key.
+   * The manifest's key columns are the table's declared unique key —
+   * informational, RELY-style: the store's merge keeps one row per key, and
+   * nothing re-checks it — and [[UniqueKeyRowNumberRule]] is added to the
+   * session, so a `row_number()` latest-per-key view over the read (e.g.
+   * `NutritionPipeline.enrichmentPipeline`) plans no shuffle and no window.
+   * A manifest without key columns declares no key.
    */
   def readStore(spark: SparkSession, path: String): DataFrame = {
     val root = new Path(path)
@@ -258,9 +260,7 @@ object StreamingPipeline {
     val root = new Path(path)
     val conf = spark.sparkContext.hadoopConfiguration
     val committed = GraftManifest.currentGen(root, conf)
-    root.getFileSystem(conf).globStatus(new Path(root, "manifest-*.txt")).toSeq
-      .map(_.getPath.getName.stripPrefix("manifest-").stripSuffix(".txt").toLong)
-      .filter(g => g >= 1 && g <= committed).sorted
+    GraftManifest.generations(root, conf).map(_._1).filter(g => g >= 1 && g <= committed).sorted
   }
 
   /**
@@ -282,29 +282,14 @@ object StreamingPipeline {
       GraftManifest.load(root, generation, spark.sparkContext.hadoopConfiguration))
   }
 
-  /** Resolve a manifest's entries into the store DataFrame (shared by
+  /** A manifest generation of the store as a DataFrame (shared by
     * [[readStore]] and [[readStoreAsOf]] so the two read paths cannot drift). */
   private def manifestDf(spark: SparkSession, root: Path, m: GraftManifest): DataFrame = {
-    val files = m.entries.map(e => GraftManifest.resolveRel(root, e._2).toString)
-    if (files.isEmpty) spark.emptyDataFrame
-    else {
-      val keys = m.props.get(KeysProp).toSeq.flatMap(UniqueKeyRowNumberRule.decodeKey)
-      if (keys.nonEmpty) GraftBridge.addOptimization(spark, UniqueKeyRowNumberRule(spark))
-      readFiles(spark, files, m.dataSchema, keys)
-    }
-  }
-
-  /** Read committed store files by explicit path: each file's own dir is its
-    * base path, so partition discovery finds no column and the bucket column
-    * is not read. `keys`, if any, are declared unique on the relation for
-    * [[UniqueKeyRowNumberRule]]. */
-  private def readFiles(spark: SparkSession, files: Seq[String], schema: StructType,
-                        keys: Seq[String]): DataFrame = {
-    val typed = spark.read.schema(schema)
-    val keyed =
-      if (keys.isEmpty) typed
-      else typed.option(UniqueKeyRowNumberRule.KeyOption, UniqueKeyRowNumberRule.encodeKey(keys))
-    keyed.parquet(files: _*)
+    if (m.props.contains(UniqueKeyRowNumberRule.KeysProp))
+      GraftBridge.addOptimization(spark, UniqueKeyRowNumberRule(spark))
+    val ident = Identifier.of(Array.empty, root.getName)
+    GraftBridge.ofRows(spark, DataSourceV2Relation.create(new GraftTable(ident, root, m), None,
+      Some(ident))).drop(BucketCol)
   }
 
   /**

@@ -7,12 +7,13 @@ import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 
 import graft.operators.{NutritionPipeline, Relational}
-import graft.sources.GraftManifest
+import graft.sources.{GraftManifest, GraftScan}
 import graft.streaming.StreamingPipeline
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.expressions.Window
@@ -98,6 +99,18 @@ class KeyedStoreReadSpec extends GraftSuite with AdaptiveSparkPlanHelper {
     } finally {
       sc.clearJobGroup()
       sc.removeSparkListener(listener)
+    }
+  }
+
+  test("readStore and readStoreAsOf read through the catalog's GraftScan") {
+    val store = twoGenerations()
+    for (df <- Seq(StreamingPipeline.readStore(spark, store),
+        StreamingPipeline.readStoreAsOf(spark, store, 1L))) {
+      assert(df.columns.toSeq === Seq("item_name", "ingestion_ts", "data"))
+      val plan = executed(df)
+      val scans = collect(plan) { case b: BatchScanExec => b.scan }
+      assert(scans.nonEmpty && scans.forall(_.isInstanceOf[GraftScan]), plan.toString)
+      assert(collect(plan) { case f: FileSourceScanExec => f }.isEmpty, plan.toString)
     }
   }
 
@@ -195,6 +208,16 @@ class KeyedStoreReadSpec extends GraftSuite with AdaptiveSparkPlanHelper {
     val agg = Relational.latestPerKey(
       raw.groupBy("item_name").agg(max("ingestion_ts").as("ingestion_ts")), Seq("item_name"), ts)
     assert(windows(agg).nonEmpty)
+  }
+
+  test("no rewrite over a store with a masked key: masking can merge distinct keys") {
+    val store = twoGenerations()
+    spark.conf.set("spark.sql.catalog.gkeyed", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.gkeyed.root", new Path(store).getParent.toString)
+    spark.sql("ALTER TABLE gkeyed.store SET TBLPROPERTIES('graft.mask.item_name' = \"'x'\")")
+    val got = NutritionPipeline.enrichmentPipeline(StreamingPipeline.readStore(spark, store))
+    assert(windows(got).nonEmpty)
+    assert(got.count() === 1, "every key reads as 'x': one latest row")
   }
 
   test("seeded sweep: readStore is the latest row per key and enrichment is key-blind") {

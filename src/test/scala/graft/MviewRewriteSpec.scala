@@ -1781,4 +1781,36 @@ class MviewRewriteSpec extends GraftSuite {
       n.contains("hll_sketch_estimate(hll_sketch_agg(")),
       s"expected the family-mismatch note naming the serving spelling, got $notes")
   }
+
+  test("a literal output column rides every rewrite path: the view still serves") {
+    // `lit(x)` after an aggregate folds into the Aggregate's own output list;
+    // it is one value on every row of either plan, so it must not cost the
+    // rewrite (the q_mview_* queries tag their results this way).
+    val _ = root
+    import spark.implicits._
+    spark.sql("CALL gmvr.system.refresh_mview(name => 'fact_mv')")
+    graft.plans.MviewRewriteRule.invalidateCache()
+    spark.sql("DROP TABLE IF EXISTS gmvr.litdim")
+    (0L until 7L).map(i => (i, i % 2)).toDF("pk", "attr")
+      .writeTo("gmvr.litdim").create()
+    def fact = spark.table("gmvr.fact")
+    def tagged(df: DataFrame) = df.withColumn("tag", lit("t")).withColumn("one", lit(1))
+    def exact = tagged(fact.groupBy(col("k1"), col("k2"))
+      .agg(count(lit(1)).as("n"), sum(col("x")).as("sx")))
+    ruleOff(assert(exact.queryExecution.optimizedPlan.collectFirst {
+      case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
+    }.exists(_.aggregateExpressions.exists(_.name == "tag")),
+      "sanity: the literal folds into the Aggregate's outputs"))
+    checkServes(exact, Seq("k1", "k2"))
+    checkServes(tagged(fact.groupBy(col("k1"))
+      .agg(count(lit(1)).as("n"), avg(col("x")).as("ax"))), Seq("k1"))
+    checkServes(tagged(fact.cube(col("k1"), col("k2"))
+      .agg(grouping_id().as("gid"), sum(col("x")).as("sx"))), Seq("k1", "k2", "gid"))
+    checkServes(tagged(fact.groupBy(col("k1"))
+      .agg(countDistinct(col("k2")).as("nd2"), countDistinct(col("k1"), col("k2")).as("nd12"),
+        sum(col("x")).as("sx"))), Seq("k1"))
+    checkServes(tagged(fact.join(spark.table("gmvr.litdim"), col("k1") === col("pk"))
+      .groupBy(col("attr")).agg(sum(col("x")).as("sx"))), Seq("attr"))
+    spark.sql("DROP TABLE IF EXISTS gmvr.litdim")
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Relational
+import graft.operators.{NutritionPipeline, Relational}
 import graft.sources.GraftManifest
 import graft.streaming.StreamingPipeline
 import org.apache.hadoop.fs.Path
@@ -76,6 +76,18 @@ class StreamingSpec extends GraftSuite {
       assert(store0.filter(col("item_name") === "apple")
         .select("calories").as[Double].collect().head === 60.0)
     } finally q.stop()
+  }
+
+  test("a store whose first batch was empty reads as zero rows of its columns") {
+    // Generation 0 records the schema and no files; enrichment over the
+    // read must resolve its columns and find nothing.
+    val store = tmpDir("emptyfirst") + "/store"
+    val empty = Seq.empty[(String, Timestamp, String)].toDF("item_name", "ingestion_ts", "data")
+    StreamingPipeline.upsertBatch(empty, store, Seq("item_name"), Seq(col("ingestion_ts").desc))
+    assert(StreamingPipeline.storeGenerations(spark, store).isEmpty)
+    val read = StreamingPipeline.readStore(spark, store)
+    assert(read.columns.toSeq === empty.columns.toSeq)
+    assert(NutritionPipeline.enrichmentPipeline(read).count() === 0)
   }
 
   test("upsertSink keeps one txn mark per query, however many batches commit") {
