@@ -2840,8 +2840,9 @@ object StarQueries {
 
     // B169 query witness: CHANGE DATA FEED — row-level changes across a
     // create → append → DV-delete → delta-update history, recovered from
-    // manifest diffs + deletion-vector deltas + `_file`-pruned snapshot reads
-    // (no change files written at commit time; see GraftCatalogOps.changes).
+    // manifest diffs + deletion-vector deltas and read as per-file change
+    // slices (no change files written at commit time; see
+    // GraftCatalogOps.changes).
     // The oracle replays the same history relationally: appends surface as
     // inserts, DV deletes as deletes, updates as their delete+insert pairs —
     // per-commit counts and value sums hash-verified.

@@ -10,7 +10,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
@@ -20,6 +20,7 @@ import org.apache.spark.sql.connector.expressions.{Expression, Expressions, Sort
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, SupportsDynamicOverwrite, SupportsOverwrite, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetOutputWriter, ParquetWriteSupport}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.internal.SQLConf
@@ -1009,6 +1010,12 @@ object GraftManifest {
     Option(dir.getFileSystem(conf).globStatus(new Path(dir, "manifest-*.txt")))
       .toSeq.flatten.map(st => st.getPath.getName.stripPrefix("manifest-")
         .stripSuffix(".txt").toLong -> st.getModificationTime)
+
+  /** Fail with `reclaimed` (the caller's wording of what the lost generation
+    * means to its reader) unless generation `gen`'s manifest is still on
+    * disk — VACUUM deletes manifests below its horizon. */
+  def requireRetained(dir: Path, gen: Long, conf: Configuration)(reclaimed: => String): Unit =
+    require(dir.getFileSystem(conf).exists(new Path(dir, s"manifest-$gen.txt")), reclaimed)
 
   /** Load a claimed manifest, retrying across the claimer's content-write
     * window (small file; the claim create and the body write are one stream). */
@@ -2730,20 +2737,15 @@ class GraftMicroBatchStream(dir: Path, manifest: GraftManifest, required: Struct
     val c = conf
     // A vacuumed-away start generation means this checkpoint's position no
     // longer exists — fail with the cause rather than re-emitting the world.
+    // Same backstop for the end offset (a checkpointed intermediate end can
+    // be vacuumed between restarts).
+    def retained(g: Long): Unit = GraftManifest.requireRetained(dir, g, c)(
+      s"stream offset generation $g was removed by VACUUM — " +
+        "restart the query with a fresh checkpoint")
     val before: Set[String] =
       if (s < 0) Set.empty
-      else {
-        val fs = dir.getFileSystem(c)
-        require(fs.exists(new Path(dir, s"manifest-$s.txt")),
-          s"stream offset generation $s was removed by VACUUM — " +
-            "restart the query with a fresh checkpoint")
-        GraftManifest.load(dir, s, c).entries.map(_._2).toSet
-      }
-    // Backstop for the end offset too (a checkpointed intermediate end can be
-    // vacuumed between restarts): fail with the cause, not a raw read error.
-    require(dir.getFileSystem(c).exists(new Path(dir, s"manifest-$e.txt")),
-      s"stream offset generation $e was removed by VACUUM — " +
-        "restart the query with a fresh checkpoint")
+      else { retained(s); GraftManifest.load(dir, s, c).entries.map(_._2).toSet }
+    retained(e)
     val endManifest = GraftManifest.load(dir, e, c)
     val added = endManifest.entries.filterNot { case (_, r) => before(r) }
     lazy val fs = dir.getFileSystem(c)
@@ -2764,49 +2766,6 @@ class GraftMicroBatchStream(dir: Path, manifest: GraftManifest, required: Struct
     // the engine forbids mixing columnar and row partitions in one batch.
     GraftParquetRead.readerFactory(dir.toString, manifest, required,
       allowColumnar = false)
-}
-
-/**
- * STREAMING CHANGE DATA FEED (B170): the `t$changes` twin of a catalog table —
- * a streaming-only relation whose rows are t's row-level changes, each tagged
- * `_change_type` ('insert' | 'delete') and `_commit_version`. Offsets are
- * manifest generations (same axis, pacing, vacuum leases, and checkpoint
- * semantics as the base table's stream); a fresh query's first batch delivers
- * the live snapshot as inserts, and each later commit streams its exact delta:
- * added files as inserts, deletion-vector growth as deletes read back from the
- * base files at precisely the newly-dead positions (a delta UPDATE therefore
- * streams as its delete+insert pair). No change files are written at commit
- * time — the feed is recovered from what the format already records.
- *
- * Rewrite generations (overwrite / copy-on-write DML / OPTIMIZE) REMOVE
- * entries, which a streaming feed cannot represent without a cross-batch
- * diff — those fail the stream loudly with a pointer to the batch
- * [[GraftCatalogOps.changes]] (which cancels rewrite-copied rows exactly).
- * On `dml=dv` tables every DML is delta-based, so the feed covers the full
- * DML surface there.
- */
-class GraftChangesTable(ident: Identifier, dir: Path, manifest: GraftManifest)
-    extends Table with SupportsRead {
-  override def name(): String = s"graft.${ident.name()}$$changes@${manifest.gen}"
-  override def schema(): StructType = GraftChangesTable.changeSchema(manifest)
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    val streamOpts = GraftStreamOptions(
-      maxGensPerTrigger = Option(options.get("maxGensPerTrigger")).map(_.toLong),
-      maxBytesPerTrigger = Option(options.get("maxBytesPerTrigger")).map(_.toLong),
-      startingVersion = Option(options.get("startingVersion")).map(_.toLong))
-    new GraftChangesScanBuilder(dir, manifest, streamOpts)
-  }
-}
-
-object GraftChangesTable {
-  val ChangeType = "_change_type"
-  val CommitVersion = "_commit_version"
-  def changeSchema(manifest: GraftManifest): StructType =
-    StructType(manifest.schema.fields :+
-      org.apache.spark.sql.types.StructField(ChangeType, StringType, false) :+
-      org.apache.spark.sql.types.StructField(CommitVersion, LongType, false))
 }
 
 /**
@@ -2932,41 +2891,209 @@ object GraftMetaTable {
   }
 }
 
+/**
+ * CHANGE DATA FEED (B170): the `t$changes` twin of a catalog table, whose rows
+ * are t's row-level changes, each tagged `_change_type` ('insert' | 'delete')
+ * and `_commit_version`. No change files are written at commit time: the
+ * feed is recovered from what the format already records, generation by
+ * generation, as the slices [[GraftChangeSlice.plan]] plans. Both feeds read
+ * through it:
+ *   - by name, `t$changes` is streaming-only. Offsets are manifest
+ *     generations (same axis, pacing, vacuum leases, and checkpoint semantics
+ *     as the base table's stream); a fresh query's first batch delivers the
+ *     live snapshot as inserts, and each later batch its generations' slices
+ *     (a delta UPDATE therefore streams as its delete+insert pair);
+ *   - [[GraftCatalogOps.changes]] builds the table with its range's slices
+ *     already planned (`slices`) and reads them as one batch scan. That
+ *     object is never reachable by name.
+ * A rewrite generation (overwrite / copy-on-write DML / OPTIMIZE) REMOVES
+ * files whose rows it re-copies verbatim; only the batch feed's netting can
+ * cancel those copies, so the stream refuses such a generation with a
+ * pointer to it. On `dml=dv` tables every DML is delta-based, so the stream
+ * covers the full DML surface there.
+ */
+class GraftChangesTable(ident: Identifier, dir: Path, manifest: GraftManifest,
+    slices: Option[Seq[GraftChangeSlice]] = None)
+    extends Table with SupportsRead {
+  override def name(): String = s"graft.${ident.name()}$$changes@${manifest.gen}"
+  override def schema(): StructType = GraftChangesTable.changeSchema(manifest)
+  override def capabilities(): util.Set[TableCapability] =
+    util.EnumSet.of(
+      if (slices.isEmpty) TableCapability.MICRO_BATCH_READ else TableCapability.BATCH_READ)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    val streamOpts = GraftStreamOptions(
+      maxGensPerTrigger = Option(options.get("maxGensPerTrigger")).map(_.toLong),
+      maxBytesPerTrigger = Option(options.get("maxBytesPerTrigger")).map(_.toLong),
+      startingVersion = Option(options.get("startingVersion")).map(_.toLong))
+    new GraftChangesScanBuilder(dir, manifest, streamOpts, slices)
+  }
+}
+
+object GraftChangesTable {
+  val ChangeType = "_change_type"
+  val CommitVersion = "_commit_version"
+  /** The table's columns plus the two change columns. A table column named
+    * like one of those (Delta reserves the same names under CDF) would be
+    * overwritten or made ambiguous, so both feeds refuse such a table. */
+  def changeSchema(manifest: GraftManifest): StructType = {
+    manifest.schema.fieldNames.find(n =>
+      n.equalsIgnoreCase(ChangeType) || n.equalsIgnoreCase(CommitVersion)).foreach { n =>
+      throw new IllegalArgumentException(s"column `$n` collides with the change " +
+        s"feed's own `$ChangeType` / `$CommitVersion` columns — rename it to read " +
+        "the table's changes")
+    }
+    StructType(manifest.schema.fields :+
+      org.apache.spark.sql.types.StructField(ChangeType, StringType, false) :+
+      org.apache.spark.sql.types.StructField(CommitVersion, LongType, false))
+  }
+}
+
 class GraftChangesScanBuilder(dir: Path, manifest: GraftManifest,
-    streamOpts: GraftStreamOptions) extends ScanBuilder
-    with SupportsPushDownRequiredColumns {
+    streamOpts: GraftStreamOptions, slices: Option[Seq[GraftChangeSlice]])
+    extends ScanBuilder with SupportsPushDownRequiredColumns {
   private var required: StructType = GraftChangesTable.changeSchema(manifest)
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
   override def build(): Scan = new Scan {
     override def readSchema(): StructType = required
     override def description(): String =
-      s"GraftChangesScan(gen=${manifest.gen})"
+      s"GraftChangesScan(gen=${manifest.gen}${slices.fold("")(s => s", slices=${s.size}")})"
     override def toMicroBatchStream(checkpointLocation: String)
         : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
       new GraftChangesMicroBatchStream(dir, manifest, required, streamOpts,
         Option(checkpointLocation))
+    override def toBatch(): org.apache.spark.sql.connector.read.Batch =
+      new org.apache.spark.sql.connector.read.Batch {
+        override def planInputPartitions()
+            : Array[org.apache.spark.sql.connector.read.InputPartition] =
+          slices.get.toArray
+        override def createReaderFactory()
+            : org.apache.spark.sql.connector.read.PartitionReaderFactory =
+          GraftChangeSlice.readerFactory(dir.toString, manifest, required)
+      }
   }
 }
 
-/** One change-feed work unit: a base-table file read as inserts (role 0, with
-  * its at-emission DV), probed for deletes (role 1, keeping exactly the
-  * newly-dead `keepPositions`), or probed for RESURRECTED inserts (role 2,
-  * keeping the positions a DV rewind brought back) — position sets are
-  * driver-decoded DV deltas, metadata-scale. */
-case class GraftChangeSlice(partPath: String, rel: String, len: Long,
-    role: Byte, version: Long, dvRel: String = "",
-    keepPositions: Array[Long] = null)
-  extends org.apache.spark.sql.connector.read.InputPartition
+/** One change-feed work unit: `file` read as `changeType` rows of commit
+  * `version`, with the deletion vector `file.dvRel` names applied. A
+  * POSITIONAL slice (`keep` non-null) reads the file without a DV and keeps
+  * exactly the file positions in `keep`. */
+case class GraftChangeSlice(file: GraftFileSlice, changeType: String,
+    version: Long, keep: Array[Long] = null)
+  extends org.apache.spark.sql.connector.read.InputPartition {
+  /** A whole file the generation removed (a rewrite), read as deletes. */
+  def removedFile: Boolean = changeType == GraftChangeSlice.Delete && keep == null
+}
+
+object GraftChangeSlice {
+  import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
+  import GraftChangesTable.{ChangeType, CommitVersion}
+  val Insert = "insert"
+  val Delete = "delete"
+
+  /** Data file `rel` of manifest `m` under partition path `pp`, with the DV
+    * `m` gives it. */
+  def fileSlice(dir: Path, m: GraftManifest, pp: String, rel: String,
+      conf: Configuration): GraftFileSlice = {
+    val len = m.fileBytes.getOrElse(rel, {
+      val p = GraftManifest.resolveRel(dir, rel)
+      p.getFileSystem(conf).getFileStatus(p).getLen
+    })
+    GraftFileSlice(pp, rel, len, m.fileDVs.getOrElse(rel, ""))
+  }
+
+  /** Generation g's changes against g-1, the ONE planner both feeds use:
+    *   - files g added read as inserts, with their DV at g;
+    *   - files g removed read as deletes, with their DV at g-1;
+    *   - on files both carry, positions whose DV state flipped read
+    *     positionally: newly dead ones as deletes, resurrected ones (a
+    *     RESTORE rewinding deletion vectors) as inserts.
+    * DV deltas are decoded on the driver; they are metadata-scale. */
+  def plan(dir: Path, g: Long, conf: Configuration): Seq[GraftChangeSlice] = {
+    val prev = GraftManifest.load(dir, g - 1, conf)
+    val cur = GraftManifest.load(dir, g, conf)
+    val prevRels = prev.entries.map(_._2).toSet
+    val curRels = cur.entries.map(_._2).toSet
+    def whole(m: GraftManifest, changeType: String, other: Set[String]) =
+      m.entries.collect { case (pp, rel) if !other(rel) =>
+        GraftChangeSlice(fileSlice(dir, m, pp, rel, conf), changeType, g) }
+    def dead(m: GraftManifest, rel: String): Array[Long] =
+      m.fileDVs.get(rel).map(GraftDV.read(dir, _, conf)).getOrElse(Array.empty[Long])
+    val flipped = cur.entries.collect {
+      case (pp, rel) if prevRels(rel) && cur.fileDVs.get(rel) != prev.fileDVs.get(rel) =>
+        val (was, now) = (dead(prev, rel), dead(cur, rel))
+        val file = fileSlice(dir, cur, pp, rel, conf).copy(dvRel = "")
+        Seq(GraftChangeSlice(file, Delete, g, now.filterNot(was.toSet)),
+          GraftChangeSlice(file, Insert, g, was.filterNot(now.toSet)))
+    }.flatten.filter(_.keep.nonEmpty)
+    whole(cur, Insert, prevRels) ++ whole(prev, Delete, curRels) ++ flipped
+  }
+
+  /** The base-table columns behind a pruned change-feed schema. Parquet reads
+    * need at least one physical stream, so an all-change-columns projection
+    * (e.g. `count(*)` over versions) keeps one narrow base column. */
+  private def innerSchema(manifest: GraftManifest, required: StructType): StructType = {
+    val base = StructType(required.fields.filterNot(f =>
+      f.name == ChangeType || f.name == CommitVersion))
+    if (base.fields.nonEmpty) base
+    else StructType(Seq(manifest.schema.fields.head))
+  }
+
+  /** The ONE slice reader: every slice goes through the catalog's shared
+    * parquet decode under `manifest` (policies, column mapping and partition
+    * specs applied there) with true `_pos` ordinals, keeps its positions when
+    * it names them, and projects each row to `required` with the slice's
+    * change type and version. */
+  def readerFactory(tableDir: String, manifest: GraftManifest,
+      required: StructType): PartitionReaderFactory = {
+    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
+    val inner = innerSchema(manifest, required)
+    // `_pos` is never in `inner` (the change schema carries no metadata
+    // columns): it lands right after the inner fields, and the slice's two
+    // constants right after it.
+    val posIdx = inner.length
+    val rows = GraftParquetRead.readerFactory(tableDir, manifest,
+      StructType(inner.fields :+ org.apache.spark.sql.types.StructField("_pos", LongType, false)),
+      allowColumnar = false)
+    val out = required.fields.map { f =>
+      val i = f.name match {
+        case ChangeType => posIdx + 1
+        case CommitVersion => posIdx + 2
+        case n => inner.fieldIndex(n)
+      }
+      BoundReference(i, f.dataType, f.nullable): org.apache.spark.sql.catalyst.expressions.Expression
+    }.toIndexedSeq
+    new PartitionReaderFactory {
+      override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+        val slice = p.asInstanceOf[GraftChangeSlice]
+        val keep = if (slice.keep == null) null else slice.keep.sorted
+        val it = rows.createReader(slice.file)
+        val consts = new GenericInternalRow(Array[Any](
+          org.apache.spark.unsafe.types.UTF8String.fromString(slice.changeType), slice.version))
+        val joined = new JoinedRow
+        val proj = UnsafeProjection.create(out)
+        new PartitionReader[InternalRow] {
+          private var current: InternalRow = _
+          override def next(): Boolean = {
+            while (it.next()) {
+              current = it.get()
+              if (keep == null || GraftDV.contains(keep, current.getLong(posIdx))) return true
+            }
+            false
+          }
+          override def get(): InternalRow = proj(joined(current, consts))
+          override def close(): Unit = it.close()
+        }
+      }
+    }
+  }
+}
 
 class GraftChangesMicroBatchStream(dir: Path, manifest: GraftManifest,
     required: StructType, streamOpts: GraftStreamOptions,
     checkpointLocation: Option[String])
-    extends GraftMicroBatchStream(dir, manifest,
-      GraftChangesMicroBatchStream.innerSchema(manifest, required),
-      streamOpts, checkpointLocation) {
+    extends GraftMicroBatchStream(dir, manifest, required, streamOpts, checkpointLocation) {
   import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
   import org.apache.spark.sql.connector.read.streaming.Offset
-  import GraftChangesTable.{ChangeType, CommitVersion}
 
   private def hconf = SparkSession.active.sessionState.newHadoopConf()
 
@@ -2974,168 +3101,35 @@ class GraftChangesMicroBatchStream(dir: Path, manifest: GraftManifest,
     val (s, e) = (start.asInstanceOf[GenOffset].gen, end.asInstanceOf[GenOffset].gen)
     if (s >= e) return Array.empty
     val c = hconf
-    val fs = dir.getFileSystem(c)
-    require(fs.exists(new Path(dir, s"manifest-$e.txt")),
-      s"change-feed offset generation $e was removed by VACUUM — " +
+    def retained(g: Long): Unit = GraftManifest.requireRetained(dir, g, c)(
+      s"change-feed offset generation $g was removed by VACUUM — " +
         "restart the query with a fresh checkpoint")
+    retained(e)
     if (s < 0) {
       // Fresh query: the live snapshot arrives as inserts (files with their
       // at-e DV), versioned by each file's committing generation.
       val m = GraftManifest.load(dir, e, c)
       return m.entries.map { case (pp, rel) =>
-        val len = m.fileBytes.getOrElse(rel, fs.getFileStatus(GraftManifest.resolveRel(dir, rel)).getLen)
         val v = GraftParquetRead.genOf(rel)
-        GraftChangeSlice(pp, rel, len, 0, if (v >= 0) v else e,
-          m.fileDVs.getOrElse(rel, "")): InputPartition
+        GraftChangeSlice(GraftChangeSlice.fileSlice(dir, m, pp, rel, c),
+          GraftChangeSlice.Insert, if (v >= 0) v else e): InputPartition
       }.toArray
     }
-    require(fs.exists(new Path(dir, s"manifest-$s.txt")),
-      s"change-feed offset generation $s was removed by VACUUM — " +
-        "restart the query with a fresh checkpoint")
+    retained(s)
     (s + 1 to e).flatMap { g =>
-      val mPrev = GraftManifest.load(dir, g - 1, c)
-      val mCur = GraftManifest.load(dir, g, c)
-      val prevRels = mPrev.entries.map(_._2).toSet
-      val curRels = mCur.entries.map(_._2).toSet
-      val removed = prevRels -- curRels
-      require(removed.isEmpty,
-        s"generation $g removed ${removed.size} file(s) (overwrite / " +
+      val slices = GraftChangeSlice.plan(dir, g, c)
+      val removed = slices.count(_.removedFile)
+      require(removed == 0,
+        s"generation $g removed $removed file(s) (overwrite / " +
           "copy-on-write DML / OPTIMIZE) — a streaming change feed cannot " +
           "represent rewrites; use GraftCatalogOps.changes for batch history " +
           "across them (dml=dv tables stream their full DML surface)")
-      val inserts = mCur.entries.collect { case (pp, rel) if !prevRels(rel) =>
-        val len = mCur.fileBytes.getOrElse(rel, fs.getFileStatus(GraftManifest.resolveRel(dir, rel)).getLen)
-        GraftChangeSlice(pp, rel, len, 0, g,
-          mCur.fileDVs.getOrElse(rel, "")): InputPartition
-      }
-      // DV deltas in BOTH directions: growth streams deletes, shrinkage
-      // (a RESTORE rewinding deletion vectors) streams the resurrected rows
-      // as positional inserts — the batch feed and this stream must agree.
-      val dvChanges = mPrev.entries.collect {
-        case (pp, rel) if curRels(rel) &&
-            mCur.fileDVs.get(rel) != mPrev.fileDVs.get(rel) =>
-          val curPos = mCur.fileDVs.get(rel)
-            .map(GraftDV.read(dir, _, c)).getOrElse(Array.empty[Long])
-          val prevPos = mPrev.fileDVs.get(rel)
-            .map(GraftDV.read(dir, _, c)).getOrElse(Array.empty[Long])
-          val prevSet = prevPos.toSet
-          val curSet = curPos.toSet
-          val len = mCur.fileBytes.getOrElse(rel, fs.getFileStatus(GraftManifest.resolveRel(dir, rel)).getLen)
-          Seq(
-            GraftChangeSlice(pp, rel, len, 1, g, "",
-              curPos.filterNot(prevSet)): InputPartition,
-            GraftChangeSlice(pp, rel, len, 2, g, "",
-              prevPos.filterNot(curSet)): InputPartition)
-      }.flatten.filter(_.asInstanceOf[GraftChangeSlice].keepPositions.nonEmpty)
-      inserts ++ dvChanges
+      slices
     }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val inner = GraftChangesMicroBatchStream.innerSchema(manifest, required)
-    GraftChangesMicroBatchStream.readerFactory(dir.toString, manifest, required, inner)
-  }
-}
-
-object GraftChangesMicroBatchStream {
-  import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
-  import GraftChangesTable.{ChangeType, CommitVersion}
-
-  /** The base-table columns behind a pruned change-feed schema. Parquet reads
-    * need at least one physical stream, so an all-change-columns projection
-    * (e.g. `count(*)` over versions) keeps one narrow base column. */
-  def innerSchema(manifest: GraftManifest, required: StructType): StructType = {
-    val base = StructType(required.fields.filterNot(f =>
-      f.name == ChangeType || f.name == CommitVersion))
-    if (base.fields.nonEmpty) base
-    else StructType(Seq(manifest.schema.fields.head))
-  }
-
-  /** Wraps the shared parquet decode: insert slices re-project each inner row
-    * plus the two constant change fields; delete slices read the file with
-    * true `_pos` ordinals (the unfiltered-twin path), keep exactly the
-    * newly-dead positions, and re-project the same way. */
-  def readerFactory(tableDir: String, manifest: GraftManifest,
-      required: StructType, inner: StructType): PartitionReaderFactory = {
-    val insertInner = GraftParquetRead.readerFactory(tableDir, manifest, inner,
-      allowColumnar = false)
-    // `_pos` is never in `inner` (the change schema carries no metadata
-    // columns), so the delete read appends it and indices of inner fields
-    // stay aligned between the two schemas.
-    val deleteSchema = StructType(inner.fields :+
-      org.apache.spark.sql.types.StructField("_pos", LongType, false))
-    val posIdx = inner.fields.length
-    val deleteInner = GraftParquetRead.readerFactory(tableDir, manifest,
-      deleteSchema, allowColumnar = false)
-    val innerTypes = inner.fields.map(_.dataType)
-    // Map each output ordinal to its inner ordinal (change cols → -1/-2).
-    val outMap = required.fields.map { f =>
-      if (f.name == ChangeType) -1
-      else if (f.name == CommitVersion) -2
-      else inner.fieldNames.indexOf(f.name)
-    }
-    new PartitionReaderFactory {
-      override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-        val slice = p.asInstanceOf[GraftChangeSlice]
-        val tag = org.apache.spark.unsafe.types.UTF8String.fromString(
-          if (slice.role == 1) "delete" else "insert")
-        val version = slice.version
-        if (slice.role == 0) {
-          val it = insertInner.createReader(
-            GraftFileSlice(slice.partPath, slice.rel, slice.len, slice.dvRel))
-          new PartitionReader[InternalRow] {
-            private val out = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(required.length)
-            override def next(): Boolean = it.next()
-            override def get(): InternalRow = {
-              val row = it.get()
-              var i = 0
-              while (i < required.length) {
-                outMap(i) match {
-                  case -1 => out.update(i, tag)
-                  case -2 => out.update(i, version)
-                  case j  => out.update(i, row.get(j, innerTypes(j)))
-                }
-                i += 1
-              }
-              out
-            }
-            override def close(): Unit = it.close()
-          }
-        } else {
-          val keep = slice.keepPositions.sorted
-          val it = deleteInner.createReader(
-            GraftFileSlice(slice.partPath, slice.rel, slice.len, ""))
-          new PartitionReader[InternalRow] {
-            private val out = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(required.length)
-            private var current: InternalRow = _
-            override def next(): Boolean = {
-              while (it.next()) {
-                val row = it.get()
-                if (GraftDV.contains(keep, row.getLong(posIdx))) {
-                  current = row
-                  return true
-                }
-              }
-              false
-            }
-            override def get(): InternalRow = {
-              var i = 0
-              while (i < required.length) {
-                outMap(i) match {
-                  case -1 => out.update(i, tag)
-                  case -2 => out.update(i, version)
-                  case j  => out.update(i, current.get(j, innerTypes(j)))
-                }
-                i += 1
-              }
-              out
-            }
-            override def close(): Unit = it.close()
-          }
-        }
-      }
-    }
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    GraftChangeSlice.readerFactory(dir.toString, manifest, required)
 }
 
 /** Shared executor-side parquet decode for the catalog's native V2 reads
@@ -3785,7 +3779,7 @@ class GraftDeltaBatchWrite(dir: Path, prev: GraftManifest, writeSchema: StructTy
           else org.apache.spark.sql.SparkSession.getActiveSession
             .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
             .map { spark =>
-              try GraftDVAggs.computeAll(spark, dir,
+              try GraftDVAggs.computeAll(spark, dir, base,
                 merged.map { case (rel, pos) => rel -> pos.distinct })
               catch { case _: Exception => Map.empty[String, String] }
             }.getOrElse(Map.empty)
@@ -5036,9 +5030,9 @@ object GraftDV {
  * incrementally merged), so a pre-feature DV vintage upgrades to exact
  * aggregates on its next delete.
  *
- * Scale: the compute is ONE executor job over only the touched files,
- * position-filtered by a broadcast of the DV — cost proportional to the
- * delete, the same order as writing the DV itself.
+ * Scale: the compute is ONE executor job, one task per touched file, each
+ * reading only its DV positions — cost proportional to the delete, the same
+ * order as writing the DV itself.
  */
 object GraftDVAggs {
   import java.net.{URLDecoder, URLEncoder}
@@ -5064,85 +5058,68 @@ object GraftDVAggs {
     }).mkString(";")
 
   /**
-   * Aggregate the DELETED rows of every touched file in ONE job: row count,
-   * per-column deleted non-null counts, per-integral-column deleted sums,
-   * grouped by file. `byFile` maps each rel to its FULL DV position set.
+   * Aggregate the DELETED rows of every touched file of `m`: row count,
+   * per-column deleted non-null counts, per-integral-column deleted sums.
+   * `byFile` maps each rel to its FULL DV position set.
    *
-   * Join key is (file basename, `_metadata.row_index`): row_index equals the
-   * engine's own `_pos` ordinal (both are the 0-based physical row index;
-   * the catalog's position reads are unfiltered for exactly this reason),
-   * and part-file basenames embed the write job's UUID, so they are unique
-   * within a table. `mergeSchema` unions vintages (ADD COLUMN drift): a
-   * column a file physically lacks aggregates as all-null there, which is
-   * harmless — the metadata path only consults a column's DV aggregates
-   * AFTER the file's own stats prove the column exists in that file.
-   *
-   * One scan over only the touched files, one broadcast of the position
-   * sets — the same order of work as writing the DVs themselves (the
-   * per-file-job formulation cost ~1 job × files-touched per commit and
-   * dominated every DML-heavy bench query).
+   * Each file is read once, in its own task, through the change feed's
+   * positional slice reader (no DV applied, exactly its DV positions kept)
+   * and aggregated there; columns are keyed by their physical names, as the
+   * file stats are. A column a file lacks (ADD COLUMN drift) reads as null
+   * there, which is harmless — the metadata path only consults a column's DV
+   * aggregates AFTER the file's own stats prove the column exists in that
+   * file. One job over only the touched files — the same order of work as
+   * writing the DVs themselves.
    */
   def computeAll(spark: org.apache.spark.sql.SparkSession, tableDir: Path,
-                 byFile: Seq[(String, Array[Long])]): Map[String, String] = {
-    import org.apache.spark.sql.functions._
-    val nonEmpty = byFile.filter(_._2.nonEmpty)
-    val zeros = byFile.filter(_._2.isEmpty)
-      .map { case (rel, _) => rel -> GraftDVAggs.encode(0L, Nil) }
-    if (nonEmpty.isEmpty) return zeros.toMap
-    def basename(rel: String): String = rel.substring(rel.lastIndexOf('/') + 1)
-    val baseToRel = nonEmpty.map { case (rel, _) => basename(rel) -> rel }.toMap
-    require(baseToRel.size == nonEmpty.size,
-      s"duplicate data-file basenames in one commit: ${nonEmpty.map(_._1)}")
-    val paths = nonEmpty.map { case (rel, _) =>
-      GraftManifest.resolveRel(tableDir, rel).toString }
-    val raw = spark.read.option("mergeSchema", "true").parquet(paths: _*)
-    val dataCols = raw.schema.fields.map(_.name).toSeq
-    // The join-key columns are SYNTHESIZED via withColumn, which REPLACES a
-    // same-named physical column — a table with a data column literally named
-    // like these would aggregate over the synthesized value (always non-null)
-    // instead of its own data, a silently wrong COUNT(col). Refuse to record
-    // on collision: absence degrades those files to scan-fallback (correct).
-    val kB = "__graft_dv_base"; val kP = "__graft_dv_pos"
-    if (dataCols.contains(kB) || dataCols.contains(kP)) return zeros.toMap
-    val posRows = nonEmpty.flatMap { case (rel, ps) =>
-      val b = basename(rel)
-      ps.map(p => org.apache.spark.sql.Row(b, p))
+                 m: GraftManifest, byFile: Seq[(String, Array[Long])]): Map[String, String] = {
+    val zeros = byFile.collect { case (rel, ps) if ps.isEmpty => rel -> encode(0L, Nil) }.toMap
+    val conf = spark.sessionState.newHadoopConf()
+    val partOf = m.entries.map(_.swap).toMap
+    val slices = byFile.collect { case (rel, ps) if ps.nonEmpty =>
+      GraftChangeSlice(GraftChangeSlice.fileSlice(tableDir, m, partOf(rel), rel, conf)
+        .copy(dvRel = ""), GraftChangeSlice.Delete, m.gen, ps)
     }
-    val posDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(posRows, 1),
-      StructType(Seq(
-        org.apache.spark.sql.types.StructField(kB, StringType),
-        org.apache.spark.sql.types.StructField(kP, LongType))))
-    val dead = raw
-      .withColumn(kB, element_at(split(col("_metadata.file_path"), "/"), -1))
-      .withColumn(kP, col("_metadata.row_index"))
-      .join(broadcast(posDf), Seq(kB, kP))
-    val integral: Set[String] = raw.schema.fields.collect {
-      case f if f.dataType == IntegerType || f.dataType == LongType ||
-        f.dataType == ShortType => f.name
-    }.toSet
-    // Same collision rule for the aggregate ALIASES (`_n`, `_nn_<c>`,
-    // `_sum_<c>`): a data column named like one would make getAs ambiguous.
-    val aliases = "_n" +: dataCols.flatMap(c => Seq(s"_nn_$c", s"_sum_$c"))
-    if (aliases.exists(dataCols.contains)) return zeros.toMap
-    val aggs = count(lit(1)).as("_n") +:
-      dataCols.flatMap { c =>
-        count(col(c)).as(s"_nn_$c") ::
-          (if (integral(c))
-            List(coalesce(sum(col(c).cast("long")), lit(0L)).as(s"_sum_$c"))
-          else Nil)
-      }
-    val rows = dead.groupBy(col(kB)).agg(aggs.head, aggs.tail: _*).collect()
-    val computed = rows.map { row =>
-      val rel = baseToRel(row.getAs[String](kB))
-      rel -> GraftDVAggs.encode(row.getAs[Long]("_n"), dataCols.map { c =>
-        (c, row.getAs[Long](s"_nn_$c"),
-          if (integral(c)) Some(row.getAs[Long](s"_sum_$c")) else None)
-      })
-    }.toMap
-    // A rel whose positions matched no rows is OMITTED (inconsistent input):
-    // absence degrades that file to scan-fallback, never a wrong subtraction.
-    zeros.toMap ++ computed
+    if (slices.isEmpty) return zeros
+    val cols = m.dataSchema.fields
+    val names = cols.map(f => m.physicalName(f.name))
+    // 0 = not summed; 1/2/3 = int/long/short, summed as wrapping longs.
+    val kind = cols.map(_.dataType match {
+      case IntegerType => 1
+      case LongType => 2
+      case ShortType => 3
+      case _ => 0
+    })
+    val reader = GraftChangeSlice.readerFactory(tableDir.toString, m, m.dataSchema)
+    val computed = spark.sparkContext.parallelize(slices, slices.size).mapPartitions(_.flatMap { slice =>
+      val it = reader.createReader(slice)
+      var n = 0L
+      val nonNull = new Array[Long](cols.length)
+      val sums = new Array[Long](cols.length)
+      try while (it.next()) {
+        val row = it.get()
+        n += 1
+        var i = 0
+        while (i < cols.length) {
+          if (!row.isNullAt(i)) {
+            nonNull(i) += 1
+            sums(i) += (kind(i) match {
+              case 1 => row.getInt(i).toLong
+              case 2 => row.getLong(i)
+              case 3 => row.getShort(i).toLong
+              case _ => 0L
+            })
+          }
+          i += 1
+        }
+      } finally it.close()
+      // A file whose positions matched no rows is OMITTED (inconsistent
+      // input): absence degrades it to scan-fallback, never a wrong subtraction.
+      if (n == 0) None
+      else Some(slice.file.rel -> encode(n, cols.indices.map(i =>
+        (names(i), nonNull(i), if (kind(i) == 0) None else Some(sums(i))))))
+    }).collect()
+    zeros ++ computed
   }
 }
 
@@ -5954,146 +5931,79 @@ object GraftCatalogOps {
    * an update is its delete+insert pair) and `_commit_version`.
    *
    * Computed from what the format already records — no extra change files at
-   * write time. Per generation g, the manifest diff names the touched files:
-   *   - delete candidates = rows live at g-1 in files g REMOVED, plus rows at
-   *     positions g's DELETION VECTORS newly cover (read from the g-1
-   *     snapshot via the `_file`/`_pos` metadata columns and a broadcast
-   *     semi-join against the driver-decoded DV position delta — DV deltas
-   *     are metadata-scale by design);
-   *   - insert candidates = rows live at g in files g ADDED;
-   *   - changes = candidates minus their cross-side multiset intersection
-   *     (`exceptAll` both ways): an append emits pure inserts, a DV delete
-   *     pure deletes, a delta UPDATE its delete+insert pairs — and a
-   *     copy-on-write rewrite or OPTIMIZE, which re-copies rows verbatim,
-   *     emits NOTHING for the unchanged rows. One formulation, every commit
-   *     type.
+   * write time. Each generation's changes are the slices
+   * [[GraftChangeSlice.plan]] plans for it, the same slices the `t$changes`
+   * stream reads, and the feed reads them in ONE batch scan through the same
+   * slice reader: only the touched files (and the DV'd ones) are read, never
+   * the table, and manifest/DV work is driver-side metadata. `tableRef` is
+   * not consulted; the table is read from its files under `root`.
    *
-   * Scale shape: every read is `_file`-pruned to the touched files (the scan
-   * builder prunes manifest entries on `_file` predicates before any IO), the
-   * exceptAll shuffles only those files' rows, and manifest/DV work is
-   * driver-side metadata. A 10-file commit on a 30 000-file table reads 10
-   * files (+ the DV'd ones), never the table.
+   * A generation with slices on BOTH sides (a delta UPDATE, or a
+   * copy-on-write rewrite or OPTIMIZE, which re-copies unchanged rows
+   * verbatim) is netted: per (row, version), net = inserted − deleted
+   * copies; net < 0 emits |net| deletes, net > 0 emits net inserts, and an
+   * unchanged copied row cancels — exactly `exceptAll`'s multiset on each
+   * side. Pure-append and pure-delete generations are read without an
+   * aggregate.
    *
-   * Schema evolution: candidates align to toGen's schema (ADD COLUMN only
-   * evolves forward; pre-evolution rows surface null for the new columns,
-   * exactly as the snapshots themselves do). Requires manifests ≥ fromGen to
-   * still exist — a VACUUM past that horizon fails the feed loudly.
+   * Schema: toGen's (partition columns included: a change row without its
+   * partition key cannot be replayed); pre-ADD-COLUMN rows surface null for
+   * the new columns, as the snapshots themselves do. Requires manifests
+   * ≥ fromGen to still exist — a VACUUM past that horizon fails the feed
+   * loudly.
    */
   def changes(spark: SparkSession, tableRef: String, root: String, table: String,
               fromGen: Long, toGen: Long): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.DataFrame
-    import org.apache.spark.sql.functions.{broadcast, col, lit}
     require(fromGen >= 0 && toGen > fromGen,
       s"need 0 <= fromGen < toGen, got ($fromGen, $toGen]")
     val dir = new Path(root, table)
     val conf = spark.sessionState.newHadoopConf()
-    (fromGen to toGen).foreach { g =>
-      require(dir.getFileSystem(conf).exists(new Path(dir, s"manifest-$g.txt")),
-        s"change feed needs manifest-$g, which VACUUM has reclaimed — " +
-          "narrow the range to retained generations")
-    }
+    (fromGen to toGen).foreach(g => GraftManifest.requireRetained(dir, g, conf)(
+      s"change feed needs manifest-$g, which VACUUM has reclaimed — " +
+        "narrow the range to retained generations"))
     val mTo = GraftManifest.load(dir, toGen, conf)
-    // FULL schema including partition columns (the streaming twin agrees):
-    // a change row without its partition key cannot be replayed, and a
-    // cross-partition row move differing only in the partition column would
-    // otherwise cancel in the exceptAll and vanish from the feed.
-    val outCols = mTo.schema.fields.map(f => f.name -> f.dataType).toSeq
-    def aligned(df: DataFrame): DataFrame =
-      df.select(outCols.map { case (n, dt) =>
-        (if (df.columns.contains(n)) col(n) else lit(null).cast(dt)).as(n) }: _*)
-    // Deliberately NOT memoized per generation (r16, measured): reusing one
-    // analyzed DataFrame across several subtree positions made the consumer
-    // subset +0.7 s (DeduplicateRelations re-aliasing of the shared relation
-    // costs more than the saved re-parses) — fresh spark.sql per leg wins.
-    def snap(g: Long): DataFrame =
-      spark.sql(s"SELECT *, _file, _pos FROM $tableRef VERSION AS OF $g")
-    val frames: Seq[DataFrame] = (fromGen + 1 to toGen).flatMap { g =>
-      val mPrev = GraftManifest.load(dir, g - 1, conf)
-      val mCur = GraftManifest.load(dir, g, conf)
-      val prevRels = mPrev.entries.map(_._2).toSet
-      val curRels = mCur.entries.map(_._2).toSet
-      val added = (curRels -- prevRels).toSeq.sorted
-      val removed = (prevRels -- curRels).toSeq.sorted
-      // DV deltas on carried-forward files, both directions: positions newly
-      // dead at g (DV(g) ∖ DV(g-1) → deletes) and positions RESURRECTED at g
-      // (DV(g-1) ∖ DV(g) → inserts — a RESTORE rewinds deletion vectors, and
-      // the rows it brings back are real row-level changes).
-      val (dvPairs, resurrected) = {
-        val dead = Seq.newBuilder[(String, Long)]
-        val back = Seq.newBuilder[(String, Long)]
-        (prevRels & curRels).toSeq.sorted.foreach { rel =>
-          val curDv = mCur.fileDVs.get(rel)
-          val prevDv = mPrev.fileDVs.get(rel)
-          if (curDv != prevDv) {
-            val curPos = curDv.map(GraftDV.read(dir, _, conf)).getOrElse(Array.empty[Long])
-            val prevPos = prevDv.map(GraftDV.read(dir, _, conf)).getOrElse(Array.empty[Long])
-            val prevSet = prevPos.toSet
-            val curSet = curPos.toSet
-            curPos.filterNot(prevSet).foreach(p => dead += (rel -> p))
-            prevPos.filterNot(curSet).foreach(p => back += (rel -> p))
-          }
-        }
-        (dead.result(), back.result())
-      }
-      def posSemiJoin(snapDf: DataFrame, pairs: Seq[(String, Long)]): DataFrame = {
-        import spark.implicits._
-        val pdf = pairs.toDF("cdf_file", "cdf_pos")
-        // `_file` prune first (manifest-entry pruning, zero IO on untouched
-        // files), then the broadcast semi-join picks the exact positions.
-        snapDf.where(col("_file").isin(pairs.map(_._1).distinct: _*))
-          .join(broadcast(pdf),
-            col("_file") === col("cdf_file") && col("_pos") === col("cdf_pos"),
-            "left_semi")
-      }
-      val insFromAdded =
-        if (added.isEmpty) None
-        else Some(snap(g).where(col("_file").isin(added: _*)))
-      val insFromDv =
-        if (resurrected.isEmpty) None
-        else Some(posSemiJoin(snap(g), resurrected))
-      val insCand = (insFromAdded.toSeq ++ insFromDv.toSeq)
-        .reduceOption(_ unionByName _).map(aligned)
-      val delFromRemoved =
-        if (removed.isEmpty) None
-        else Some(snap(g - 1).where(col("_file").isin(removed: _*)))
-      val delFromDv =
-        if (dvPairs.isEmpty) None
-        else Some(posSemiJoin(snap(g - 1), dvPairs))
-      val delCand = (delFromRemoved.toSeq ++ delFromDv.toSeq)
-        .reduceOption(_ unionByName _).map(aligned)
-      val netted: Seq[DataFrame] = (delCand, insCand) match {
-        case (Some(dc), Some(ic)) =>
-          // Symmetric difference with multiplicity in ONE pass (r16, guide
-          // §2.4): the former dc.exceptAll(ic) / ic.exceptAll(dc) pair
-          // scanned BOTH snapshot subtrees twice each (RewriteExceptAll =
-          // union + two aggregates + generate, per direction — 12 scans in
-          // q_catalog_cdf's plan). One signed-count aggregation yields both
-          // directions: for a distinct row with d delete-side and i
-          // insert-side copies, net = i − d; net < 0 emits d−i deletes,
-          // net > 0 emits i−d inserts, net = 0 (an UPDATE's rewrite-copied
-          // row) cancels — exactly exceptAll's multiset on each side.
-          import org.apache.spark.sql.functions.{abs, explode, sequence, sum, when}
-          val outNames = outCols.map(_._1)
-          val net = dc.withColumn("__side", lit(-1L))
-            .unionByName(ic.withColumn("__side", lit(1L)))
-            .groupBy(outNames.map(col): _*)
-            .agg(sum(col("__side")).as("__net"))
-            .filter(col("__net") =!= 0L)
-          Seq(net
-            .withColumn("_change_type",
-              when(col("__net") < 0L, lit("delete")).otherwise(lit("insert")))
-            .withColumn("__dup", explode(sequence(lit(1L), abs(col("__net")))))
-            .select((outNames.map(col) :+ col("_change_type")): _*))
-        case _ =>
-          delCand.map(_.withColumn("_change_type", lit("delete"))).toSeq ++
-            insCand.map(_.withColumn("_change_type", lit("insert"))).toSeq
-      }
-      netted.map(_.withColumn("_commit_version", lit(g)))
-    }
-    frames.reduceOption(_ unionByName _).getOrElse(
-      aligned(snap(toGen)).limit(0)
-        .withColumn("_change_type", lit("").cast(StringType))
-        .withColumn("_commit_version", lit(toGen)))
+    val ident = Identifier.of(Array.empty, table)
+    // The reader builds one parquet reader per partition spec among its
+    // manifest's entries, so it is handed the slices' own files: a file a
+    // rewrite removed may carry a spec no toGen file does.
+    def scan(slices: Seq[GraftChangeSlice]) = GraftBridge.ofRows(spark,
+      DataSourceV2Relation.create(new GraftChangesTable(ident, dir,
+        mTo.copy(entries = slices.map(s => s.file.partPath -> s.file.rel).distinct),
+        Some(slices)), None, Some(ident)))
+    // Generations with slices on both sides are netted; the rest read plain.
+    val (mixed, pure) = (fromGen + 1 to toGen).map(GraftChangeSlice.plan(dir, _, conf))
+      .partition(ss => ss.map(_.changeType).distinct.size == 2)
+    val (netted, plain) = (mixed.flatten, pure.flatten)
+    val frames =
+      (if (plain.nonEmpty || netted.isEmpty) Seq(scan(plain)) else Nil) ++
+        (if (netted.nonEmpty) Seq(netChanges(spark, scan(netted))) else Nil)
+    frames.reduce(_ union _)
+  }
+
+  /** The change feed's netting over `feed`'s attributes (so no helper column
+    * can shadow a user column), in the formulation of Spark's
+    * `RewriteExceptAll` for both sides at once: an Aggregate of the signed
+    * count per (row, version), a Filter dropping zero nets, and a
+    * `ReplicateRows` generator emitting |net| copies as the winning side —
+    * no per-row array. */
+  private def netChanges(spark: SparkSession, feed: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{Abs, Alias, If, LessThan, Literal, Not, ReplicateRows, EqualTo => Eq}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Sum
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Generate, Project, Filter => Where}
+    import GraftChangeSlice.{Delete, Insert}
+    val child = GraftBridge.analyzed(feed)
+    val changeType = child.output.find(_.name == GraftChangesTable.ChangeType).get
+    val keys = child.output.filterNot(_ == changeType)
+    val count = Alias(Sum(If(Eq(changeType, Literal(Delete)), Literal(-1L), Literal(1L)))
+      .toAggregateExpression(), "net")()
+    val net = count.toAttribute
+    val nonZero = Where(Not(Eq(net, Literal(0L))), Aggregate(keys, keys :+ count, child))
+    val rows = child.output.map(a =>
+      if (a == changeType) If(LessThan(net, Literal(0L)), Literal(Delete), Literal(Insert)) else a)
+    val output = child.output.map(_.newInstance())
+    GraftBridge.ofRows(spark, Project(output,
+      Generate(ReplicateRows(Abs(net) +: rows), Nil, outer = false, None, output, nonZero)))
   }
 
   /**

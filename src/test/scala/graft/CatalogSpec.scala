@@ -2135,6 +2135,129 @@ class CatalogSpec extends GraftSuite {
     assert(rows == Map(
       ("delete", 2L, "b") -> 2,   // both copies of id=2, nothing for id=1
       ("insert", 2L, "u") -> 2), rows.toString)
+    // A rewrite that drops 10,000 identical rows emits exactly 10,000 deletes.
+    val big = freshTable("cdfdupbig")
+    (Seq.fill(10000)((9L, "same")) :+ ((1L, "keep")))
+      .toDF("id", "s").coalesce(1).writeTo(big).create()            // gen 1
+    spark.sql(s"DELETE FROM $big WHERE id = 9")                      // gen 2
+    val dropped = graft.sources.GraftCatalogOps.changes(spark, big, root, "cdfdupbig", 1L, 2L)
+      .select(col("_change_type"), col("id"), col("s")).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
+      .groupBy(identity).view.mapValues(_.size).toMap
+    assert(dropped == Map(("delete", 9L, "same") -> 10000), dropped.toString)
+  }
+
+  test("change feed nets on attributes: helper-named user columns survive, ReplicateRows replicates") {
+    import spark.implicits._
+    // The same copy-on-write history on two tables, one whose columns are
+    // named like helper columns a name-based netting would add. Rewritten
+    // duplicate rows must cancel on both, and both feeds must agree.
+    def feed(name: String, cols: Seq[String]) = {
+      val t = freshTable(name)
+      Seq((1L, 10L, "a", 5L), (1L, 10L, "a", 5L), (2L, 20L, "b", 6L), (3L, 30L, "c", 7L))
+        .toDF("id" +: cols: _*).coalesce(1).writeTo(t).create()      // gen 1
+      spark.sql(s"UPDATE $t SET `${cols(1)}` = 'u' WHERE id = 2")      // gen 2 (rewrite)
+      val cdf = graft.sources.GraftCatalogOps.changes(spark, t, root, name, 1L, 2L)
+      val rows = cdf.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2),
+        r.getLong(3), r.getString(4), r.getLong(5))).toSeq
+        .groupBy(identity).view.mapValues(_.size).toMap
+      (cdf, rows)
+    }
+    val (cdf, plain) = feed("cdfplain", Seq("a", "b", "c"))
+    assert(plain == Map((2L, 20L, "b", 6L, "delete", 2L) -> 1,
+      (2L, 20L, "u", 6L, "insert", 2L) -> 1), plain.toString)
+    // The netting replicates through a generator, never a per-row array.
+    val plan = cdf.queryExecution.optimizedPlan
+    assert(plan.exists {
+      case g: org.apache.spark.sql.catalyst.plans.logical.Generate =>
+        g.generator.isInstanceOf[org.apache.spark.sql.catalyst.expressions.ReplicateRows]
+      case _ => false
+    }, plan.toString)
+    assert(!plan.exists(_.expressions.exists(_.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.expressions.Sequence]))), plan.toString)
+    val (_, helper) = feed("cdfhelper", Seq("__side", "__net", "__dup"))
+    assert(helper == plain, s"helper-named columns changed the feed: $helper")
+  }
+
+  test("both change feeds refuse a table with a column named like a change column") {
+    val t = freshTable("cdfres")
+    base.withColumnRenamed("s", "_change_type").writeTo(t)
+      .tableProperty("dml", "dv").create()                             // gen 1
+    spark.sql(s"DELETE FROM $t WHERE id < 10")                         // gen 2
+    val batch = intercept[IllegalArgumentException] {
+      graft.sources.GraftCatalogOps.changes(spark, t, root, "cdfres", 1L, 2L)
+    }
+    assert(batch.getMessage.contains("`_change_type` collides"), batch.getMessage)
+    val stream = intercept[Exception] {
+      val q = spark.readStream.table("gtest.`cdfres$changes`")
+        .writeStream.format("memory").queryName("cdfres_sink")
+        .option("checkpointLocation", tmpDir("cdfres_ckpt"))
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination(120000) finally q.stop()
+    }
+    val causes = Iterator.iterate(stream: Throwable)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(e => e.isInstanceOf[IllegalArgumentException] &&
+      e.getMessage.contains("`_change_type` collides")), stream.toString)
+  }
+
+  test("property: the batch change feed equals the streamed one (seeded)") {
+    // Random dml=dv histories of appends, DV deletes, delta updates and
+    // DV-rewinding RESTOREs (to an earlier generation with the same files —
+    // one that removes files cannot stream). changes(1, last) must equal, as
+    // a multiset of (row, version, change type), what an AvailableNow drain
+    // of `t$changes` emits after its snapshot batch.
+    import spark.implicits._
+    val conf = spark.sessionState.newHadoopConf()
+    for (seed <- Seq(11L, 12L, 13L)) {
+      val rnd = new scala.util.Random(seed)
+      val name = s"cdfsweep$seed"
+      val t = freshTable(name)
+      val dir = new Path(root, name)
+      var nextId = 0L
+      def rows(n: Int) = (0 until n).map { _ =>
+        nextId += 1; (nextId, nextId % 3, rnd.nextInt(100).toLong) }.toDF("id", "k", "v")
+      rows(40).writeTo(t).partitionedBy(col("k")).tableProperty("dml", "dv").create() // gen 1
+      val ckpt = tmpDir(s"${name}_ckpt")
+      val out = tmpDir(s"${name}_out")
+      def drain(): Unit = {
+        val q = spark.readStream.table(s"gtest.`$name$$changes`")
+          .writeStream.option("checkpointLocation", ckpt).format("parquet")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .start(out)
+        assert(q.awaitTermination(120000), s"seed $seed: drain timed out"); q.stop()
+      }
+      drain() // the snapshot batch
+      def files(g: Long) = graft.sources.GraftManifest.load(dir, g, conf).entries.toSet
+      val ops = scala.collection.mutable.ListBuffer.empty[String]
+      for (_ <- 0 until 6 + rnd.nextInt(5)) {
+        val cur = graft.sources.GraftManifest.currentGen(dir, conf)
+        val rewinds = (1L until cur).filter(g => files(g) == files(cur))
+        rnd.nextInt(4) match {
+          case 0 => rows(1 + rnd.nextInt(10)).writeTo(t).append(); ops += "append"
+          case 1 =>
+            val m = 2 + rnd.nextInt(4)
+            spark.sql(s"DELETE FROM $t WHERE id % $m = ${rnd.nextInt(m)}"); ops += s"delete%$m"
+          case 2 =>
+            spark.sql(s"UPDATE $t SET v = v + 1 WHERE k = ${rnd.nextInt(3)}"); ops += "update"
+          case _ if rewinds.nonEmpty =>
+            val g = rewinds(rnd.nextInt(rewinds.size))
+            graft.sources.GraftCatalogOps.restore(spark, root, name, g); ops += s"restore$g"
+          case _ => spark.sql(s"DELETE FROM $t WHERE v < 10"); ops += "delete<10"
+        }
+      }
+      drain()
+      val last = graft.sources.GraftManifest.currentGen(dir, conf)
+      def bag(df: org.apache.spark.sql.DataFrame) =
+        df.select("id", "k", "v", "_commit_version", "_change_type").collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))
+          .toSeq.groupBy(identity).view.mapValues(_.size).toMap
+      val streamed = bag(spark.read.parquet(out).where(col("_commit_version") > 1))
+      val batch = bag(graft.sources.GraftCatalogOps.changes(spark, t, root, name, 1L, last))
+      assert(batch == streamed, s"seed $seed (ops ${ops.mkString(",")}): batch feed " +
+        s"$batch differs from the streamed feed $streamed")
+      info(s"seed $seed: ${ops.mkString(",")} -> ${batch.values.sum} change rows")
+    }
   }
 
   test("crashed CAS writer: a body-less claim never serves reads, never wedges, reaps stale") {
