@@ -3089,7 +3089,7 @@ object StarQueries {
 
     "q_catalog_cdf" -> { (s, d) =>
       cdfFixture(s, d)
-      graft.sources.GraftCatalogOps.changes(s, "graft.cdfq",
+      graft.sources.GraftCatalogOps.changes(s,
           Tables.scratchDir(s, "catalog", d), "cdfq", 1L, 4L)
         .groupBy(col("_commit_version").as("gen"), col("_change_type").as("change"))
         .agg(count(lit(1)).as("n"), sum(col("cents")).as("cents"))
@@ -3122,7 +3122,7 @@ object StarQueries {
           .writeTo("graft.cdcr_s").tableProperty("dml", "dv")
           .tableProperty("fixture", marker).create()
       }
-      val feed = graft.sources.GraftCatalogOps.changes(s, "graft.cdfq",
+      val feed = graft.sources.GraftCatalogOps.changes(s,
           Tables.scratchDir(s, "catalog", d), "cdfq", 1L, 4L)
       // ALL pending commits net-effected into ONE MERGE (the Databricks
       // APPLY CHANGES `sequence_by` posture): per key, the LATEST commit

@@ -5030,9 +5030,10 @@ object GraftDV {
  * incrementally merged), so a pre-feature DV vintage upgrades to exact
  * aggregates on its next delete.
  *
- * Scale: the compute is ONE executor job, one task per touched file, each
- * reading only its DV positions — cost proportional to the delete, the same
- * order as writing the DV itself.
+ * Scale: the compute is ONE executor job over only the touched files, packed
+ * into at most `defaultParallelism` tasks; each file is decoded whole and
+ * filtered to its DV positions, so the cost is one read of every touched
+ * file — the order of the DML job that wrote the DV.
  */
 object GraftDVAggs {
   import java.net.{URLDecoder, URLEncoder}
@@ -5062,26 +5063,28 @@ object GraftDVAggs {
    * per-column deleted non-null counts, per-integral-column deleted sums.
    * `byFile` maps each rel to its FULL DV position set.
    *
-   * Each file is read once, in its own task, through the change feed's
-   * positional slice reader (no DV applied, exactly its DV positions kept)
-   * and aggregated there; columns are keyed by their physical names, as the
-   * file stats are. A column a file lacks (ADD COLUMN drift) reads as null
-   * there, which is harmless — the metadata path only consults a column's DV
-   * aggregates AFTER the file's own stats prove the column exists in that
-   * file. One job over only the touched files — the same order of work as
-   * writing the DVs themselves.
+   * Each file is read once through the catalog's parquet decode under `m`
+   * (column mapping, partition specs) with its true `_pos` ordinals and no
+   * DV, keeps exactly its DV positions, and is aggregated inside its task;
+   * columns are keyed by their physical names, as the file stats are. No
+   * column is synthesized by name, but that decode fills `_gen`/`_file`/`_pos`
+   * as metadata: a table with a data column of one of those names records
+   * nothing for its touched files (absence is the scan fallback). A column a
+   * file lacks (ADD COLUMN drift) reads as null there, which is harmless —
+   * the metadata path only consults a column's DV aggregates AFTER the
+   * file's own stats prove the column exists in that file.
    */
   def computeAll(spark: org.apache.spark.sql.SparkSession, tableDir: Path,
                  m: GraftManifest, byFile: Seq[(String, Array[Long])]): Map[String, String] = {
     val zeros = byFile.collect { case (rel, ps) if ps.isEmpty => rel -> encode(0L, Nil) }.toMap
+    val cols = m.dataSchema.fields
+    if (cols.exists(f => Set("_gen", "_file", "_pos")(f.name))) return zeros
     val conf = spark.sessionState.newHadoopConf()
     val partOf = m.entries.map(_.swap).toMap
-    val slices = byFile.collect { case (rel, ps) if ps.nonEmpty =>
-      GraftChangeSlice(GraftChangeSlice.fileSlice(tableDir, m, partOf(rel), rel, conf)
-        .copy(dvRel = ""), GraftChangeSlice.Delete, m.gen, ps)
+    val files = byFile.collect { case (rel, ps) if ps.nonEmpty =>
+      GraftChangeSlice.fileSlice(tableDir, m, partOf(rel), rel, conf).copy(dvRel = "") -> ps.sorted
     }
-    if (slices.isEmpty) return zeros
-    val cols = m.dataSchema.fields
+    if (files.isEmpty) return zeros
     val names = cols.map(f => m.physicalName(f.name))
     // 0 = not summed; 1/2/3 = int/long/short, summed as wrapping longs.
     val kind = cols.map(_.dataType match {
@@ -5090,34 +5093,41 @@ object GraftDVAggs {
       case ShortType => 3
       case _ => 0
     })
-    val reader = GraftChangeSlice.readerFactory(tableDir.toString, m, m.dataSchema)
-    val computed = spark.sparkContext.parallelize(slices, slices.size).mapPartitions(_.flatMap { slice =>
-      val it = reader.createReader(slice)
-      var n = 0L
-      val nonNull = new Array[Long](cols.length)
-      val sums = new Array[Long](cols.length)
-      try while (it.next()) {
-        val row = it.get()
-        n += 1
-        var i = 0
-        while (i < cols.length) {
-          if (!row.isNullAt(i)) {
-            nonNull(i) += 1
-            sums(i) += (kind(i) match {
-              case 1 => row.getInt(i).toLong
-              case 2 => row.getLong(i)
-              case 3 => row.getShort(i).toLong
-              case _ => 0L
-            })
+    val posIdx = cols.length
+    val reader = GraftParquetRead.readerFactory(tableDir.toString, m,
+      StructType(cols :+ org.apache.spark.sql.types.StructField("_pos", LongType, false)),
+      allowColumnar = false)
+    val tasks = math.min(files.size, spark.sparkContext.defaultParallelism)
+    val computed = spark.sparkContext.parallelize(files, tasks).mapPartitions(_.flatMap {
+      case (file, keep) =>
+        val it = reader.createReader(file)
+        var n = 0L
+        val nonNull = new Array[Long](cols.length)
+        val sums = new Array[Long](cols.length)
+        try while (it.next()) {
+          val row = it.get()
+          if (GraftDV.contains(keep, row.getLong(posIdx))) {
+            n += 1
+            var i = 0
+            while (i < cols.length) {
+              if (!row.isNullAt(i)) {
+                nonNull(i) += 1
+                sums(i) += (kind(i) match {
+                  case 1 => row.getInt(i).toLong
+                  case 2 => row.getLong(i)
+                  case 3 => row.getShort(i).toLong
+                  case _ => 0L
+                })
+              }
+              i += 1
+            }
           }
-          i += 1
-        }
-      } finally it.close()
-      // A file whose positions matched no rows is OMITTED (inconsistent
-      // input): absence degrades it to scan-fallback, never a wrong subtraction.
-      if (n == 0) None
-      else Some(slice.file.rel -> encode(n, cols.indices.map(i =>
-        (names(i), nonNull(i), if (kind(i) == 0) None else Some(sums(i))))))
+        } finally it.close()
+        // A file whose positions matched no rows is OMITTED (inconsistent
+        // input): absence degrades it to scan-fallback, never a wrong subtraction.
+        if (n == 0) None
+        else Some(file.rel -> encode(n, cols.indices.map(i =>
+          (names(i), nonNull(i), if (kind(i) == 0) None else Some(sums(i))))))
     }).collect()
     zeros ++ computed
   }
@@ -5935,8 +5945,8 @@ object GraftCatalogOps {
    * [[GraftChangeSlice.plan]] plans for it, the same slices the `t$changes`
    * stream reads, and the feed reads them in ONE batch scan through the same
    * slice reader: only the touched files (and the DV'd ones) are read, never
-   * the table, and manifest/DV work is driver-side metadata. `tableRef` is
-   * not consulted; the table is read from its files under `root`.
+   * the table, and manifest/DV work is driver-side metadata. The table is
+   * read from its files under `root`, never resolved by name.
    *
    * A generation with slices on BOTH sides (a delta UPDATE, or a
    * copy-on-write rewrite or OPTIMIZE, which re-copies unchanged rows
@@ -5952,7 +5962,7 @@ object GraftCatalogOps {
    * ≥ fromGen to still exist — a VACUUM past that horizon fails the feed
    * loudly.
    */
-  def changes(spark: SparkSession, tableRef: String, root: String, table: String,
+  def changes(spark: SparkSession, root: String, table: String,
               fromGen: Long, toGen: Long): org.apache.spark.sql.DataFrame = {
     require(fromGen >= 0 && toGen > fromGen,
       s"need 0 <= fromGen < toGen, got ($fromGen, $toGen]")
@@ -6418,7 +6428,7 @@ object GraftCatalogOps {
     // sized, tiny by construction) so the change-feed scan runs once, not
     // per reference. Released before returning.
     val allAggs = baseAggs ++ mmAggs ++ hllAggs
-    val delta0 = changes(spark, s"$catalog.`$source`", root, source, from, to)
+    val delta0 = changes(spark, root, source, from, to)
       .groupBy(keys.map(col): _*)
       .agg(allAggs.head, allAggs.tail: _*)
     val delta = if (hasMinMax) delta0.persist() else delta0

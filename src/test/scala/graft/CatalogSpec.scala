@@ -888,6 +888,30 @@ class CatalogSpec extends GraftSuite {
     }
   }
 
+  test("DV aggregates keep data columns named like the change-feed columns") {
+    // The aggregates read the deleted rows' OWN values: no column of the
+    // change feed (`_change_type`, `_commit_version`) may replace them.
+    val t = freshTable("dvsumcdc")
+    base.select(col("id"), col("pk"), (col("id") * 3).as("_commit_version"),
+        when(col("id") % 5 === 0, lit(null)).otherwise(col("s")).as("_change_type"))
+      .writeTo(t).partitionedBy(col("pk"))
+      .tableProperty("dml", "dv").tableProperty("dvaggs", "true").create()
+    spark.sql(s"DELETE FROM $t WHERE id % 7 = 3")
+    val live = (0L until 300L).filterNot(_ % 7 == 3)
+    val q = spark.table(t).agg(count(lit(1)), sum(col("_commit_version")),
+      count(col("_change_type")))
+    val plan = q.queryExecution.executedPlan.toString
+    assert(plan.contains("LocalTableScan") && !plan.contains("BatchScan"),
+      s"COUNT/SUM under a DV must stay metadata-only:\n$plan")
+    val r = q.collect()(0)
+    assert((r.getLong(0), r.getLong(1), r.getLong(2)) ==
+      (live.size.toLong, live.map(_ * 3).sum, live.count(_ % 5 != 0).toLong))
+    // And the metadata answer equals a real scan of the same columns.
+    val scan = spark.table(t).where(col("_change_type").isNull || col("id") >= 0)
+      .agg(sum(col("_commit_version")), count(col("_change_type"))).collect()(0)
+    assert((scan.getLong(0), scan.getLong(1)) == (r.getLong(1), r.getLong(2)))
+  }
+
   test("deletion-vector codec roundtrip and _pos metadata column") {
     // Varint-delta codec: sparse, dense, dup, and boundary positions.
     val cases = Seq(Array.empty[Long], Array(0L), Array(0L, 1L, 2L),
@@ -1368,7 +1392,7 @@ class CatalogSpec extends GraftSuite {
       .collect().map(r => r.getString(0) -> r.getString(1)).toSeq
     assert(pair == Seq("delete" -> "v7", "insert" -> "upd"), pair.toString)
     // The stream's delta window must agree with the batch feed over (1, 3].
-    val batch = graft.sources.GraftCatalogOps.changes(spark, t, root, "scdf", 1L, 3L)
+    val batch = graft.sources.GraftCatalogOps.changes(spark, root, "scdf", 1L, 3L)
       .groupBy(col("_commit_version"), col("_change_type"))
       .agg(count(lit(1)).as("n")).collect()
       .map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
@@ -2076,7 +2100,7 @@ class CatalogSpec extends GraftSuite {
     assert(m4.entries == m1.entries && m4.fileDVs.isEmpty)
     // The batch change feed represents the rewind exactly: gen 2's 50 rows
     // leave (removed files), the 30 DV-deleted rows come back (DV rewind).
-    val cdf = graft.sources.GraftCatalogOps.changes(spark, t, root, "rst", 3L, 4L)
+    val cdf = graft.sources.GraftCatalogOps.changes(spark, root, "rst", 3L, 4L)
     val prof = cdf.groupBy(col("_change_type")).agg(count(lit(1)).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(prof == Map("delete" -> 50L, "insert" -> 30L), prof.toString)
@@ -2094,7 +2118,7 @@ class CatalogSpec extends GraftSuite {
     spark.sql(s"DELETE FROM $t WHERE id % 10 = 3 AND id < 1000")     // gen 3 (DVs)
     spark.sql(s"UPDATE $t SET s = 'upd' WHERE id = 7")               // gen 4 (delta)
     graft.sources.GraftCatalogOps.optimize(spark, t, root, "cdf")    // gen 5 (rewrite)
-    val cdf = graft.sources.GraftCatalogOps.changes(spark, t, root, "cdf", 1L, 5L)
+    val cdf = graft.sources.GraftCatalogOps.changes(spark, root, "cdf", 1L, 5L)
     val byGen = cdf.groupBy(col("_commit_version"), col("_change_type"))
       .agg(count(lit(1)).as("n")).collect()
       .map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
@@ -2110,10 +2134,10 @@ class CatalogSpec extends GraftSuite {
     assert(upd == Seq("delete" -> "v7", "insert" -> "upd"), upd.toString)
     // A feed window covering only the rewrite is empty, and a window past the
     // vacuum horizon fails loudly rather than under-reporting.
-    assert(graft.sources.GraftCatalogOps.changes(spark, t, root, "cdf", 4L, 5L).isEmpty)
+    assert(graft.sources.GraftCatalogOps.changes(spark, root, "cdf", 4L, 5L).isEmpty)
     graft.sources.GraftCatalogOps.vacuum(spark, root, "cdf", keepGens = 1, uncommittedGraceMs = 0)
     intercept[IllegalArgumentException] {
-      graft.sources.GraftCatalogOps.changes(spark, t, root, "cdf", 1L, 5L)
+      graft.sources.GraftCatalogOps.changes(spark, root, "cdf", 1L, 5L)
     }
   }
 
@@ -2128,7 +2152,7 @@ class CatalogSpec extends GraftSuite {
     Seq((1L, "a"), (1L, "a"), (1L, "a"), (2L, "b"), (2L, "b"))
       .toDF("id", "s").coalesce(1).writeTo(t).create()               // gen 1
     spark.sql(s"UPDATE $t SET s = 'u' WHERE id = 2")                 // gen 2
-    val cdf = graft.sources.GraftCatalogOps.changes(spark, t, root, "cdfdup", 1L, 2L)
+    val cdf = graft.sources.GraftCatalogOps.changes(spark, root, "cdfdup", 1L, 2L)
     val rows = cdf.select(col("_change_type"), col("id"), col("s")).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
       .groupBy(identity).view.mapValues(_.size).toMap
@@ -2140,7 +2164,7 @@ class CatalogSpec extends GraftSuite {
     (Seq.fill(10000)((9L, "same")) :+ ((1L, "keep")))
       .toDF("id", "s").coalesce(1).writeTo(big).create()            // gen 1
     spark.sql(s"DELETE FROM $big WHERE id = 9")                      // gen 2
-    val dropped = graft.sources.GraftCatalogOps.changes(spark, big, root, "cdfdupbig", 1L, 2L)
+    val dropped = graft.sources.GraftCatalogOps.changes(spark, root, "cdfdupbig", 1L, 2L)
       .select(col("_change_type"), col("id"), col("s")).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSeq
       .groupBy(identity).view.mapValues(_.size).toMap
@@ -2157,7 +2181,7 @@ class CatalogSpec extends GraftSuite {
       Seq((1L, 10L, "a", 5L), (1L, 10L, "a", 5L), (2L, 20L, "b", 6L), (3L, 30L, "c", 7L))
         .toDF("id" +: cols: _*).coalesce(1).writeTo(t).create()      // gen 1
       spark.sql(s"UPDATE $t SET `${cols(1)}` = 'u' WHERE id = 2")      // gen 2 (rewrite)
-      val cdf = graft.sources.GraftCatalogOps.changes(spark, t, root, name, 1L, 2L)
+      val cdf = graft.sources.GraftCatalogOps.changes(spark, root, name, 1L, 2L)
       val rows = cdf.collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2),
         r.getLong(3), r.getString(4), r.getLong(5))).toSeq
         .groupBy(identity).view.mapValues(_.size).toMap
@@ -2185,7 +2209,7 @@ class CatalogSpec extends GraftSuite {
       .tableProperty("dml", "dv").create()                             // gen 1
     spark.sql(s"DELETE FROM $t WHERE id < 10")                         // gen 2
     val batch = intercept[IllegalArgumentException] {
-      graft.sources.GraftCatalogOps.changes(spark, t, root, "cdfres", 1L, 2L)
+      graft.sources.GraftCatalogOps.changes(spark, root, "cdfres", 1L, 2L)
     }
     assert(batch.getMessage.contains("`_change_type` collides"), batch.getMessage)
     val stream = intercept[Exception] {
@@ -2253,7 +2277,7 @@ class CatalogSpec extends GraftSuite {
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))
           .toSeq.groupBy(identity).view.mapValues(_.size).toMap
       val streamed = bag(spark.read.parquet(out).where(col("_commit_version") > 1))
-      val batch = bag(graft.sources.GraftCatalogOps.changes(spark, t, root, name, 1L, last))
+      val batch = bag(graft.sources.GraftCatalogOps.changes(spark, root, name, 1L, last))
       assert(batch == streamed, s"seed $seed (ops ${ops.mkString(",")}): batch feed " +
         s"$batch differs from the streamed feed $streamed")
       info(s"seed $seed: ${ops.mkString(",")} -> ${batch.values.sum} change rows")

@@ -178,8 +178,8 @@ class PartitionEvolutionSpec extends GraftSuite {
     assert(manifest("cdfmig").specUniform && manifest("cdfmig").gen === 4L)
     // The rewrite re-copies every row, pk-spec files included: it nets to
     // nothing, and the window from the create holds only the append.
-    assert(graft.sources.GraftCatalogOps.changes(spark, t, root, "cdfmig", 3L, 4L).isEmpty)
-    val feed = graft.sources.GraftCatalogOps.changes(spark, t, root, "cdfmig", 1L, 4L)
+    assert(graft.sources.GraftCatalogOps.changes(spark, root, "cdfmig", 3L, 4L).isEmpty)
+    val feed = graft.sources.GraftCatalogOps.changes(spark, root, "cdfmig", 1L, 4L)
       .select("id", "pk", "grp", "_change_type", "_commit_version").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3), r.getLong(4)))
       .sortBy(_._1)

@@ -211,7 +211,7 @@ class PolicySpec extends GraftSuite {
     // A DV delete under the exempt role creates delete events for BOTH
     // visible (d0) and invisible (d1) rows.
     asRole(Some("admin")) { spark.sql(s"DELETE FROM $t WHERE id < 4") }
-    val feed = graft.sources.GraftCatalogOps.changes(spark, t,
+    val feed = graft.sources.GraftCatalogOps.changes(spark,
       spark.conf.get("spark.sql.catalog.gpol.root"), "cdfpol", 0L, 2L)
     val rows = feed.collect()
     // Inserts: only the 20 visible rows; deletes: only ids 0 and 2 (d0) —
@@ -223,7 +223,7 @@ class PolicySpec extends GraftSuite {
     assert(rows.forall(_.getAs[String]("ssn") == "***"), "feed must mask")
     // The exempt role sees the raw feed: 40 inserts, 4 deletes, raw ssn.
     asRole(Some("dba")) {
-      val raw = graft.sources.GraftCatalogOps.changes(spark, t,
+      val raw = graft.sources.GraftCatalogOps.changes(spark,
         spark.conf.get("spark.sql.catalog.gpol.root"), "cdfpol", 0L, 2L).collect()
       assert(raw.count(_.getAs[String]("_change_type") == "insert") === 40)
       assert(raw.count(_.getAs[String]("_change_type") == "delete") === 4)
