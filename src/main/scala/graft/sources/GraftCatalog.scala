@@ -3397,7 +3397,11 @@ object GraftParquetRead {
           : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
         val slice = p.asInstanceOf[GraftFileSlice]
         val spec = specOf(slice)
-        val raw = spec.columnarReaderFn(partitionedFile(slice, spec))
+        val pf = partitionedFile(slice, spec)
+        // Named for `input_file_name()` until the reader closes, as Spark's
+        // file readers name each file they open.
+        GraftBridge.setInputFile(pf.urlEncodedPath, pf.start, pf.length)
+        val raw = spec.columnarReaderFn(pf)
           .asInstanceOf[Iterator[Any]]
           .map(_.asInstanceOf[org.apache.spark.sql.vectorized.ColumnarBatch])
         // Column realign without materialization: a reordered view over the
@@ -3409,7 +3413,7 @@ object GraftParquetRead {
         new PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
           override def next(): Boolean = it.hasNext
           override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = it.next()
-          override def close(): Unit = ()
+          override def close(): Unit = GraftBridge.unsetInputFile()
         }
       }
 
@@ -3417,6 +3421,7 @@ object GraftParquetRead {
         val slice = p.asInstanceOf[GraftFileSlice]
         val spec = specOf(slice)
         val pf = partitionedFile(slice, spec)
+        GraftBridge.setInputFile(pf.urlEncodedPath, pf.start, pf.length)
         // The reader function yields plain rows OR ColumnarBatches (vectorized
         // path) behind an InternalRow-typed iterator — the same duality
         // FileScanRDD handles; unwrap batches to their row views here.
@@ -3473,7 +3478,7 @@ object GraftParquetRead {
         new PartitionReader[InternalRow] {
           override def next(): Boolean = policed.hasNext
           override def get(): InternalRow = policed.next()
-          override def close(): Unit = ()
+          override def close(): Unit = GraftBridge.unsetInputFile()
         }
       }
     }

@@ -2,9 +2,9 @@ package graft.streaming
 
 import graft.SerializableHadoopConf
 import graft.plans.UniqueKeyRowNumberRule
-import graft.sources.{GraftCatalogOps, GraftCommitProtocol, GraftFileRecord, GraftFileSlice,
-  GraftFilesMessage, GraftLocalFileSystem, GraftManifest, GraftParquetRead, GraftRowWriter,
-  GraftTable}
+import graft.sources.{GraftCatalogOps, GraftCheckpointFileManager, GraftCommitProtocol,
+  GraftFileRecord, GraftFileSlice, GraftFilesMessage, GraftLocalFileSystem, GraftManifest,
+  GraftParquetRead, GraftRowWriter, GraftTable}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, Row, SparkSession}
@@ -33,7 +33,11 @@ import org.apache.spark.sql.types.{IntegerType, StructType}
  *
  * Scale posture: dedup state is bounded via `dropDuplicatesWithinWatermark` when a
  * watermark column is present; at cluster scale you would additionally configure the
- * RocksDB state store provider (config-only, no code change). The enrichment lookup
+ * RocksDB state store provider (config-only, no code change). Checkpoint and
+ * state-store files go through [[GraftCheckpointFileManager]] (installed by
+ * [[upsertSink]]): on a local checkpoint each micro-batch's offsets, commit,
+ * source-log and per-partition state files are written without a forked
+ * process, and on HDFS or S3 Spark's own manager is used. The enrichment lookup
  * is a broadcastable static table — the deterministic stand-in for the reference's
  * per-record HTTP call (consume_items.py:66-80), which would not survive any scale.
  */
@@ -344,15 +348,24 @@ object StreamingPipeline {
   /** A9 as a streaming sink: foreachBatch keyed upsert, exactly once per
     * batch. Batch `b` of query `q` commits the ledger mark `q:b` — the
     * catalog streaming write's high-water mark, one per query — so a batch
-    * Spark re-runs after a restart publishes nothing. */
+    * Spark re-runs after a restart publishes nothing.
+    *
+    * Unless the session already names a checkpoint file manager, this makes
+    * [[GraftCheckpointFileManager]] the session's, so the query's offsets,
+    * commits, source log and state-store files are written without forks on
+    * a local checkpoint. The writer is returned before the caller starts it,
+    * so the setting cannot be scoped to the query: the session keeps graft's
+    * manager afterwards, for its later queries too. */
   def upsertSink(stream: DataFrame, path: String, keys: Seq[String],
-                 ordering: Seq[Column]): DataStreamWriter[Row] =
+                 ordering: Seq[Column]): DataStreamWriter[Row] = {
+    GraftCheckpointFileManager.installIfUnset(stream.sparkSession)
     stream.writeStream.outputMode("update")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val queryId = batch.sparkSession.sparkContext
           .getLocalProperty(StreamExecution.QUERY_ID_KEY)
         merge(batch, path, keys, ordering, Option(queryId).map(_ -> batchId))
       }
+  }
 
   /** B10: watermarked tumbling-window aggregation over an event stream. */
   def windowedCounts(events: DataFrame, windowLen: String = "1 hour",

@@ -20,6 +20,16 @@ object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Name the file a task's reader has open, for `input_file_name()` and
+    * its block start/length twins — what Spark's own file readers do at each
+    * file (`InputFileBlockHolder` is `private[spark]`). `path` is URL-encoded,
+    * as `PartitionedFile.urlEncodedPath`. */
+  def setInputFile(path: String, start: Long, length: Long): Unit =
+    org.apache.spark.rdd.InputFileBlockHolder.set(path, start, length)
+
+  /** Clear [[setInputFile]] when the reader closes. */
+  def unsetInputFile(): Unit = org.apache.spark.rdd.InputFileBlockHolder.unset()
+
   /** Wrap a custom logical node as a DataFrame (the `Dataset.ofRows` every
     * extension library with whole-operator plans needs; `private[sql]`). */
   def ofRows(spark: SparkSession,

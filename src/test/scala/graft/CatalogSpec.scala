@@ -935,6 +935,24 @@ class CatalogSpec extends GraftSuite {
     }
   }
 
+  test("input_file_name() names each row's file on catalog scans, columnar or under a DV") {
+    import spark.implicits._
+    val t = freshTable("infile")
+    (0L until 200L).toDF("id").repartition(8).writeTo(t).tableProperty("dml", "dv").create()
+    def check(label: String): Unit = {
+      val files = spark.table(t).select(col("_file")).distinct().count()
+      assert(files === 8L, label)
+      assert(spark.table(t).select(input_file_name()).distinct().count() === files, label)
+      spark.table(t).select(input_file_name(), col("_file")).collect().foreach { r =>
+        assert(r.getString(0).endsWith(r.getString(1)), s"$label: $r")
+      }
+    }
+    check("columnar scan")
+    // A deletion vector turns the whole scan row-based.
+    spark.sql(s"DELETE FROM $t WHERE id % 50 = 0")
+    check("row scan under a DV")
+  }
+
   test("mixed finite+NaN/Inf files publish no bounds and are never mis-pruned") {
     import spark.implicits._
     val t = freshTable("nonfinite")

@@ -1,14 +1,20 @@
 #!/usr/bin/env python3
-"""Count the `chmod` processes a command forks, grouped by path kind (stdlib only).
+"""Count the processes Hadoop forks under a command, by command and path kind (stdlib only).
 
 Usage:
 
     python3 tools/count_forks.py [--log FILE] [--top N] -- <command> [args...]
 
-Without libhadoop, Hadoop's local filesystem sets the permission of every
-file and directory it creates by forking `chmod`. This tool runs the command
-with a logging `chmod` shim first on PATH (the shim records its arguments and
-execs the real `chmod`), then prints how many forks touched each kind of path:
+Without libhadoop, Hadoop's local filesystem shells out for work the native
+library would do in-process: `chmod` to set the permission of every file and
+directory it creates, `readlink` to resolve symlinks on the FileContext path
+that Spark's default streaming checkpoint manager takes (8 per checkpoint
+file), and `stat` for a symlink-aware file status (Hadoop's `Stat`; no graft
+or benchmark path has been seen to reach it). This tool runs the command
+with a logging shim for each of `chmod`, `readlink` and `stat` first on PATH
+(a shim records its command and arguments and execs the real one), then
+prints how many forks each command made, per kind of path (the command's
+last argument):
 
     store data        files and dirs under a table's `gen-*` or `ep-*` dirs
                       (parquet files, their `.crc`, partition dirs, DV files)
@@ -16,12 +22,13 @@ execs the real `chmod`), then prints how many forks touched each kind of path:
                       `_CURRENT.tmp-*`, tag refs, leases and their `.crc`
     checkpoint/state  Spark's streaming checkpoint: offsets, commits, sources
                       log, state-store deltas and snapshots, metadata
-    other             anything else
+    other             anything else (including the forks of the command's
+                      own scripts, which count too)
 
-followed by the N directory shapes that forked most (digits read as N and
-8-hex ids as *, so every generation's dir counts as one shape). The tool
-exits with the command's status. Only PATH and the variable naming the log
-differ in the command's environment.
+followed by the N (command, directory shape) pairs that forked most (digits
+read as N and 8-hex ids as *, so every generation's dir counts as one
+shape). The tool exits with the command's status. Only PATH and the variable
+naming the log differ in the command's environment.
 
 Counting a perfbench run. Run the workload once without the tool first, so
 the harness build (sbt) is fresh and its own forks are not counted; then
@@ -32,8 +39,8 @@ the harness build (sbt) is fresh and its own forks are not counted; then
         python3 perfbench/run.py --workload queries --seed 7 --seconds 15
 
 The counts cover the whole run, warm-up included. For per-batch figures,
-divide the store-data forks by the batches the run committed (a `--trace 1`
-run reports `streaming.batches` for its timed query).
+divide a kind's forks by the batches the run committed (a `--trace 1` run
+reports `streaming.batches` for its timed query).
 """
 import argparse
 import collections
@@ -46,6 +53,7 @@ import sys
 import tempfile
 
 KINDS = ("store data", "store metadata", "checkpoint/state", "other")
+COMMANDS = ("chmod", "readlink", "stat")
 
 _META = re.compile(r"^(\.?manifest-.*|CURRENT|_CURRENT\.tmp-.*|_?ref-.*|.*\.lease|_leases)$")
 _CKPT_DIRS = {"offsets", "commits", "sources", "state"}
@@ -77,52 +85,62 @@ def shape(d):
 
 
 def parse(log_lines):
-    """(path, kind) per logged fork; the path is chmod's last argument."""
+    """(command, path, kind) per logged fork; the path is the command's last argument."""
     out = []
     for line in log_lines:
-        args = line.split()
-        if args:
-            out.append((args[-1], kind(args[-1])))
+        cmd, _, args = line.rstrip("\n").partition(" ")
+        args = args.split()
+        if cmd and args:
+            out.append((cmd, args[-1], kind(args[-1])))
     return out
 
 
 def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("--log", help="keep the raw fork log here (one fork per line)")
+    ap.add_argument("--log", help="keep the raw fork log here (one fork per line: command args)")
     ap.add_argument("--top", type=int, default=8, help="directories to list (default 8)")
     ap.add_argument("command", nargs=argparse.REMAINDER)
     a = ap.parse_args()
     cmd = a.command[1:] if a.command[:1] == ["--"] else a.command
     if not cmd:
         ap.error("no command given")
-    real = shutil.which("chmod")
-    if real is None:
-        sys.exit("count_forks: no chmod on PATH")
     shim_dir = tempfile.mkdtemp(prefix="count_forks_")
     log = a.log or os.path.join(shim_dir, "forks.log")
     open(log, "w").close()
-    shim = os.path.join(shim_dir, "chmod")
-    with open(shim, "w") as f:
-        f.write('#!/bin/sh\nprintf \'%s\\n\' "$*" >> "$GRAFT_CHMOD_LOG"\n'
-                f'exec {real} "$@"\n')
-    os.chmod(shim, stat.S_IRWXU)
+    shimmed = []
+    for name in COMMANDS:
+        real = shutil.which(name)
+        if real is None:
+            continue
+        shim = os.path.join(shim_dir, name)
+        with open(shim, "w") as f:
+            f.write(f'#!/bin/sh\nprintf \'{name} %s\\n\' "$*" >> "$GRAFT_FORK_LOG"\n'
+                    f'exec {real} "$@"\n')
+        os.chmod(shim, stat.S_IRWXU)
+        shimmed.append(name)
+    if not shimmed:
+        sys.exit(f"count_forks: none of {', '.join(COMMANDS)} on PATH")
     env = dict(os.environ, PATH=shim_dir + os.pathsep + os.environ.get("PATH", ""),
-               GRAFT_CHMOD_LOG=os.path.abspath(log))
+               GRAFT_FORK_LOG=os.path.abspath(log))
     try:
         rc = subprocess.call(cmd, env=env)
         with open(log) as f:
             forks = parse(f)
     finally:
         shutil.rmtree(shim_dir, ignore_errors=True)
-    by_kind = collections.Counter(k for _, k in forks)
-    by_dir = collections.Counter((k, shape(os.path.dirname(p))) for p, k in forks)
-    print(f"chmod forks: {len(forks)}")
+    by_cmd_kind = collections.Counter((c, k) for c, _, k in forks)
+    by_dir = collections.Counter((c, k, shape(os.path.dirname(p))) for c, p, k in forks)
+    print(f"forks: {len(forks)} ({', '.join(shimmed)} shimmed)")
+    print(f"  {'':<17} " + " ".join(f"{c:>9}" for c in shimmed) + f" {'total':>9}")
     for k in KINDS:
-        print(f"  {k:<17} {by_kind.get(k, 0)}")
+        row = [by_cmd_kind.get((c, k), 0) for c in shimmed]
+        print(f"  {k:<17} " + " ".join(f"{n:>9}" for n in row) + f" {sum(row):>9}")
+    totals = [sum(by_cmd_kind.get((c, k), 0) for k in KINDS) for c in shimmed]
+    print(f"  {'total':<17} " + " ".join(f"{n:>9}" for n in totals) + f" {len(forks):>9}")
     if forks and a.top > 0:
         print("top directories:")
-        for (k, d), n in by_dir.most_common(a.top):
-            print(f"  {n:>6}  {k:<17} {d}")
+        for (c, k, d), n in by_dir.most_common(a.top):
+            print(f"  {n:>6}  {c:<8} {k:<17} {d}")
     sys.exit(rc)
 
 
